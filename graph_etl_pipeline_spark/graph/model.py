@@ -22,10 +22,29 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-# Deferred cache hygiene for reachable() (ADVICE r12 #1): the previous
-# traversal's persisted frames, dropped when the next traversal starts —
-# bounded retention without materialization jobs in the timed path.
+# Deferred cache hygiene for reachable(): the previous traversal's
+# persisted frames, dropped when the next traversal starts — bounded
+# retention without materialization jobs in the timed path.
 _RETAINED_TRAVERSAL_FRAMES: list = []
+
+# connected_components() runs at most this many hash-min rounds before it
+# contracts the graph onto its labels and hands it to star contraction.
+HASH_MIN_ROUNDS = 3
+# Round budget of star contraction (O(log² n) rounds worst case; a
+# 1024-node chain needs ~12). Running out raises instead of returning
+# intermediate labels.
+STAR_MAX_ROUNDS = 30
+
+
+def edge_endpoints(edges: DataFrame) -> DataFrame:
+    """(uid) — the distinct endpoints of an (src_uid, dst_uid) edge frame:
+    the vertex set of a graph that is defined by its edges alone (the
+    pair graphs the dedup and entity-resolution closures run on)."""
+    return (
+        edges.select(F.col("src_uid").alias("uid"))
+        .unionByName(edges.select(F.col("dst_uid").alias("uid")))
+        .distinct()
+    )
 
 
 @dataclass
@@ -81,63 +100,41 @@ class PropertyGraph:
         rel_types: tuple[str, ...] | None = None,
         direction: str = "out",
         max_depth: int = 3,
-        checkpoint: bool = True,
     ) -> DataFrame:
         """Bounded variable-length traversal (J6 — reference schema.cql:122
         AVV HAS_PARENT chains, Schema_Doku.pdf §6 NEXT_CHECK chains;
         hierarchies in the reference are ≤3 deep).
 
         roots: (uid, root) seed pairs. Returns every (uid, root) reached
-        within max_depth hops, roots included. Each iteration is one
-        distributed join, and the loop exits at the graph's true diameter
-        instead of always paying max_depth joins.
+        within max_depth hops, roots included. Each level is one
+        distributed join.
 
-        Per-iteration fixed-cost discipline (VERDICT r11 #5 — at toy
-        scale the traversal's wall-clock is driver job count, not data):
-
-        * SHALLOW bounds (max_depth ≤ 4, every reference hierarchy) pay
-          ZERO build-phase jobs (r18; was one count() per non-final
-          level in r17, max_depth per level before that): every frontier
-          is persisted LAZILY and the whole traversal folds into the
-          caller's one consumption job — persist() caches partitions the
-          first time that job computes them, so the next hop and the
-          final union read blocks, and a frontier that empties early
-          leaves only empty-input stages where the count()-based early
-          exit used to buy a driver round-trip per level. Lineage grows
-          only max_depth levels deep, well inside Catalyst's comfort
-          zone.
-        * DEEP bounds keep eager localCheckpoint + isEmpty: there,
-          lineage truncation is what keeps plan analysis O(1) per round
-          (SURVEY §7 risk list), worth the extra job per level.
+        The traversal runs ZERO build-phase jobs: every non-final
+        frontier is persisted LAZILY and the whole traversal folds into
+        the caller's one consumption job — persist() caches partitions
+        the first time that job computes them, so the next hop and the
+        final union read blocks, and a frontier that empties early leaves
+        only empty-input stages. Lineage grows one join per level, so the
+        bound is meant to stay shallow (every caller passes 3).
 
         The filtered/typed edge set is resolved once before the loop so
         every level joins the same frame (one cache entry at scale
         instead of max_depth re-scans of the union view).
 
-        Cache hygiene (ADVICE r12 #1): the shallow path's persisted
-        frames (edge set + per-level frontiers) are retained in a
-        module-level slot and UNPERSISTED at the start of the NEXT
-        traversal — bounded retention (at most ONE traversal's frames,
-        regardless of how many distinct root sets a session runs) with
-        ZERO extra jobs in the timed path: the returned union stays
-        backed by the cached frontiers until the caller has consumed it.
-        An eager materialization here instead (localCheckpoint before a
-        finally-unpersist) was measured at +0.35 s on the
-        graph_reachability headline row — pure block-write overhead the
-        deferred scheme avoids. Contract: consume the returned frame
-        before starting another traversal (every caller in this repo
-        materializes immediately)."""
+        Cache hygiene: the persisted frames (edge set + per-level
+        frontiers) are retained in a module-level slot and UNPERSISTED
+        at the start of the NEXT traversal — bounded retention (at most
+        ONE traversal's frames) with zero extra jobs in the timed path.
+        Contract: consume the returned frame before starting another
+        traversal (every caller in this repo materializes immediately)."""
         for df in _RETAINED_TRAVERSAL_FRAMES:
             df.unpersist()
         _RETAINED_TRAVERSAL_FRAMES.clear()
         e = self.edges
         if rel_types:
             e = e.filter(e.rel_type.isin(*rel_types))
-        shallow = max_depth <= 4
-        persisted: list[DataFrame] = []
-        if shallow:
-            e = e.persist()
-            persisted.append(e)
+        e = e.persist()
+        persisted: list[DataFrame] = [e]
         visited = roots
         frontier = roots
         try:
@@ -147,130 +144,85 @@ class PropertyGraph:
                     .join(visited, ["uid", "root"], "left_anti")
                 )
                 if level == max_depth - 1:
-                    # FINAL level (r17, VERDICT r16 #6): the early-exit
-                    # test decides nothing here — the loop ends either
-                    # way — and this frontier is consumed exactly once
-                    # (the closing union below). Skipping the persist +
-                    # count folds the last hop into the CALLER's job and
-                    # drops one driver job per traversal; an empty final
-                    # frontier unions to a no-op. Applies to both the
-                    # shallow and deep paths: the deep path's lineage
-                    # already truncated at level max_depth-2, so one
-                    # lazy tail level stays O(1) to analyze.
+                    # the final frontier is consumed exactly once (the
+                    # closing union), so it is left unpersisted
                     visited = visited.unionByName(nxt)
                     break
-                if shallow:
-                    # r18: the shallow path is now FULLY LAZY — zero
-                    # build-phase jobs (was max_depth-1 count() jobs).
-                    # The per-level count() bought (a) cache forcing and
-                    # (b) early exit at the true diameter; neither needs
-                    # a driver round-trip: persist() caches partitions
-                    # the first time the caller's ONE consumption job
-                    # computes them (the next hop and the closing union
-                    # then read blocks), and a frontier that empties
-                    # early makes every deeper level an empty-input
-                    # stage inside that same job — far cheaper than a
-                    # blocking per-level count. Lineage stays max_depth
-                    # levels deep, inside Catalyst's comfort zone, which
-                    # is exactly why this is gated to shallow bounds.
-                    nxt = nxt.persist()
-                    persisted.append(nxt)
-                elif checkpoint:
-                    nxt = nxt.localCheckpoint(eager=True)
-                    if nxt.isEmpty():
-                        break
-                else:
-                    nxt = nxt.persist()
-                    persisted.append(nxt)
-                    if nxt.count() == 0:
-                        break
+                nxt = nxt.persist()
+                persisted.append(nxt)
                 visited = visited.unionByName(nxt)
                 frontier = nxt
             return visited
         finally:
             _RETAINED_TRAVERSAL_FRAMES.extend(persisted)
 
-    def connected_components(
-        self,
-        max_iter: int = 20,
-        checkpoint: bool = True,
-        algorithm: str = "hash_min",
-    ) -> DataFrame:
-        """Distributed connected components via hash-min propagation:
-        every vertex starts as its own component (its uid), and each
-        round every vertex adopts the minimum component id among itself
-        and its neighbors (one join + one min-aggregation over the
-        undirected edge set). Converges in O(component diameter) rounds;
-        the per-round change check is one cheap anti-filter job and exits
-        at the true diameter instead of always paying max_iter rounds.
-        localCheckpoint truncates lineage so plan size stays constant
-        across iterations (same harness discipline as `reachable`).
+    def connected_components(self) -> DataFrame:
+        """Distributed connected components. Returns (uid, component)
+        where component = the lexicographically smallest uid in the
+        vertex's component — a deterministic representative. Isolated
+        vertices keep their own uid.
 
-        Returns (uid, component) where component = the lexicographically
-        smallest uid in the vertex's component — a deterministic
-        representative. Isolated vertices keep their own uid.
+        The graph, not the caller, picks the strategy. Up to
+        HASH_MIN_ROUNDS rounds of hash-min propagation run first: each
+        round every vertex adopts the minimum label among itself and its
+        neighbors (one join + one min-aggregation over the undirected
+        edge set), and a round that changes no label ends the loop.
+        Shallow graphs (near-dup balls, one-hop containment) converge
+        here with few jobs per round. A graph whose labels still move
+        after the last round is CONTRACTED — every edge maps to its
+        endpoints' current labels, self-loops drop — and the contracted
+        graph goes to star_contraction_components, whose round count is
+        O(log² n) regardless of chain length. Each vertex's final
+        component is the star root of its hash-min label.
 
-        Scale note: hash-min's round count is the component diameter,
-        which is fine for the shallow containment graphs this engine
-        models (≤3 hops) but slow on long chains at web scale; pass
-        ``algorithm="star"`` for the alternating small-star/large-star
-        contraction (Kiveris et al., 'Connected Components in MapReduce
-        and Beyond') — O(log² n) rounds worst-case and ~log n in
-        practice, same output contract. The default stays hash-min
-        because on shallow graphs it converges in 2-3 rounds with fewer
-        jobs per round."""
-        if algorithm == "star":
-            labels, _ = star_contraction_components(
-                self.vertices, self.edges, max_iter=max_iter, checkpoint=checkpoint
-            )
-            return labels
-        if algorithm != "hash_min":
-            raise ValueError(f"unknown connected-components algorithm: {algorithm!r}")
+        Correctness of the hand-off: every hash-min label is a uid in the
+        vertex's own component, so the contracted graph has the same
+        components over labels; a component's minimum uid is its own
+        label (nothing smaller can reach it), so the star root — the
+        minimum label — is the component's minimum uid."""
+        # Pin the undirected edge view once: every round's join would
+        # otherwise re-execute the caller's edge DERIVATION (for the
+        # dedup composites that is the whole LSH band-join/verify
+        # pipeline). localCheckpoint per round keeps plan size constant.
         und = self.edges.select("src_uid", "dst_uid").unionByName(
             self.edges.select(
                 F.col("dst_uid").alias("src_uid"), F.col("src_uid").alias("dst_uid")
             )
-        )
-        if checkpoint:
-            # Pin the undirected edge view once: every round's join would
-            # otherwise re-execute the caller's edge DERIVATION (for the
-            # dedup composites that is the whole LSH band-join/verify
-            # pipeline — O(rounds) recomputations of the most expensive
-            # frame in the query). Same discipline as star contraction's
-            # input materialization.
-            und = und.localCheckpoint(eager=True)
+        ).localCheckpoint(eager=True)
         comp = self.vertices.select("uid", F.col("uid").alias("component"))
-        converged = False
-        for _ in range(max_iter):
+        for _ in range(HASH_MIN_ROUNDS):
+            # a vertex's own label rides along flagged `own`, so the
+            # round's aggregation also yields its previous label and the
+            # change test is a filter, not a second join
             nbr = und.join(comp, und.src_uid == comp.uid).select(
-                F.col("dst_uid").alias("uid"), "component"
+                F.col("dst_uid").alias("uid"), "component", F.lit(False).alias("own")
             )
             cand = (
-                comp.unionByName(nbr)
+                comp.withColumn("own", F.lit(True))
+                .unionByName(nbr)
                 .groupBy("uid")
-                .agg(F.min("component").alias("component"))
+                .agg(
+                    F.min("component").alias("component"),
+                    F.min(F.when(F.col("own"), F.col("component"))).alias("prev"),
+                )
+                .localCheckpoint(eager=True)
             )
-            if checkpoint:
-                cand = cand.localCheckpoint(eager=True)
-            changed = (
-                cand.join(comp.withColumnRenamed("component", "prev"), "uid")
-                .filter(F.col("component") != F.col("prev"))
-            )
-            comp = cand
-            if changed.isEmpty():
-                converged = True
-                break
-        if not converged:
-            # Silent wrong answers are worse than a loud budget failure:
-            # labels after an exhausted budget are intermediate values,
-            # not components (unlike reachable(), where max_depth is a
-            # semantic bound rather than a convergence budget).
-            raise RuntimeError(
-                f"connected_components did not converge within max_iter={max_iter} "
-                "rounds (component diameter exceeds the budget); raise max_iter or "
-                "switch to star-contraction for long-chain graphs"
-            )
-        return comp
+            comp = cand.select("uid", "component")
+            if cand.filter(F.col("component") != F.col("prev")).isEmpty():
+                return comp
+        src = comp.select(F.col("uid").alias("src_uid"), F.col("component").alias("sl"))
+        dst = comp.select(F.col("uid").alias("dst_uid"), F.col("component").alias("dl"))
+        contracted = (
+            und.join(src, "src_uid")
+            .join(dst, "dst_uid")
+            .select(F.col("sl").alias("src_uid"), F.col("dl").alias("dst_uid"))
+            .filter(F.col("src_uid") != F.col("dst_uid"))
+        )
+        star, _ = star_contraction_components(edge_endpoints(contracted), contracted)
+        root = star.select(F.col("uid").alias("label"), F.col("component").alias("root"))
+        return comp.join(root, comp.component == root.label, "left").select(
+            "uid", F.coalesce("root", "component").alias("component")
+        )
 
     def match(self, src_label: str, rel_type: str, dst_label: str) -> DataFrame:
         """Tiny pattern API (SURVEY §4.2): the engine's ergonomic analogue
@@ -302,19 +254,17 @@ class PropertyGraph:
 
 
 def star_contraction_components(
-    vertices: DataFrame,
-    edges: DataFrame,
-    max_iter: int = 30,
-    checkpoint: bool = True,
+    vertices: DataFrame, edges: DataFrame
 ) -> tuple[DataFrame, int]:
     """Connected components by alternating large-star/small-star
     contraction (Kiveris et al., 'Connected Components in MapReduce and
-    Beyond', SoCC'14) — the long-chain/web-scale alternative to hash-min
-    (VERDICT r3 #6). Returns ``(labels, rounds)``: the (uid, component)
-    DataFrame under the same contract as PropertyGraph.connected_components
-    (component = lexicographically smallest uid; isolated vertices keep
-    their own uid), and the number of alternation rounds to the fixed
-    point.
+    Beyond', SoCC'14) — the long-chain stage of
+    PropertyGraph.connected_components. Returns ``(labels, rounds)``: the
+    (uid, component) DataFrame under the same contract as
+    PropertyGraph.connected_components (component = lexicographically
+    smallest uid; isolated vertices keep their own uid), and the number
+    of alternation rounds to the fixed point. Raises RuntimeError if the
+    fixed point is not reached within STAR_MAX_ROUNDS.
 
     Each round over the current undirected neighbor view Γ:
       * large-star: every node u links its LARGER neighbors to
@@ -326,19 +276,20 @@ def star_contraction_components(
     practice), vs O(diameter) for hash-min — a 10k-node path needs ~12
     rounds here and 10k there. Every step is joins/aggregations (min is
     map-combined); nothing is collected to the driver; localCheckpoint
-    truncates the per-round lineage exactly as in the other iterative
-    harnesses."""
-    # Orientation invariant (r17): every STORED edge is strictly
-    # (larger, smaller). The input is normalized once here; each round's
-    # outputs re-establish it by construction — large-star emits
-    # (v, m(u)) with v > u ≥ m, small-star emits (v, m(u)) with
-    # v ∈ Γ(u) ⇒ m ≤ v (plus (u, m(u)), m ≤ u), both ≠-filtered to
-    # strict. Under the invariant the undirected view is a plain union
-    # of two DISJOINT orientations (one side u>v, the mirror u<v), so
-    # the two per-round `.distinct()`s the old _und paid — a full
-    # exchange each, at any scale — are structurally unnecessary.
-    # Measured r17 at sf0.1 on the crossmodal pair graph (1,424 edges,
-    # 6 rounds): round checkpoint actions drop from 10 AQE jobs to 8.
+    truncates the per-round lineage."""
+    # Orientation invariant: every STORED edge is strictly (larger,
+    # smaller). The input is normalized once here; each round's outputs
+    # re-establish it by construction — large-star emits (v, m(u)) with
+    # v > u ≥ m, small-star emits (v, m(u)) with v ∈ Γ(u) ⇒ m ≤ v (plus
+    # (u, m(u)), m ≤ u), both ≠-filtered to strict. Under the invariant
+    # the undirected view is a plain union of two DISJOINT orientations
+    # (one side u>v, the mirror u<v), so it needs no distinct.
+    #
+    # The input edge set is materialized ONCE before iterating: round 1
+    # otherwise re-executes the caller's whole edge DERIVATION 3-4 times
+    # (two undirected unions + two min-joins consume `cur` before the
+    # first per-round checkpoint). For cheap edge frames this is one
+    # extra tiny checkpoint job.
     pair = (
         edges.select(
             F.greatest("src_uid", "dst_uid").alias("u"),
@@ -346,21 +297,15 @@ def star_contraction_components(
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
+        .localCheckpoint(eager=True)
     )
-    if checkpoint:
-        # Materialize the input edge set ONCE before iterating: round 1
-        # otherwise re-executes the caller's whole edge DERIVATION 3-4
-        # times (two undirected unions + two min-joins consume `cur`
-        # before the first per-round checkpoint) — measured at sf0.1 on
-        # pipeline_semdedup_apply's τ-verified pair graph (1168 edges
-        # but an expensive cell-pair pipeline behind them): 16.5 s →
-        # the CC cost of a 1k-edge graph once the input is pinned. For
-        # cheap edge frames this is one extra tiny checkpoint job.
-        pair = pair.localCheckpoint(eager=True)
 
     def _und(e: DataFrame) -> DataFrame:
-        # no distinct: `e` is a distinct set oriented u>v, so the mirror
-        # contributes only u<v rows — the union cannot carry duplicates
+        # `e` is strictly oriented u>v, so the mirror's rows (u<v) never
+        # coincide with e's. `e` itself may carry duplicates (the
+        # large-star output is not deduped), so every consumer of the
+        # union must be duplicate-insensitive: the min aggregations and
+        # the (u, v) groupBy of the fixed-point probe are.
         return e.unionByName(
             e.select(F.col("v").alias("u"), F.col("u").alias("v"))
         )
@@ -370,26 +315,15 @@ def star_contraction_components(
             F.least(F.min("v"), F.first("u")).alias("m")
         )
 
-    rounds = 0
-    converged = False
     cur = pair
-    for _ in range(max_iter):
-        rounds += 1
+    for rounds in range(1, STAR_MAX_ROUNDS + 1):
         und = _und(cur)
         mins = _mins(und)
-        # r18: NO per-phase `.distinct()` — duplicates in the raw star
-        # outputs are harmless mid-round (they cannot change a min
-        # aggregation, and both phases' outputs stay strictly oriented
-        # (greater, smaller) with or without dedup, so the disjoint-
-        # orientation union argument is unchanged) and the round's ONE
-        # (u, v) exchange — the fixed-point probe's groupBy below —
-        # dedups the small-star output as a side effect of the
-        # aggregation it already runs. That removes two full edge-set
-        # exchanges per round at any scale on top of r17's two (the
-        # old `_und` distincts); duplicate inflation is bounded within
-        # the round (each raw row is one input edge's contribution) and
-        # the edge set handed to the NEXT round is exactly the distinct
-        # set the r17 code produced.
+        # No per-phase `.distinct()`: duplicates in the raw star outputs
+        # cannot change a min aggregation, and the round's ONE (u, v)
+        # exchange — the fixed-point probe's groupBy below — dedups the
+        # small-star output as a side effect, so the edge set handed to
+        # the next round is a distinct set.
         large = (
             und.filter(F.col("v") > F.col("u"))
             .join(mins, "u")
@@ -406,11 +340,10 @@ def star_contraction_components(
             .filter(F.col("u") != F.col("v"))
         )
         # Fixed-point test and small-star dedup FUSED into one (u, v)
-        # aggregation (r17 ran the probe over an already-distinct small;
-        # r18 folds the distinct in): per edge, track presence on each
-        # side; the sets are equal exactly when no edge is one-sided.
-        # `cur` is a distinct set, small_raw may carry duplicates —
-        # max() presence flags are duplicate-insensitive.
+        # aggregation: per edge, track presence on each side; the sets
+        # are equal exactly when no edge is one-sided. `cur` is a
+        # distinct set, small_raw may carry duplicates — max() presence
+        # flags are duplicate-insensitive.
         agg = (
             small_raw.select("u", "v", F.lit(1).alias("_s"), F.lit(0).alias("_c"))
             .unionByName(
@@ -418,24 +351,20 @@ def star_contraction_components(
             )
             .groupBy("u", "v")
             .agg(F.max("_s").alias("_s"), F.max("_c").alias("_c"))
+            # LAZY checkpoint: the fixed-point probe below is the round's
+            # first action over the aggregation and materializes it; the
+            # next round's `cur` reads blocks. Lineage is truncated the
+            # same as with an eager checkpoint.
+            .localCheckpoint(eager=False)
         )
-        if checkpoint:
-            # LAZY checkpoint (r17): the fixed-point probe below is the
-            # round's first action over the fused aggregation and
-            # materializes its map side; the next round's `cur` reads
-            # blocks (or recomputes reduce partitions from the live
-            # shuffle files). Lineage is truncated identically.
-            agg = agg.localCheckpoint(eager=False)
         stable = agg.filter(F.col("_s") != F.col("_c")).isEmpty()
         cur = agg.filter(F.col("_s") == 1).select("u", "v")
         if stable:
-            converged = True
             break
-    if not converged:
+    else:
         raise RuntimeError(
             f"star_contraction_components did not reach a fixed point within "
-            f"max_iter={max_iter} rounds (O(log^2 n) expected; this graph "
-            "would need a larger budget)"
+            f"{STAR_MAX_ROUNDS} rounds (O(log^2 n) expected)"
         )
     # fixed point: every edge is (member -> component root)
     roots = cur.groupBy("u").agg(F.min("v").alias("component"))

@@ -195,7 +195,7 @@ def pipeline_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     competency composed: (1) BLOCK candidate names on the tail token
     (dedup_fuzzy_names' generation — never all-pairs), (2) VERIFY with
     Levenshtein ≤ {FUZZY_MAX_DIST}, (3) CLUSTER the match graph with
-    hash-min connected components so non-transitive pairwise matches
+    connected components so non-transitive pairwise matches
     resolve to one canonical entity per component (dedup_cluster_keep's
     resolution; singletons stay their own entity via the left join), and
     (4) MERGE every member's records under the canonical id — variant
@@ -213,7 +213,7 @@ def pipeline_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     entity. Nothing touches more than (names + match edges + one pass
     over part)."""
     from graph_etl_pipeline_spark.functions.numeric import dec
-    from graph_etl_pipeline_spark.graph.model import PropertyGraph
+    from graph_etl_pipeline_spark.graph.model import PropertyGraph, edge_endpoints
 
     p = table(spark, sf_dir, "part")
     names = p.select(F.col("p_name").alias("name")).distinct()
@@ -227,12 +227,7 @@ def pipeline_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.levenshtein(F.col("a.name"), F.col("b.name")) <= FUZZY_MAX_DIST)
         .select(F.col("a.name").alias("src_uid"), F.col("b.name").alias("dst_uid"))
     )
-    verts = (
-        pairs.select(F.col("src_uid").alias("uid"))
-        .unionByName(pairs.select(F.col("dst_uid").alias("uid")))
-        .distinct()
-    )
-    comp = PropertyGraph(vertices=verts, edges=pairs).connected_components()
+    comp = PropertyGraph(edge_endpoints(pairs), pairs).connected_components()
     canon = names.join(comp, names.name == comp.uid, "left").select(
         "name", F.coalesce("component", "name").alias("entity")
     )

@@ -848,7 +848,7 @@ def pipeline_crossmodal_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: recursive-CTE transitive closure over the union of the
     lexical pair CTE (exact-Jaccard-verified LSH candidates) and the
     semantic pair CTE (exact-cosine τ-verified cell pairs)."""
-    from graph_etl_pipeline_spark.graph.model import PropertyGraph
+    from graph_etl_pipeline_spark.graph.model import PropertyGraph, edge_endpoints
     from graph_etl_pipeline_spark.queries.dedup import _lsh_pairs_artifact
     from graph_etl_pipeline_spark.queries.similarity import _semdedup_verified_pairs
 
@@ -861,17 +861,9 @@ def pipeline_crossmodal_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pin the unioned pair frame once (both sides carry expensive
     # verification lineage; the union is sparse — see the two composites)
     edges = lex.unionByName(sem).localCheckpoint(eager=True)
-    verts = (
-        edges.select(F.col("src_uid").alias("uid"))
-        .unionByName(edges.select(F.col("dst_uid").alias("uid")))
-        .distinct()
-    )
     flags = (
-        PropertyGraph(vertices=verts, edges=edges)
-        # star contraction: the unioned graph inherits the semantic
-        # side's long borderline-τ chains (see pipeline_semdedup_apply),
-        # so the O(log n)-round algorithm is the safe closure choice
-        .connected_components(algorithm="star")
+        PropertyGraph(edge_endpoints(edges), edges)
+        .connected_components()
         .select(
             F.col("uid").alias("doc_id"),
             F.col("component").alias("canonical_id"),
@@ -1052,7 +1044,7 @@ def pipeline_incremental_crossmodal(spark: SparkSession, sf_dir: str) -> DataFra
     Cost at 100 TB: steady-state runs scan three sparse artifacts and
     pay delta-bounded joins plus a CC over the contracted graph — the
     full pair generation and corpus-wide CC never re-run."""
-    from graph_etl_pipeline_spark.graph.model import PropertyGraph
+    from graph_etl_pipeline_spark.graph.model import PropertyGraph, edge_endpoints
     from graph_etl_pipeline_spark.io import materialize
     from graph_etl_pipeline_spark.queries.dedup import _incr_lexical_pairs
     from graph_etl_pipeline_spark.queries.similarity import _incr_semantic_pairs
@@ -1069,15 +1061,8 @@ def pipeline_incremental_crossmodal(spark: SparkSession, sf_dir: str) -> DataFra
             )
         )
 
-    def verts_of(e: DataFrame) -> DataFrame:
-        return (
-            e.select(F.col("src_uid").alias("uid"))
-            .unionByName(e.select(F.col("dst_uid").alias("uid")))
-            .distinct()
-        )
-
     # Yesterday's labels: CC over the base pair union, persisted once per
-    # base corpus. The star rounds execute EAGERLY while the CC output
+    # base corpus. The CC rounds execute EAGERLY while the CC output
     # plan is being BUILT (each round localCheckpoints), so even a
     # content-addressed materialize would re-pay the rounds per call
     # just to compute the digest — the path memo below is what actually
@@ -1095,8 +1080,8 @@ def pipeline_incremental_crossmodal(spark: SparkSession, sf_dir: str) -> DataFra
     if base_labels is None:
         base_edges = as_edges(lex_b, sem_b)
         base_labels = materialize(
-            PropertyGraph(vertices=verts_of(base_edges), edges=base_edges)
-            .connected_components(algorithm="star")
+            PropertyGraph(edge_endpoints(base_edges), base_edges)
+            .connected_components()
             .select(
                 F.col("uid").alias("doc_id"), F.col("component").alias("base_label")
             ),
@@ -1127,9 +1112,7 @@ def pipeline_incremental_crossmodal(spark: SparkSession, sf_dir: str) -> DataFra
         .filter(F.col("src_uid") != F.col("dst_uid"))
         .localCheckpoint(eager=True)
     )
-    cc2 = PropertyGraph(vertices=verts_of(mapped), edges=mapped).connected_components(
-        algorithm="star"
-    )
+    cc2 = PropertyGraph(edge_endpoints(mapped), mapped).connected_components()
 
     new_lab = cc2.select(
         F.col("uid").alias("base_label"), F.col("component").alias("new_label")

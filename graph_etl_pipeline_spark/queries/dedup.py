@@ -598,7 +598,7 @@ def dedup_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_cluster_keep",
     # Transitive closure by recursive CTE: every node's reachable set
     # over the undirected pair graph, MIN = canonical representative.
-    # Independent of the Spark side's iterative hash-min algorithm, and
+    # Independent of the Spark side's iterative CC algorithm, and
     # exact at oracle scale (the pair graph is sparse by construction).
     oracle=f"""
     WITH RECURSIVE {_SQL_SHINGLE_BODY},
@@ -632,13 +632,13 @@ def dedup_cluster_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Pipeline: verified LSH pairs (the `dedup_minhash_lsh` plan — its
     materialized shingle table is content-addressed, so it is built once
-    and shared) → hash-min connected components over the pair graph →
+    and shared) → connected components over the pair graph →
     canonical = component minimum, keep = (doc == canonical). Documents
     in no pair never enter the edge set — the CC iteration runs on the
     SPARSE near-dup graph (≪ corpus size at any scale), not the corpus.
-    Cluster diameters are small (near-dup balls), so hash-min converges
-    in 2-3 rounds; the star-contraction variant stands by for
-    pathological chain clusters (graph/model.py)."""
+    Cluster diameters are small (near-dup balls), so the hash-min stage
+    of PropertyGraph.connected_components converges in 2-3 rounds;
+    pathological chain clusters fall through to star contraction."""
     return _cluster_keep_flags(spark, sf_dir)
 
 
@@ -662,21 +662,12 @@ def _cluster_keep_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, canonical_id, keep) for every document that appears in at
     least one verified LSH pair — the shared core of dedup_cluster_keep
     and pipeline_minhash_verified_dedup."""
-    from graph_etl_pipeline_spark.graph.model import PropertyGraph
+    from graph_etl_pipeline_spark.graph.model import PropertyGraph, edge_endpoints
 
-    pairs = _lsh_pairs_artifact(spark, sf_dir)
-    verts = (
-        pairs.select(F.col("doc_a").alias("uid"))
-        .unionByName(pairs.select(F.col("doc_b").alias("uid")))
-        .distinct()
+    edges = _lsh_pairs_artifact(spark, sf_dir).select(
+        F.col("doc_a").alias("src_uid"), F.col("doc_b").alias("dst_uid")
     )
-    g = PropertyGraph(
-        vertices=verts,
-        edges=pairs.select(
-            F.col("doc_a").alias("src_uid"), F.col("doc_b").alias("dst_uid")
-        ),
-    )
-    comp = g.connected_components()
+    comp = PropertyGraph(edge_endpoints(edges), edges).connected_components()
     return comp.select(
         F.col("uid").alias("doc_id"),
         F.col("component").alias("canonical_id"),

@@ -1147,30 +1147,16 @@ def pipeline_semdedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     widens beyond what dedup_semdedup_clusters already pays, so the
     composite's cost ≈ that query + CC-on-pairs + one corpus-width
     join."""
-    from graph_etl_pipeline_spark.graph.model import PropertyGraph
+    from graph_etl_pipeline_spark.graph.model import PropertyGraph, edge_endpoints
 
     # the verified pair set is a content-addressed parquet artifact
     # (built once per corpus inside _semdedup_verified_pairs), so every
     # consumer below is a prunable scan of a sparse table
-    pairs = _semdedup_verified_pairs(spark, sf_dir)
-    verts = (
-        pairs.select(F.col("lo_id").alias("uid"))
-        .unionByName(pairs.select(F.col("hi_id").alias("uid")))
-        .distinct()
+    edges = _semdedup_verified_pairs(spark, sf_dir).select(
+        F.col("lo_id").alias("src_uid"), F.col("hi_id").alias("dst_uid")
     )
-    g = PropertyGraph(
-        vertices=verts,
-        edges=pairs.select(
-            F.col("lo_id").alias("src_uid"), F.col("hi_id").alias("dst_uid")
-        ),
-    )
-    # star contraction, not hash-min: τ sits where random cross-vector
-    # cosines land, so the verified τ-graph can contain LONG CHAINS of
-    # borderline pairs (measured at sf0.1: diameter > 20) — hash-min's
-    # O(diameter) rounds blow the budget exactly where the lexical
-    # composite's near-dup balls (diameter 2-3) never do; star
-    # contraction is O(log n) rounds regardless of chain length.
-    flags = g.connected_components(algorithm="star").select(
+    g = PropertyGraph(edge_endpoints(edges), edges)
+    flags = g.connected_components().select(
         F.col("uid").alias("vec_id"),
         F.col("component").alias("canonical_id"),
         (F.col("uid") == F.col("component")).alias("kept"),

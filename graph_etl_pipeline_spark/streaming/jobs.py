@@ -444,16 +444,19 @@ def stage_three_batch_fixture(
     names = ["a-events.parquet"] + [f"{n}.parquet" for n, _ in marker_files]
     if replay_events:
         names.append("c-replay.parquet")
-    # Reuse only a directory whose file set matches EXACTLY (ADVICE r17
-    # #3): checking just names[-1] would accept a stale scratch dir from
-    # an older fixture layout (pid reuse / interrupted run) and replay
-    # its extra files as data batches — rebuild on any mismatch.
+    # Reuse only a directory whose file set matches EXACTLY: checking
+    # just names[-1] would accept a stale scratch dir from an older
+    # fixture layout (pid reuse / interrupted run) and replay its extra
+    # files as data batches — rebuild on any mismatch. A non-directory
+    # at `src` is a mismatch too.
     existing = (
         sorted(os.listdir(src)) if os.path.isdir(src) else None
     )
     if existing != sorted(names):
         if existing is not None:
             shutil.rmtree(src)
+        elif os.path.lexists(src):
+            os.remove(src)
         events_file, tmax = staged_events_single_file(spark, sf_dir)
         os.makedirs(src, exist_ok=True)
         shutil.copy(events_file, os.path.join(src, "a-events.parquet"))

@@ -15,8 +15,7 @@ SF_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01")
 def spark():
     from graph_etl_pipeline_spark.session import get_spark
 
-    s = get_spark(cpus=os.environ.get("SPARK_GRAFT_TEST_CPUS", "8"))
-    yield s
+    yield get_spark()
 
 
 @pytest.fixture(scope="session")

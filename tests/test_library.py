@@ -4,6 +4,7 @@ approximate operators' accuracy bounds."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from graph_etl_pipeline_spark.catalog import clear_all, get_stats, query, register_tables
@@ -115,7 +116,7 @@ def test_graph_reachable_hierarchy(spark):
 
 def test_traversal_cache_deferred_cleanup_contract(spark):
     """The deferred traversal-cache contract (graph/model.py, VERDICT r13
-    #6): the shallow path retains its persisted frames until the NEXT
+    #6): a traversal retains its persisted frames until the NEXT
     traversal starts, which keeps the retained-frame slot bounded at one
     traversal's frames — and a caller that violates the 'consume before
     the next traversal' convention must still get CORRECT results (the
@@ -147,8 +148,8 @@ def test_traversal_cache_deferred_cleanup_contract(spark):
 
 
 def test_traversal_shallow_path_job_count_pinned(spark):
-    """Pin the shallow traversal's driver-job budget (VERDICT r13 #1,
-    tightened r17 / VERDICT r16 #6, made TOTAL in r18): the shallow path
+    """Pin the traversal's driver-job budget (VERDICT r13 #1,
+    tightened r17 / VERDICT r16 #6, made TOTAL in r18): reachable()
     is fully lazy — ZERO build-phase jobs; every hop, anti-join, and the
     lazy persists fold into the caller's one consumption job. A
     regression that re-introduces per-level actions (count, isEmpty,
@@ -381,10 +382,27 @@ def test_resize_nearest_neighbor():
             assert up.rgb[d : d + 3] == rgb[s : s + 3]
 
 
-def test_connected_components_chain_convergence(spark):
-    """Hash-min CC must propagate across a long path (one hop per round):
-    a planted 10-node chain plus an isolated vertex — the chain collapses
-    to its min uid, the singleton keeps its own."""
+def _spy_star(monkeypatch) -> list:
+    """Record each call connected_components makes to the star stage."""
+    from graph_etl_pipeline_spark.graph import model
+
+    calls: list = []
+    real = model.star_contraction_components
+
+    def spy(vertices, edges):
+        calls.append(1)
+        return real(vertices, edges)
+
+    monkeypatch.setattr(model, "star_contraction_components", spy)
+    return calls
+
+
+def test_connected_components_chain_convergence(spark, monkeypatch):
+    """A planted 10-node chain plus an isolated vertex: hash-min moves
+    labels one hop per round, so its HASH_MIN_ROUNDS stage cannot finish
+    the chain and connected_components must contract onto the hash-min
+    labels and fall through to star contraction. The chain collapses to
+    its min uid, the singleton keeps its own."""
     from graph_etl_pipeline_spark.graph.model import PropertyGraph
 
     n = 10
@@ -396,11 +414,13 @@ def test_connected_components_chain_convergence(spark):
         [(f"n{i:02d}", f"n{i + 1:02d}", "LINK") for i in range(n - 1)],
         "src_uid string, dst_uid string, rel_type string",
     )
+    star_calls = _spy_star(monkeypatch)
     comp = {
         r.uid: r.component
         for r in PropertyGraph(vertices, edges).connected_components().collect()
     }
     assert comp == {f"n{i:02d}": "n00" for i in range(n)} | {"z99": "z99"}
+    assert star_calls == [1]
 
 
 def test_star_contraction_long_chain_logarithmic_rounds(spark):
@@ -419,7 +439,7 @@ def test_star_contraction_long_chain_logarithmic_rounds(spark):
         [(f"n{i:05d}", f"n{i + 1:05d}", "LINK") for i in range(n - 1)],
         "src_uid string, dst_uid string, rel_type string",
     )
-    labels, rounds = star_contraction_components(vertices, edges, max_iter=20)
+    labels, rounds = star_contraction_components(vertices, edges)
     assert rounds <= 20
     comp = {r.uid: r.component for r in labels.collect()}
     assert comp == {f"n{i:05d}": "n00000" for i in range(n)} | {"z_solo": "z_solo"}
@@ -459,9 +479,25 @@ def test_star_contraction_mirrored_and_duplicate_input_edges(spark):
     assert as_map(got_clean) == expect
 
 
-def test_star_contraction_matches_hash_min(spark):
-    """Same output contract as the default algorithm on a branchy
-    multi-component graph (two components + isolated vertex)."""
+def test_star_contraction_raises_when_budget_runs_out(spark, monkeypatch):
+    """Star contraction fails loudly instead of returning intermediate
+    labels: a 64-node chain cannot reach its fixed point in one round."""
+    from graph_etl_pipeline_spark.graph import model
+
+    monkeypatch.setattr(model, "STAR_MAX_ROUNDS", 1)
+    edges = spark.createDataFrame(
+        [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(63)],
+        "src_uid string, dst_uid string",
+    )
+    with pytest.raises(RuntimeError, match="fixed point"):
+        model.star_contraction_components(model.edge_endpoints(edges), edges)
+
+
+def test_connected_components_branchy_multi_component(spark, monkeypatch):
+    """Min-uid labels on a branchy multi-component graph (two components
+    + isolated vertex) through the one connected_components() entry. Its
+    diameter is 2, so the hash-min stage finishes it without the star
+    stage."""
     from graph_etl_pipeline_spark.graph.model import PropertyGraph
 
     vertices = spark.createDataFrame(
@@ -474,11 +510,15 @@ def test_star_contraction_matches_hash_min(spark):
          ("p", "q", "L"), ("q", "r", "L"), ("r", "p", "L")],
         "src_uid string, dst_uid string, rel_type string",
     )
-    g = PropertyGraph(vertices, edges)
-    hm = {r.uid: r.component for r in g.connected_components().collect()}
-    st = {r.uid: r.component for r in g.connected_components(algorithm="star").collect()}
-    assert st == hm
-    assert st["lone"] == "lone" and st["d"] == "a" and st["p"] == "p"
+    star_calls = _spy_star(monkeypatch)
+    comp = PropertyGraph(vertices, edges).connected_components()
+    got = {r.uid: r.component for r in comp.collect()}
+    assert star_calls == []
+    assert got == {
+        "a": "a", "b": "a", "c": "a", "d": "a",
+        "p": "p", "q": "p", "r": "p",
+        "lone": "lone",
+    }
 
 
 def test_pagerank_fixed_point_semantics(spark, sf_dir):

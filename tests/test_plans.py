@@ -49,19 +49,6 @@ def test_topk_plans_take_ordered(spark, sf_dir):
     assert "TakeOrderedAndProject" in plan  # no global sort for top-K
 
 
-@pytest.mark.slow
-def test_no_cartesian_products_anywhere(spark, sf_dir):
-    """BroadcastNestedLoopJoin/CartesianProduct in a hot path is a scale
-    bug. The only sanctioned cross joins are 1-row broadcast query
-    vectors (similarity family)."""
-    allowed_cross = {"sim_cosine_topk"}
-    for name, spec in sorted(all_queries().items()):
-        if name in allowed_cross or name == "stream_tumbling_hourly":
-            continue
-        plan = _plan(spark, name, sf_dir)
-        assert "CartesianProduct" not in plan, name
-
-
 def test_codegen_covers_relational_core(spark, sf_dir):
     """The relational core must compile to whole-stage codegen stages
     (explain('codegen') reports 'Found N WholeStageCodegen subtrees')."""

@@ -1122,3 +1122,14 @@ def test_bucketed_sessionizer_bucket_count_invariance(spark, sf_dir):
 
     a, b = run(3, "b3"), run(64, "b64")
     assert a and a == b
+
+
+def test_three_batch_fixture_replaces_non_directory_src(spark, sf_dir, tmp_path):
+    """A plain file where the fixture's src directory belongs (a stale
+    artifact of an older layout) is a mismatch: the fixture removes it
+    and rebuilds the directory instead of failing in os.makedirs."""
+    from graph_etl_pipeline_spark.streaming.jobs import stage_three_batch_fixture
+
+    (tmp_path / "src").write_text("stale")
+    src = stage_three_batch_fixture(spark, sf_dir, str(tmp_path), [])
+    assert sorted(os.listdir(src)) == ["a-events.parquet"]
