@@ -8,33 +8,35 @@ next Condition (NEXT_CHECK chains) or to a terminal stream via
 ROUTES_TO/IMPLIES_STREAM. Campus rules OVERRIDE city rules (§7.3:
 scope='campus' wins when both exist).
 
-Set-oriented by design: `resolve_streams` routes EVERY item in one plan —
-answers arrive as a DataFrame of (condition_key, answer) facts, and each
-traversal level is one join — so the same code answers one chatbot query
-or re-routes a 10^9-item catalog.
+Set-oriented by design: `resolve_streams` routes EVERY item in one lazy
+plan — answers arrive as a DataFrame of (condition_uid, answer) facts and
+each rule's condition tree is walked by a fixed chain of broadcast joins —
+so the same code answers one chatbot query or re-routes a 10^9-item catalog.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from graph_etl_pipeline_spark.graph.model import PropertyGraph
 
+# Branch steps from a rule's entry to its stream; a deeper route raises.
+MAX_RULE_DEPTH = 8
 
-def resolve_streams(
-    g: PropertyGraph,
-    answers: DataFrame,  # (condition_uid, answer: bool)
-    max_depth: int = 8,
-) -> DataFrame:
-    """Route every WasteItem to its stream given condition answers.
+
+def resolve_streams(g: PropertyGraph, answers: DataFrame) -> DataFrame:
+    """Route every WasteItem to its stream given condition answers, a
+    (condition_uid, answer: bool) frame.
 
     Returns (item_uid, stream_uid, via) where via ∈ {direct, rule}.
-    Rule resolution walks the condition tree: at each Condition node the
-    matching IF_TRUE/IF_FALSE edge is followed (one join per level,
-    bounded by max_depth); traversal ends on reaching a WasteStream.
-    Campus scope overrides city (reference §7.3): when an item has both,
-    the campus rule's outcome wins.
+    Rule resolution walks each rule's condition tree, following at each
+    Condition the IF_TRUE/IF_FALSE edge matching its answer, one broadcast
+    join per step. A WasteStream is terminal; a walk stuck at an
+    unanswered Condition or a missing branch yields no route; a walk still
+    moving after MAX_RULE_DEPTH steps fails the query instead of dropping
+    the item. Campus scope overrides city (reference §7.3): when an item
+    has both, the campus rule's outcome wins.
     """
     v, e = g.vertices, g.edges
 
@@ -48,7 +50,7 @@ def resolve_streams(
         )
     )
 
-    # 2. rule routes: item -HAS_RULE-> rule(scope) -HAS_CONDITION-> cond ...
+    # 2. rule routes: item -HAS_RULE-> rule(scope) -HAS_CONDITION-> node ...
     rules = (
         e.filter(e.rel_type == "HAS_RULE")
         .select(F.col("src_uid").alias("item_uid"), F.col("dst_uid").alias("rule_uid"))
@@ -59,50 +61,47 @@ def resolve_streams(
             "rule_uid",
         )
     )
-    entry = e.filter(e.rel_type == "HAS_CONDITION").select(
+    streams = v.filter(v.label == "WasteStream").select(F.col("uid").alias("node_uid"))
+    # the answered branch out of each node; streams never move
+    chosen = F.broadcast(
+        e.filter(e.rel_type.isin("IF_TRUE", "IF_FALSE"))
+        .select(
+            F.col("src_uid").alias("node_uid"),
+            F.col("dst_uid").alias("next_uid"),
+            (F.col("rel_type") == "IF_TRUE").alias("on_true"),
+        )
+        .join(answers.select(F.col("condition_uid").alias("node_uid"), "answer"), "node_uid")
+        .filter(F.col("answer") == F.col("on_true"))
+        .join(streams, "node_uid", "left_anti")
+        .select("node_uid", "next_uid")
+    )
+    # frontier: (rule_uid, node_uid); a row with no chosen branch stays
+    # put. The extra last step must move nothing: its raise sits in the
+    # projected join key, so no later filter is pushed beneath it.
+    frontier = e.filter(e.rel_type == "HAS_CONDITION").select(
         F.col("src_uid").alias("rule_uid"), F.col("dst_uid").alias("node_uid")
     )
-    # frontier: (item_uid, rule_uid, scope, node_uid); walk until the node
-    # is a WasteStream
-    frontier = rules.join(entry, "rule_uid")
-    streams = v.filter(v.label == "WasteStream").select(F.col("uid").alias("node_uid"))
-    branch = e.filter(e.rel_type.isin("IF_TRUE", "IF_FALSE")).select(
-        F.col("src_uid").alias("node_uid"),
-        F.col("dst_uid").alias("next_uid"),
-        (F.col("rel_type") == "IF_TRUE").alias("on_true"),
+    for step in range(MAX_RULE_DEPTH + 1):
+        nxt = F.col("next_uid")
+        if step == MAX_RULE_DEPTH:
+            nxt = F.when(nxt.isNotNull(), F.raise_error(F.lit(
+                f"resolve_streams: MAX_RULE_DEPTH={MAX_RULE_DEPTH} exhausted "
+                "(condition chain too deep or cyclic)"
+            )))
+        frontier = frontier.join(chosen, "node_uid", "left").select(
+            "rule_uid", F.coalesce(nxt, "node_uid").alias("node_uid")
+        )
+    resolved = (
+        frontier.join(F.broadcast(streams), "node_uid")
+        .join(F.broadcast(rules), "rule_uid")
+        .select("item_uid", F.col("node_uid").alias("stream_uid"), "scope")
     )
-    # max_depth+1 collection passes so a stream reached on the
-    # max_depth-th branch step is still collected (collect-then-step
-    # inside one loop would silently lose the final level)
-    resolved = None
-    for _ in range(max_depth + 1):
-        done = frontier.join(streams, "node_uid").select(
-            "item_uid", F.col("node_uid").alias("stream_uid"), "scope"
-        )
-        resolved = done if resolved is None else resolved.unionByName(done)
-        pending = frontier.join(streams, "node_uid", "left_anti")
-        if pending.isEmpty():
-            break
-        step = (
-            pending.join(
-                answers.select(F.col("condition_uid").alias("node_uid"), "answer"),
-                "node_uid",
-            )
-            .join(branch, "node_uid")
-            .filter(F.col("answer") == F.col("on_true"))
-            .select("item_uid", "rule_uid", "scope", F.col("next_uid").alias("node_uid"))
-        )
-        frontier = step.localCheckpoint(eager=True)
 
     # campus overrides city (reference §7.3)
-    pref = resolved.withColumn(
-        "prio", F.when(F.col("scope") == "campus", 0).otherwise(1)
-    )
-    from pyspark.sql import Window
-
     w = Window.partitionBy("item_uid").orderBy("prio", "stream_uid")
     ruled = (
-        pref.withColumn("rn", F.row_number().over(w))
+        resolved.withColumn("prio", F.when(F.col("scope") == "campus", 0).otherwise(1))
+        .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .select("item_uid", "stream_uid", F.lit("rule").alias("via"))
     )

@@ -437,6 +437,7 @@ def stage_three_batch_fixture(
     path) ordering is deterministic. Returns the src directory. The
     whole assembly is driver-side file I/O except the once-per-process
     events write inside staged_events_single_file."""
+    import hashlib
     import os
     import shutil
 
@@ -444,32 +445,41 @@ def stage_three_batch_fixture(
     names = ["a-events.parquet"] + [f"{n}.parquet" for n, _ in marker_files]
     if replay_events:
         names.append("c-replay.parquet")
-    # Reuse only a directory whose file set matches EXACTLY: checking
-    # just names[-1] would accept a stale scratch dir from an older
-    # fixture layout (pid reuse / interrupted run) and replay its extra
-    # files as data batches — rebuild on any mismatch. A non-directory
-    # at `src` is a mismatch too.
-    existing = (
-        sorted(os.listdir(src)) if os.path.isdir(src) else None
-    )
-    if existing != sorted(names):
+    events_file, tmax = staged_events_single_file(spark, sf_dir)
+    markers = [
+        (fname, [r if not callable(r) else r(tmax) for r in rows])
+        for fname, rows in marker_files
+    ]
+    # Reuse only a directory whose file set matches EXACTLY and whose
+    # marker rows match too (kept in a fingerprint file beside src, where
+    # the file source does not list it): a stale scratch dir from an
+    # older fixture layout (pid reuse / interrupted run) would replay its
+    # extra files as data batches, and same-named markers with other rows
+    # would serve stale data. Rebuild on any mismatch; a non-directory at
+    # `src` is a mismatch too.
+    stamp_path = os.path.join(root, "src.fingerprint")
+    stamp = hashlib.sha256(repr((names, markers)).encode()).hexdigest()
+    existing = sorted(os.listdir(src)) if os.path.isdir(src) else None
+    stale = existing != sorted(names) or not os.path.isfile(stamp_path)
+    if not stale:
+        with open(stamp_path, encoding="utf-8") as f:
+            stale = f.read() != stamp
+    if stale:
         if existing is not None:
             shutil.rmtree(src)
         elif os.path.lexists(src):
             os.remove(src)
-        events_file, tmax = staged_events_single_file(spark, sf_dir)
         os.makedirs(src, exist_ok=True)
         shutil.copy(events_file, os.path.join(src, "a-events.parquet"))
-        for fname, rows in marker_files:
-            write_event_marker_file(
-                os.path.join(src, f"{fname}.parquet"),
-                [r if not callable(r) else r(tmax) for r in rows],
-            )
+        for fname, rows in markers:
+            write_event_marker_file(os.path.join(src, f"{fname}.parquet"), rows)
         if replay_events:
             shutil.copy(events_file, os.path.join(src, "c-replay.parquet"))
         base = 1_000_000_000
         for i, fname in enumerate(names):
             os.utime(os.path.join(src, fname), (base + 10 * i, base + 10 * i))
+        with open(stamp_path, "w", encoding="utf-8") as f:
+            f.write(stamp)
     return src
 
 

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import contextlib
+import itertools
 import os
 import sys
 
@@ -21,3 +23,23 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
+
+
+_job_groups = itertools.count()
+
+
+@contextlib.contextmanager
+def job_group(spark):
+    """Run the block in a fresh Spark job group with AQE off, so the job
+    fan is deterministic. Yields a function that returns the number of
+    jobs the group has fired so far; job-count pins assert on it."""
+    sc = spark.sparkContext
+    group = f"job_pin_{next(_job_groups)}"
+    old = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    sc.setJobGroup(group, "job-count pin")
+    try:
+        yield lambda: len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setJobGroup(None, None)
+        spark.conf.set("spark.sql.adaptive.enabled", old)

@@ -5,6 +5,7 @@ approximate operators' accuracy bounds."""
 from __future__ import annotations
 
 import pytest
+from conftest import job_group
 from pyspark.sql import functions as F
 
 from graph_etl_pipeline_spark.catalog import clear_all, get_stats, query, register_tables
@@ -157,21 +158,13 @@ def test_traversal_shallow_path_job_count_pinned(spark):
     bench artifact cannot attribute on its own."""
     g = _avv_graph(spark)
     roots = spark.createDataFrame([("08", "08")], "uid string, root string")
-    sc = spark.sparkContext
-    # AQE off for a deterministic job fan (same discipline as the r17
-    # pin); the build phase must fire NO job at all.
-    old = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    sc.setJobGroup("trav_probe", "traversal job-count pin")
-    try:
+    # the build phase must fire NO job at all
+    with job_group(spark) as jobs:
         visited = g.reachable(
             roots, rel_types=("HAS_PARENT",), direction="in", max_depth=3
         )
-        build_jobs = len(sc.statusTracker().getJobIdsForGroup("trav_probe"))
+        build_jobs = jobs()
         rows = visited.collect()
-    finally:
-        sc.setJobGroup(None, None)
-        spark.conf.set("spark.sql.adaptive.enabled", old)
     assert build_jobs == 0
     assert {r.uid for r in rows} == {"08", "08 01", "08 01 11*", "08 01 12"}
 

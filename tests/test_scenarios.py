@@ -5,10 +5,23 @@ validation), electric toothbrush (campus rule overrides city rule)."""
 
 from __future__ import annotations
 
+import itertools
+import random
+from collections import defaultdict
+
 import pytest
+from conftest import job_group
 
 from graph_etl_pipeline_spark.graph.model import PropertyGraph
-from graph_etl_pipeline_spark.graph.reasoning import resolve_streams, validate_avv_paths
+from graph_etl_pipeline_spark.graph.reasoning import (
+    MAX_RULE_DEPTH,
+    resolve_streams,
+    validate_avv_paths,
+)
+
+VERTEX_SCHEMA = "uid string, label string, name string"
+EDGE_SCHEMA = "src_uid string, dst_uid string, rel_type string"
+ANSWER_SCHEMA = "condition_uid string, answer boolean"
 
 
 @pytest.fixture(scope="module")
@@ -36,7 +49,7 @@ def rule_graph(spark):
             # AVV codes
             ("a_0801", "AVVCode", "08 01"),
         ],
-        "uid string, label string, name string",
+        VERTEX_SCHEMA,
     )
     edges = spark.createDataFrame(
         [
@@ -66,7 +79,7 @@ def rule_graph(spark):
             ("i_paint", "a_0801", "REQUIRES_AVV"),
             ("s_schad", "a_0801", "ALLOWS_AVV"),
         ],
-        "src_uid string, dst_uid string, rel_type string",
+        EDGE_SCHEMA,
     )
     return PropertyGraph(vertices=vertices, edges=edges)
 
@@ -76,7 +89,7 @@ def _answers(spark, **by_uid):
     items = list(by_uid.items())
     if "c_battery" in by_uid:
         items.append(("c_battery_campus", by_uid["c_battery"]))
-    return spark.createDataFrame(items, "condition_uid string, answer boolean")
+    return spark.createDataFrame(items, ANSWER_SCHEMA)
 
 
 def test_banana_peel_direct_route(spark, rule_graph):
@@ -142,3 +155,161 @@ def test_avv_validation(spark, rule_graph):
     good_edge = bad_edge.withColumn("dst_uid", F.lit("s_schad"))
     g_good = PropertyGraph(rule_graph.vertices, rule_graph.edges.unionByName(good_edge))
     assert validate_avv_paths(g_good).isEmpty()
+
+
+def test_resolve_streams_job_count_pinned(spark, rule_graph):
+    """Routing is one lazy plan: building it fires no job (no per-level
+    probe or eager checkpoint), and its collect runs a fixed number of
+    jobs whatever the depth of the condition trees."""
+    answers = _answers(spark, c_empty=False, c_dried=False, c_battery=True)
+    with job_group(spark) as jobs:
+        out = resolve_streams(rule_graph, answers)
+        build_jobs = jobs()
+        rows = out.collect()
+        total_jobs = jobs()
+    assert build_jobs == 0
+    assert total_jobs == 5
+    assert sorted(tuple(r) for r in rows) == [
+        ("i_banana", "s_bio", "direct"),
+        ("i_brush", "s_elektro", "rule"),
+        ("i_paint", "s_schad", "rule"),
+    ]
+
+
+def _chain_graph(spark, n_conditions):
+    """One item whose rule is a chain of n always-true conditions ending
+    in a stream: n-1 branch steps from the entry to the last condition,
+    n to the stream."""
+    conds = [f"c{i}" for i in range(n_conditions)]
+    vertices = [
+        ("i", "WasteItem", "i"), ("s", "WasteStream", "s"), ("r", "DisposalRule", "city")
+    ] + [(c, "Condition", c) for c in conds]
+    edges = [("i", "r", "HAS_RULE"), ("r", "c0", "HAS_CONDITION")] + [
+        (a, b, "IF_TRUE") for a, b in zip(conds, conds[1:] + ["s"])
+    ]
+    g = PropertyGraph(
+        spark.createDataFrame(vertices, VERTEX_SCHEMA),
+        spark.createDataFrame(edges, EDGE_SCHEMA),
+    )
+    return g, spark.createDataFrame([(c, True) for c in conds], ANSWER_SCHEMA)
+
+
+def test_rule_depth_budget_fails_loudly(spark):
+    g, answers = _chain_graph(spark, MAX_RULE_DEPTH)
+    assert [tuple(r) for r in resolve_streams(g, answers).collect()] == [("i", "s", "rule")]
+    g, answers = _chain_graph(spark, MAX_RULE_DEPTH + 1)
+    with pytest.raises(Exception, match=f"MAX_RULE_DEPTH={MAX_RULE_DEPTH} exhausted"):
+        resolve_streams(g, answers).collect()
+
+
+# One forced shape per forest (forest k gets shape k % 7), as
+# "src dst rel" edges plus answers. Uid initials give the label:
+# I item, R city rule, Q campus rule, C condition, S stream.
+SHAPES = [
+    # campus beats city
+    ("I R HAS_RULE, R S0 HAS_CONDITION, I Q HAS_RULE, Q S2 HAS_CONDITION", {}),
+    # same-scope outcomes: the smaller stream_uid wins
+    ("I R HAS_RULE, R S2 HAS_CONDITION, I R2 HAS_RULE, R2 S1 HAS_CONDITION", {}),
+    # a rule route beats a direct edge
+    ("I S0 DISPOSED_IN, I R HAS_RULE, R C HAS_CONDITION, C S1 IF_TRUE", {"C": True}),
+    # unanswered condition and dead end: the direct edge stands
+    (
+        "I S0 DISPOSED_IN, I R HAS_RULE, R C HAS_CONDITION, C S1 IF_TRUE, "
+        "R C2 HAS_CONDITION, C2 S2 IF_TRUE",
+        {"C2": False},
+    ),
+    # ambiguous node: both IF_TRUE edges are followed
+    ("I Q HAS_RULE, Q C HAS_CONDITION, C S2 IF_TRUE, C S1 IF_TRUE", {"C": True}),
+    # entry straight at a stream
+    ("I R HAS_RULE, R S1 HAS_CONDITION", {}),
+    # a stream's answered branch is never followed
+    ("I R HAS_RULE, R C HAS_CONDITION, C S0 IF_FALSE, S0 S1 IF_FALSE", {"C": False, "S0": False}),
+]
+LABELS = {
+    "I": ("WasteItem", "item"), "R": ("DisposalRule", "city"),
+    "Q": ("DisposalRule", "campus"), "C": ("Condition", "q"), "S": ("WasteStream", "s"),
+}
+
+
+def _random_forest(rng, k):
+    """Edges and answers of forest k: its forced shape plus two random
+    items with direct edges and rules over random condition trees
+    (unanswered nodes, dead ends, ambiguous branches, entries at
+    streams). Uids are prefixed by the forest, so forests are disjoint."""
+    p = f"f{k:02d}_"
+    text, forced = SHAPES[k % len(SHAPES)]
+    edges = [(p + s, p + d, r) for s, d, r in (t.split() for t in text.split(", "))]
+    answers = {p + c: a for c, a in forced.items()}
+    streams = [f"{p}S{j}" for j in range(3)]
+    ids = itertools.count()
+
+    def tree(depth):
+        if depth == 4 or rng.random() < (0.2 if depth == 0 else 0.4):
+            return rng.choice(streams)
+        c = f"{p}Cr{next(ids)}"
+        if rng.random() < 0.85:
+            answers[c] = rng.random() < 0.5
+        for rel in ("IF_TRUE", "IF_FALSE") + (("IF_TRUE",) if rng.random() < 0.1 else ()):
+            if rng.random() < 0.9:
+                edges.append((c, tree(depth + 1), rel))
+        return c
+
+    for i in range(2):
+        item = f"{p}Ir{i}"
+        edges += [(item, rng.choice(streams), "DISPOSED_IN") for _ in range(rng.choice([0, 1, 2]))]
+        for j in range(rng.choice([0, 1, 1, 2])):
+            rule = f"{p}{rng.choice('RQ')}r{i}{j}"
+            edges.append((item, rule, "HAS_RULE"))
+            edges += [(rule, tree(0), "HAS_CONDITION") for _ in range(rng.choice([1, 1, 2]))]
+    vertices = {u for s, d, _ in edges for u in (s, d)} | set(streams)
+    return [(u, *LABELS[u[len(p)]]) for u in sorted(vertices)], edges, answers
+
+
+def _walk_routes(vertices, edges, answers):
+    """Reference router: per item, walk every rule entry depth-first."""
+    label = {u: (lab, name) for u, lab, name in vertices}
+    out = defaultdict(list)
+    for s, d, r in edges:
+        out[s, r].append(d)
+
+    def walk(node, steps):
+        if label[node][0] == "WasteStream":
+            return [node]
+        if node not in answers:
+            return []
+        nxt = out[node, "IF_TRUE" if answers[node] else "IF_FALSE"]
+        assert not nxt or steps < MAX_RULE_DEPTH
+        return [s for n in nxt for s in walk(n, steps + 1)]
+
+    routes = []
+    for item in sorted({u for u, (lab, _) in label.items() if lab == "WasteItem"}):
+        ruled = [
+            (label[r][1] != "campus", s)
+            for r in out[item, "HAS_RULE"]
+            for c in out[r, "HAS_CONDITION"]
+            for s in walk(c, 0)
+        ]
+        if ruled:
+            routes.append((item, min(ruled)[1], "rule"))
+        else:
+            routes += [(item, s, "direct") for s in out[item, "DISPOSED_IN"]]
+    return sorted(routes)
+
+
+def test_resolve_streams_matches_reference_walk(spark):
+    rng = random.Random(20240917)
+    vertices, edges, answers = [], [], {}
+    for k in range(49):
+        v, e, a = _random_forest(rng, k)
+        vertices += v
+        edges += e
+        answers.update(a)
+    g = PropertyGraph(
+        spark.createDataFrame(vertices, VERTEX_SCHEMA),
+        spark.createDataFrame(edges, EDGE_SCHEMA),
+    )
+    out = resolve_streams(g, spark.createDataFrame(list(answers.items()), ANSWER_SCHEMA))
+    got = sorted(tuple(r) for r in out.collect())
+    want = _walk_routes(vertices, edges, answers)
+    assert {via for *_, via in want} == {"direct", "rule"}
+    assert got == want

@@ -1133,3 +1133,25 @@ def test_three_batch_fixture_replaces_non_directory_src(spark, sf_dir, tmp_path)
     (tmp_path / "src").write_text("stale")
     src = stage_three_batch_fixture(spark, sf_dir, str(tmp_path), [])
     assert sorted(os.listdir(src)) == ["a-events.parquet"]
+
+
+def test_three_batch_fixture_rebuilds_on_changed_marker_rows(spark, sf_dir, tmp_path):
+    """Same-named marker files with different rows are a mismatch too:
+    the second staging must serve the new rows, not the first call's;
+    staging the same rows again reuses the directory."""
+    import datetime
+
+    import pyarrow.parquet as pq
+
+    from graph_etl_pipeline_spark.streaming.jobs import stage_three_batch_fixture
+
+    def staged(event_id):
+        row = (event_id, datetime.datetime(2030, 1, 1), -1, "wm_advance", 0.0)
+        src = stage_three_batch_fixture(spark, sf_dir, str(tmp_path), [("b-advance", [row])])
+        path = os.path.join(src, "b-advance.parquet")
+        return pq.read_table(path)["event_id"].to_pylist(), os.stat(path).st_ctime_ns
+
+    assert staged(-1)[0] == [-1]
+    ids, built = staged(-2)
+    assert ids == [-2]
+    assert staged(-2) == ([-2], built)
