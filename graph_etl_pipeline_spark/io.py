@@ -175,11 +175,28 @@ def tables(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
     return [table(spark, sf_dir, n) for n in names]
 
 
-# Scratch root for materialized shared subplans (keyed by pid; stale pid
-# dirs are reaped on next use).
+# The one scratch root: every staged file, fixture and materialized
+# subplan lives in a flat `{name}-{key}-{pid}` dir directly under it
+# (see scratch_dir); dirs of dead pids are reaped on next use.
+import hashlib as _hashlib
 import os as _os
 
 SCRATCH_DIR = _os.path.join(_os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))), ".cache", "scratch")
+
+
+def sf_key(sf_dir: str) -> str:
+    """Scratch key of a data root: distinct roots sharing a basename must
+    not share staged copies."""
+    return _hashlib.md5(_os.path.abspath(sf_dir).encode()).hexdigest()[:12]
+
+
+def scratch_dir(name: str, key: str) -> str:
+    """Path of this process's scratch dir `SCRATCH_DIR/{name}-{key}-{pid}`.
+    The pid suffix keeps concurrent processes off each other's files and
+    is what the reaper parses: dead-pid dirs are removed on every call.
+    The dir itself is not created; writers create it."""
+    _reap_stale_pid_dirs(SCRATCH_DIR)
+    return _os.path.join(SCRATCH_DIR, f"{name}-{key}-{_os.getpid()}")
 
 
 def _pid_alive(pid: int) -> bool:
@@ -262,13 +279,12 @@ def materialize(df: DataFrame, name: str) -> DataFrame:
     production pipeline amortizes a shared derived table (the shingle
     index is built once per corpus, not once per downstream query).
     Repeat runs in one process therefore measure steady-state: first
-    execution pays the build, later executions scan. Paths are pid-keyed
-    so concurrent runs don't race; dirs of dead pids are reaped lazily."""
-    import hashlib
+    execution pays the build, later executions scan. The path comes
+    from scratch_dir, so concurrent runs don't race and dirs of dead pids
+    are reaped."""
     import re
 
     spark = df.sparkSession
-    _reap_stale_pid_dirs(SCRATCH_DIR)
     # exprIds (#123) and higher-order-function lambda variables are
     # allocated from global counters per-analysis, so two builds of the
     # SAME query differ textually; canonicalize both before hashing or
@@ -301,8 +317,8 @@ def materialize(df: DataFrame, name: str) -> DataFrame:
     # the plan string renders a parquet relation WITHOUT its path — the
     # same query over two scale factors would collide; key the inputs in
     files = "\n".join(sorted(df.inputFiles()))
-    digest = hashlib.md5(f"{plan}\0{files}".encode()).hexdigest()[:12]
-    dest = _os.path.join(SCRATCH_DIR, f"{name}-{digest}-{_os.getpid()}")
+    digest = _hashlib.md5(f"{plan}\0{files}".encode()).hexdigest()[:12]
+    dest = scratch_dir(name, digest)
     if not _os.path.exists(_os.path.join(dest, "_SUCCESS")):
         df.write.mode("overwrite").parquet(dest)
     return spark.read.parquet(dest)

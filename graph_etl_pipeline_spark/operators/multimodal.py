@@ -23,7 +23,6 @@ from collections.abc import Iterator
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 try:  # real image codec, if present
     from PIL import Image  # type: ignore  # noqa: F401
@@ -254,18 +253,6 @@ def frame_sample_df(blobs: DataFrame, n_frames: int = 4, frame_size: int = 16) -
             yield pd.DataFrame(out)
 
     return blobs.mapInPandas(_sample, schema=FRAME_SCHEMA)
-
-
-def with_media_metadata(df: DataFrame, blob_col: str, mime: str) -> DataFrame:
-    """Attach the typed metadata struct that travels beside a blob column
-    (projectable without touching blob bytes)."""
-    return df.withColumn(
-        "media_meta",
-        F.struct(
-            F.lit(mime).alias("mime"),
-            F.length(F.col(blob_col)).cast("bigint").alias("n_bytes"),
-        ),
-    )
 
 
 AUDIO_FRAME = 256  # samples per analysis frame (hop = frame: no overlap)

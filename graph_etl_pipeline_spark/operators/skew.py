@@ -1,9 +1,10 @@
 """Skew-mitigation utilities (SURVEY.md §4.2 / 100 TB design).
 
 AQE's skew-join splitting handles most cases at runtime
-(spark.sql.adaptive.skewJoin.enabled, on in session.py); these helpers
-cover the two places AQE can't: skewed AGGREGATION keys (two-phase salted
-aggregation) and broadcast-ineligible skewed joins (salt × replicate).
+(spark.sql.adaptive.skewJoin.enabled, on in session.py); this helper
+covers the place AQE can't: skewed AGGREGATION keys (two-phase salted
+aggregation). Broadcast-ineligible skewed joins are salted
+deterministically in queries/joins.py:join_salted_skew.
 """
 
 from __future__ import annotations
@@ -36,22 +37,3 @@ def salted_agg(
     partial = salted.groupBy(*keys, "_salt").agg(*partial_aggs)
     return partial.groupBy(*keys).agg(*aggs)
 
-
-def salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    salt_buckets: int = 8,
-) -> DataFrame:
-    """Skewed equi-join: salt the (big, skewed) left side randomly and
-    REPLICATE the right side across all salt values, then join on
-    (key, salt). Turns one hot partition into `salt_buckets` even ones at
-    the cost of duplicating the right side — use when the right side is
-    too big to broadcast but small enough to replicate."""
-    salted_left = left.withColumn("_salt", (F.rand(seed=42) * salt_buckets).cast("int"))
-    replicated_right = right.crossJoin(
-        F.broadcast(
-            left.sparkSession.range(salt_buckets).select(F.col("id").cast("int").alias("_salt"))
-        )
-    )
-    return salted_left.join(replicated_right, [key, "_salt"]).drop("_salt")

@@ -216,6 +216,27 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stats.join(tri)  # two 1-row sides: broadcast scalar combine
 
 
+def _both_ways(edges: DataFrame) -> DataFrame:
+    """Directed view ``(s, t)`` of the undirected edge list ``edges(u, v)``:
+    each edge once in each direction."""
+    return edges.select(F.col("u").alias("s"), F.col("v").alias("t")).unionAll(
+        edges.select(F.col("v").alias("s"), F.col("u").alias("t"))
+    )
+
+
+def _widen(df: DataFrame, key: str) -> DataFrame:
+    """Hash ``df`` by ``key`` at ``spark.sql.shuffle.partitions``, ahead of
+    a join that explodes it (wedges, basket pairs, frontier expansion,
+    hop bitsets). The planner sizes such a probe by its input bytes,
+    which are small, so it keeps the scan's few partitions and the
+    blow-up runs near-serially at any core count: at sf0.1 the jaccard
+    wedge join made 11.1M rows from 182k edge rows on 2 tasks. The width
+    is the session's, never a local constant, and at real scale this is
+    the exchange a shuffle join on ``key`` would insert anyway."""
+    width = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return df.repartition(width, key)
+
+
 def _oriented_triangles(edges: DataFrame) -> DataFrame:
     """Every triangle of the undirected edge list ``edges(u, v)`` exactly
     once, as (x, y, z) under the degree-rank orientation — the shared
@@ -238,17 +259,7 @@ def _oriented_triangles(edges: DataFrame) -> DataFrame:
         F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("src"),
         F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
     )
-    # r18 (guide §2.5/§3.1, the graph_jaccard_similarity fix): the wedge
-    # join EXPLODES the oriented edge list (~74× at sf0.1: 6.76M wedge
-    # rows from 91k edges, measured) but the planner sizes it by input
-    # bytes, broadcasts the build sides, and runs the probe over the
-    # SCAN's partitioning — 2 tasks at sf0.1, near-serial at any core
-    # count. Hash the PROBE branch by its join key at the session's
-    # configured shuffle width (conf/env-derived; at real scale the same
-    # exchange is exactly what a shuffle join on dst would insert, so it
-    # is reused, never extra).
-    wedge_width = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    e1 = oriented.repartition(wedge_width, "dst").alias("e1")
+    e1 = _widen(oriented, "dst").alias("e1")
     e2, e3 = oriented.alias("e2"), oriented.alias("e3")
     wedges = e1.join(e2, F.col("e1.dst") == F.col("e2.src")).select(
         F.col("e1.src").alias("x"), F.col("e2.src").alias("y"), F.col("e2.dst").alias("z")
@@ -431,10 +442,7 @@ def interaction_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def bellman_ford(
-    bi: DataFrame,
-    dist: DataFrame,
-    max_rounds: int | None = None,
-    checkpoint: bool = True,
+    bi: DataFrame, dist: DataFrame, max_rounds: int | None = None
 ) -> DataFrame:
     """Unit-weight Bellman-Ford over a directed edge list ``bi(s, t)``
     from seed distances ``dist(node, dist)``. Each round relaxes every
@@ -447,9 +455,12 @@ def bellman_ford(
     termination is structural, not budgeted (unlike star contraction,
     whose round budget raises when it runs out). An integer
     bound reproduces the fixed-round contract the unrolled-CTE oracle
-    checks. localCheckpoint truncates the per-round lineage so round N
-    never re-executes rounds 1..N-1 (constant plan size, the
-    connected_components discipline)."""
+    checks.
+
+    Only the fixpoint mode checkpoints each round: its ``isEmpty`` probe
+    runs a job per round, and without the checkpoint round N would
+    re-execute rounds 1..N-1. The bounded mode stays one lazy plan, in
+    which shuffle-stage reuse already dedups the linear dist lineage."""
     rounds = 0
     while max_rounds is None or rounds < max_rounds:
         relaxed = dist.join(bi, dist.node == bi.s).select(
@@ -460,9 +471,8 @@ def bellman_ford(
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
         )
-        if checkpoint:
-            nxt = nxt.localCheckpoint(eager=True)
         if max_rounds is None:
+            nxt = nxt.localCheckpoint(eager=True)
             improved = (
                 nxt.join(
                     dist.withColumnRenamed("dist", "prev"), "node", "left"
@@ -535,19 +545,14 @@ def graph_sssp_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = interaction_edges(spark, sf_dir)
     # Pin the derived edge list once: every relaxation round joins it, and
     # without this the window+distinct chain derivation re-executes per
-    # round (measured 3.4 s → 2.0 s at sf0.1). Rounds themselves stay
-    # lazy — within the single bounded job, shuffle-stage reuse already
-    # dedups the linear dist lineage, so per-round eager checkpoints only
-    # add job-submission overhead here (the fixpoint mode needs them for
-    # its isEmpty probes and defaults to checkpoint=True).
-    bi = edges.select(F.col("u").alias("s"), F.col("v").alias("t")).unionAll(
-        edges.select(F.col("v").alias("s"), F.col("u").alias("t"))
-    ).localCheckpoint(eager=True)
+    # round (measured 3.4 s → 2.0 s at sf0.1). The bounded rounds
+    # themselves stay one lazy plan (see bellman_ford).
+    bi = _both_ways(edges).localCheckpoint(eager=True)
     dist = (
         bi.agg(F.min("s").alias("node"))
         .select("node", F.lit(0).cast("long").alias("dist"))
     )
-    return bellman_ford(bi, dist, max_rounds=SSSP_ROUNDS, checkpoint=False)
+    return bellman_ford(bi, dist, max_rounds=SSSP_ROUNDS)
 
 
 COPURCHASE_MIN_SUPPORT = 2
@@ -609,17 +614,9 @@ def graph_copurchase_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     basket = materialize(
         li.select("l_orderkey", "l_partkey").distinct(), "copurchase_basket"
     )
-    # r18 (guide §2.5/§3.1, the graph_jaccard_similarity fix): the basket
-    # self-join explodes k-item baskets into k(k-1)/2 pairs, but the
-    # planner sizes the probe by the materialized table's BYTES and runs
-    # it over the parquet scan's few partitions (5 at sf0.1 — measured
-    # 2.0 s -> 0.94 s min-of-3 once hashed to the session's shuffle
-    # width). The width is conf/env-derived, never a local constant; the
-    # hash-by-basket-key layout is what a shuffle join would pick anyway
-    # at real scale, and the tiled hot branch's per-key window reuses it.
-    basket = basket.repartition(
-        int(spark.conf.get("spark.sql.shuffle.partitions")), "l_orderkey"
-    )
+    # k-item baskets explode into k(k-1)/2 pairs; the tiled hot branch's
+    # per-key window reuses this layout.
+    basket = _widen(basket, "l_orderkey")
     pairs = bounded_self_pairs(
         basket, "l_orderkey", "l_partkey", COPURCHASE_BASKET_CAP, _basket_pair_select
     )
@@ -720,12 +717,7 @@ def graph_kcore_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def kcore_peel(
-    edges: DataFrame,
-    k: int,
-    max_rounds: int | None = None,
-    checkpoint: bool = True,
-) -> DataFrame:
+def kcore_peel(edges: DataFrame, k: int, max_rounds: int | None = None) -> DataFrame:
     """Iterative k-core peel over an undirected edge list ``edges(u, v)``:
     each round drops every node whose surviving degree is < k, plus its
     edges. Returns the surviving edge list.
@@ -758,8 +750,7 @@ def kcore_peel(
         edges = edges.join(
             dropped.withColumnRenamed("node", "u"), "u", "left_anti"
         ).join(dropped.withColumnRenamed("node", "v"), "v", "left_anti")
-        if checkpoint:
-            edges = edges.localCheckpoint(eager=True)
+        edges = edges.localCheckpoint(eager=True)
         rounds += 1
     return edges
 
@@ -817,32 +808,36 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds unroll into the closed-form oracle (the pagerank/SSSP
     convention); convergence looping would reuse bellman_ford's
     early-exit pattern.""".replace("{LPA_ROUNDS}", str(LPA_ROUNDS))
-    from pyspark.sql import Window
-
     edges = interaction_edges(spark, sf_dir)
-    bi = edges.select(F.col("u").alias("s"), F.col("v").alias("t")).unionAll(
-        edges.select(F.col("v").alias("s"), F.col("u").alias("t"))
-    ).localCheckpoint(eager=True)
+    bi = _both_ways(edges).localCheckpoint(eager=True)
     labels = bi.select(F.col("s").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
     for _ in range(LPA_ROUNDS):
-        cnt = (
-            bi.join(labels, labels.node == bi.s)
-            .groupBy(F.col("t").alias("cnode"), "label")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        w = Window.partitionBy("cnode").orderBy(F.desc("c"), F.asc("label"))
-        pick = (
-            cnt.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select(F.col("cnode").alias("node"), F.col("label").alias("new_label"))
-        )
-        labels = (
-            labels.join(pick, "node", "left")
-            .select("node", F.coalesce("new_label", "label").alias("label"))
-        )
+        labels = _lpa_round(bi, labels)
     return labels
+
+
+def _lpa_round(bi: DataFrame, labels: DataFrame) -> DataFrame:
+    """One synchronous plurality vote over ``bi(s, t)``: each node adopts
+    the label most frequent among its neighbors' ``labels(node, label)``,
+    ties to the smallest label; a node with no neighbors keeps its own."""
+    from pyspark.sql import Window
+
+    cnt = (
+        bi.join(labels, labels.node == bi.s)
+        .groupBy(F.col("t").alias("cnode"), "label")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+    w = Window.partitionBy("cnode").orderBy(F.desc("c"), F.asc("label"))
+    pick = (
+        cnt.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select(F.col("cnode").alias("node"), F.col("label").alias("new_label"))
+    )
+    return labels.join(pick, "node", "left").select(
+        "node", F.coalesce("new_label", "label").alias("label")
+    )
 
 
 JACCARD_MIN_COMMON = 1  # wedge support floor for candidate pairs
@@ -897,24 +892,9 @@ def graph_jaccard_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from graph_etl_pipeline_spark.operators.pairs import bounded_self_pairs
 
     edges = interaction_edges(spark, sf_dir)
-    # r18 (guide §2.5/§3.1): hash the undirected view by the WEDGE KEY at
-    # the session's configured shuffle width BEFORE the checkpoint. The
-    # edge list is tiny in bytes (a few MB at sf0.1) but the wedge join
-    # EXPLODES it ~60× (11.1M wedge rows from 182k edge rows, measured),
-    # and size-based planning cannot see that: the planner broadcasts one
-    # side and runs the probe over the checkpoint's SCAN partitioning —
-    # 2 tasks at sf0.1, i.e. the Σd² wedge generation ran near-serially
-    # at any core count (the bench's 8-vs-32 ratio of 0.91 was this).
-    # The width comes from spark.sql.shuffle.partitions (conf/env-derived,
-    # scales with the deployment), never a local constant; at real scale
-    # the same hash partitioning is what a shuffle join would pick anyway.
-    wedge_width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    bi = (
-        edges.select(F.col("u").alias("s"), F.col("v").alias("t"))
-        .unionAll(edges.select(F.col("v").alias("s"), F.col("u").alias("t")))
-        .repartition(wedge_width, "t")
-        .localCheckpoint(eager=True)
-    )
+    # widened by the wedge key BEFORE the checkpoint, so the checkpoint
+    # keeps the layout
+    bi = _widen(_both_ways(edges), "t").localCheckpoint(eager=True)
     deg = bi.groupBy(F.col("s").alias("node")).agg(F.count(F.lit(1)).alias("d"))
     wedge_pairs = bounded_self_pairs(
         bi,
@@ -1022,9 +1002,7 @@ def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     adjacency table is the bucketed/bucket-joined artifact every epoch
     reuses.""".replace("{WALK_STEPS}", str(WALK_STEPS))
     edges = interaction_edges(spark, sf_dir)
-    bi = edges.select(F.col("u").alias("s"), F.col("v").alias("t")).unionAll(
-        edges.select(F.col("v").alias("s"), F.col("u").alias("t"))
-    )
+    bi = _both_ways(edges)
     adj = bi.groupBy(F.col("s").alias("node")).agg(
         F.array_sort(F.collect_list("t")).alias("nb")
     ).localCheckpoint(eager=True)
@@ -1278,36 +1256,17 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     intra-edge counting is ONE join of the edge list to the label table
     on each endpoint (label-equality filtered), and degree mass is a
     map-combined count — everything |E|-bounded, reduced to one row."""
-    from pyspark.sql import Window
-
     edges = interaction_edges(spark, sf_dir)
     # ONE LPA round (not graph_label_propagation's LPA_ROUNDS=2): on the
     # dense per-hour chain graph the plurality vote collapses to a single
     # label by round 2 (Q degenerates to exactly 0 — 4m·m == (2m)²); the
     # round-1 partition has real communities at every test SF, which is
     # what a quality score should score. Same vote + tie-break as LPA.
-    bi0 = edges.select(F.col("u").alias("s"), F.col("v").alias("t")).unionAll(
-        edges.select(F.col("v").alias("s"), F.col("u").alias("t"))
-    )
+    bi0 = _both_ways(edges)
     l0 = bi0.select(F.col("s").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
-    cnt = (
-        bi0.join(l0, l0.node == bi0.s)
-        .groupBy(F.col("t").alias("cnode"), "label")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    wv = Window.partitionBy("cnode").orderBy(F.desc("c"), F.asc("label"))
-    pick = (
-        cnt.withColumn("rn", F.row_number().over(wv))
-        .filter(F.col("rn") == 1)
-        .select(F.col("cnode").alias("node"), F.col("label").alias("new_label"))
-    )
-    labels = (
-        l0.join(pick, "node", "left")
-        .select("node", F.coalesce("new_label", "label").alias("label"))
-        .localCheckpoint(eager=False)
-    )
+    labels = _lpa_round(bi0, l0).localCheckpoint(eager=False)
     bi = edges.select(F.col("u").alias("s")).unionAll(
         edges.select(F.col("v").alias("s"))
     )
@@ -1429,18 +1388,8 @@ def graph_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     edges = interaction_edges(spark, sf_dir)
-    # r18: hash by the hop-join key at the configured shuffle width (the
-    # graph_jaccard_similarity discipline). Each hop joins bi against the
-    # node-sized bitset table — the planner broadcasts the bitsets and
-    # runs the probe over bi's checkpoint partitioning, and the hop
-    # output is |E|·chunks rows (~4.4M at sf0.1) from a 182k-row, few-MB
-    # input: left at the scan's 2 partitions the OR-fold ran near-serial.
-    bi = (
-        edges.select(F.col("u").alias("s"), F.col("v").alias("t"))
-        .unionAll(edges.select(F.col("v").alias("s"), F.col("u").alias("t")))
-        .repartition(int(spark.conf.get("spark.sql.shuffle.partitions")), "t")
-        .localCheckpoint(eager=True)
-    )
+    # each hop joins bi against the broadcast bitsets: |E|·chunks rows
+    bi = _widen(_both_ways(edges), "t").localCheckpoint(eager=True)
     # Dense vertex index 0..|V|-1 (deterministic: ordered by node id).
     # |V| rows through one window — a dimension build, broadcast below;
     # at larger |V| the index comes from the two-level prefix machinery
@@ -1555,16 +1504,8 @@ def graph_closeness_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-identical). BFS rounds are the same composite-key min-fold as
     the harmonic operator; each round shuffles only the live frontier."""
     edges = interaction_edges(spark, sf_dir)
-    # r18: hash by the expansion-join key at the configured shuffle width
-    # (the graph_jaccard_similarity discipline): each round's frontier
-    # join explodes frontier rows by node degree while the planner sizes
-    # the probe by bi's few MB and few scan partitions.
-    bi = (
-        edges.select(F.col("u").alias("s"), F.col("v").alias("t"))
-        .unionAll(edges.select(F.col("v").alias("s"), F.col("u").alias("t")))
-        .repartition(int(spark.conf.get("spark.sql.shuffle.partitions")), "s")
-        .localCheckpoint(eager=True)
-    )
+    # each round's frontier join explodes frontier rows by node degree
+    bi = _widen(_both_ways(edges), "s").localCheckpoint(eager=True)
     verts = bi.select(F.col("s").alias("node")).distinct()
     srcs = (
         verts.orderBy(
@@ -1711,13 +1652,7 @@ def graph_betweenness_stress_sampled(spark: SparkSession, sf_dir: str) -> DataFr
     from pyspark.sql import Window
 
     edges = interaction_edges(spark, sf_dir)
-    # r18: same frontier-expansion width fix as graph_closeness_sampled.
-    bi = (
-        edges.select(F.col("u").alias("s"), F.col("v").alias("t"))
-        .unionAll(edges.select(F.col("v").alias("s"), F.col("u").alias("t")))
-        .repartition(int(spark.conf.get("spark.sql.shuffle.partitions")), "s")
-        .localCheckpoint(eager=True)
-    )
+    bi = _widen(_both_ways(edges), "s").localCheckpoint(eager=True)
     verts = bi.select(F.col("s").alias("node")).distinct()
     pv = (
         verts.orderBy(
@@ -1992,11 +1927,7 @@ def _anf_denominators(
         memo = _ANF_DENOMS.get(key)
         if memo is not None:
             return memo
-    bi = (
-        edges.select(F.col("u").alias("s"), F.col("v").alias("t"))
-        .unionAll(edges.select(F.col("v").alias("s"), F.col("u").alias("t")))
-        .localCheckpoint(eager=True)
-    )
+    bi = _both_ways(edges).localCheckpoint(eager=True)
     verts = bi.select(F.col("s").alias("node")).distinct()
     lane = lambda start: F.conv(  # noqa: E731
         F.substring(F.md5(F.concat(F.lit("anf:"), F.col("node").cast("string"))), start, 8),

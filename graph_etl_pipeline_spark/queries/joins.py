@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from graph_etl_pipeline_spark.functions.numeric import dec
-from graph_etl_pipeline_spark.io import table
+from graph_etl_pipeline_spark.io import scratch_dir, sf_key, table
 from graph_etl_pipeline_spark.registry import register
 
 from graph_etl_pipeline_spark.queries._sql import REVENUE as _REVENUE_SQL, osum as _osum
@@ -505,21 +505,25 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
 
-    import hashlib
     import os
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    li_name = f"li_bkt_{key}_{os.getpid()}"
-    o_name = f"o_bkt_{key}_{os.getpid()}"
+    # External tables: the files live in reaped scratch dirs, never in
+    # the CWD's spark-warehouse. The catalog names them after their dirs,
+    # with '-' (not legal in an identifier) as '_'.
+    li_path = scratch_dir("li_bkt", sf_key(sf_dir))
+    o_path = scratch_dir("o_bkt", sf_key(sf_dir))
+    li_name, o_name = (
+        os.path.basename(p).replace("-", "_") for p in (li_path, o_path)
+    )
     cat = spark.catalog
     if not cat.tableExists(li_name):
         li.write.bucketBy(BUCKETS, "l_orderkey").sortBy("l_orderkey").mode(
             "overwrite"
-        ).saveAsTable(li_name)
+        ).option("path", li_path).saveAsTable(li_name)
     if not cat.tableExists(o_name):
         o.write.bucketBy(BUCKETS, "o_orderkey").sortBy("o_orderkey").mode(
             "overwrite"
-        ).saveAsTable(o_name)
+        ).option("path", o_path).saveAsTable(o_name)
 
     old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from graph_etl_pipeline_spark.io import table
+from graph_etl_pipeline_spark.io import scratch_dir, sf_key, table
 from graph_etl_pipeline_spark.registry import register
 from graph_etl_pipeline_spark.sinks.upsert import merge_upsert, upsert_edges
 
@@ -181,15 +181,10 @@ def sink_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning by a high-cardinality key (user_id) would instead create
     the canonical small-files pathology. The write keeps the upstream
     task parallelism per partition directory."""
-    import hashlib
     import os
 
-    from graph_etl_pipeline_spark.io import SCRATCH_DIR, _reap_stale_pid_dirs
-
     ev = table(spark, sf_dir, "events")
-    _reap_stale_pid_dirs(SCRATCH_DIR)
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    dest = os.path.join(SCRATCH_DIR, f"part_events-{key}-{os.getpid()}")
+    dest = scratch_dir("part_events", sf_key(sf_dir))
     if not os.path.exists(os.path.join(dest, "_SUCCESS")):
         ev.select("event_id", "user_id", "value", "event_type").write.mode(
             "overwrite"
@@ -252,16 +247,11 @@ def sink_zorder_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     model at 100 TB: one range exchange + in-task sort per rewrite,
     amortized over every 2-D query that follows; the Z key is pure
     bitwise codegen, no UDF."""
-    import hashlib
     import os
-
-    from graph_etl_pipeline_spark.io import SCRATCH_DIR, _reap_stale_pid_dirs
 
     ev = table(spark, sf_dir, "events")
     hour = (F.floor(F.unix_timestamp("ts")) / 3600).cast("long")
-    _reap_stale_pid_dirs(SCRATCH_DIR)
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    dest = os.path.join(SCRATCH_DIR, f"zorder_events-{key}-{os.getpid()}")
+    dest = scratch_dir("zorder_events", sf_key(sf_dir))
     if not os.path.exists(os.path.join(dest, "_SUCCESS")):
         clustered = (
             ev.select(
@@ -342,11 +332,7 @@ def sink_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(version size), no log replay — and the v1⋈latest diff shuffles on
     the key once. Version retention/compaction is the state-table story
     (size-derived write width, streaming/jobs.py)."""
-    import hashlib
     import os
-
-    from graph_etl_pipeline_spark.io import SCRATCH_DIR, _reap_stale_pid_dirs
-    from graph_etl_pipeline_spark.sinks.upsert import merge_upsert
 
     # floor(x·100 + 0.5): the SAME IEEE expression in both engines — a bare
     # cast would TRUNCATE here and ROUND in DuckDB, drifting 1 cent on
@@ -357,9 +343,7 @@ def sink_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             "bal_cents"
         ),
     )
-    _reap_stale_pid_dirs(SCRATCH_DIR)
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    root = os.path.join(SCRATCH_DIR, f"ttravel_customer-{key}-{os.getpid()}")
+    root = scratch_dir("ttravel_customer", sf_key(sf_dir))
 
     def version_dir(v: int) -> str:
         return os.path.join(root, f"v{v}")
@@ -444,16 +428,11 @@ def sink_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     from table statistics (target bytes / avg row width) and compaction
     runs per-partition-predicate so only fragmented partitions rewrite;
     both reduce to this same exchange shape."""
-    import hashlib
     import os
 
-    from graph_etl_pipeline_spark.io import SCRATCH_DIR, _reap_stale_pid_dirs
-
     ev = table(spark, sf_dir, "events").select("event_id", "value")
-    _reap_stale_pid_dirs(SCRATCH_DIR)
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    frag = os.path.join(SCRATCH_DIR, f"compact_frag-{key}-{os.getpid()}")
-    packed = os.path.join(SCRATCH_DIR, f"compact_out-{key}-{os.getpid()}")
+    frag = scratch_dir("compact_frag", sf_key(sf_dir))
+    packed = scratch_dir("compact_out", sf_key(sf_dir))
     if not os.path.exists(os.path.join(frag, "_SUCCESS")):
         ev.repartition(COMPACT_FRAG_FILES).write.mode("overwrite").parquet(frag)
     if not os.path.exists(os.path.join(packed, "_SUCCESS")):
@@ -533,15 +512,10 @@ def sink_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     and measures the identical row. Scale: vacuum is a metadata
     operation (list + delete) — zero data movement, zero shuffles; the
     version writes it reclaims were each one MERGE exchange."""
-    import hashlib
     import os
     import shutil
 
-    from graph_etl_pipeline_spark.io import SCRATCH_DIR, _reap_stale_pid_dirs
-
-    _reap_stale_pid_dirs(SCRATCH_DIR)
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    root = os.path.join(SCRATCH_DIR, f"vacuum_tbl-{key}-{os.getpid()}")
+    root = scratch_dir("vacuum_tbl", sf_key(sf_dir))
 
     def vdir(i: int) -> str:
         return os.path.join(root, f"v{i}")
@@ -621,17 +595,12 @@ def sink_schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     the union in the metastore/Delta log instead of per-query footer
     inference, but the read semantics certified here are identical.
     The aggregation is one map-combined pass over the merged scan."""
-    import hashlib
     import os
-
-    from graph_etl_pipeline_spark.io import SCRATCH_DIR, _reap_stale_pid_dirs
 
     od = table(spark, sf_dir, "orders")
     cents = F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long").alias("cents")
-    _reap_stale_pid_dirs(SCRATCH_DIR)
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    v1 = os.path.join(SCRATCH_DIR, f"schevo_v1-{key}-{os.getpid()}")
-    v2 = os.path.join(SCRATCH_DIR, f"schevo_v2-{key}-{os.getpid()}")
+    v1 = scratch_dir("schevo_v1", sf_key(sf_dir))
+    v2 = scratch_dir("schevo_v2", sf_key(sf_dir))
     if not os.path.exists(os.path.join(v1, "_SUCCESS")):
         (
             od.filter(F.col("o_orderkey") % 2 == 0)
@@ -671,15 +640,9 @@ MANIFEST_STRAY_CENTS = 10**12  # sentinel rows in the planted in-flight file
 
 
 def manifest_swap_root(sf_dir: str) -> str:
-    """Content-addressed scratch root for the manifest-swap table (shared
-    with the planted-fixture tests)."""
-    import hashlib
-    import os
-
-    from graph_etl_pipeline_spark.io import SCRATCH_DIR
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    return os.path.join(SCRATCH_DIR, f"manifest_swap-{key}-{os.getpid()}")
+    """Scratch root for the manifest-swap table (shared with the
+    planted-fixture tests)."""
+    return scratch_dir("manifest_swap", sf_key(sf_dir))
 
 
 @register(
@@ -724,9 +687,6 @@ def sink_manifest_atomic_swap(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json
     import os
 
-    from graph_etl_pipeline_spark.io import SCRATCH_DIR, _reap_stale_pid_dirs
-
-    _reap_stale_pid_dirs(SCRATCH_DIR)
     root = manifest_swap_root(sf_dir)
     data_dir = os.path.join(root, "data")
     pointer = os.path.join(root, "_CURRENT")
@@ -817,13 +777,7 @@ DPO_BUMP_CENTS = 700  # the v2 'O'-partition batch bumps every row by this
 def dpo_root(sf_dir: str) -> str:
     """Scratch root for the dynamic-partition-overwrite table (shared
     with the planted-fixture tests)."""
-    import hashlib
-    import os
-
-    from graph_etl_pipeline_spark.io import SCRATCH_DIR
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    return os.path.join(SCRATCH_DIR, f"dpo-{key}-{os.getpid()}")
+    return scratch_dir("dpo", sf_key(sf_dir))
 
 
 @register(
@@ -865,9 +819,6 @@ def sink_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFr
     made partition-scoped and loss-proof."""
     import os
 
-    from graph_etl_pipeline_spark.io import SCRATCH_DIR, _reap_stale_pid_dirs
-
-    _reap_stale_pid_dirs(SCRATCH_DIR)
     root = dpo_root(sf_dir)
     tbl = os.path.join(root, "orders_by_status")
 

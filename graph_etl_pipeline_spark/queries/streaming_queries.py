@@ -11,7 +11,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from graph_etl_pipeline_spark.io import table
+from graph_etl_pipeline_spark.io import scratch_dir, sf_key, table
 from graph_etl_pipeline_spark.queries._sql import osum, sdec
 from graph_etl_pipeline_spark.registry import register
 from graph_etl_pipeline_spark.streaming.jobs import (
@@ -108,17 +108,10 @@ def stream_incremental_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(None).cast("double").alias("last_value"),
     )
 
-    import os
-
-    from graph_etl_pipeline_spark.io import SCRATCH_DIR, _reap_stale_pid_dirs
-
     # pid-keyed checkpoint under the reaped scratch root (not a leaked
     # tempfile.mkdtemp): dead-process checkpoints get collected like
     # every other scratch dir.
-    _reap_stale_pid_dirs(SCRATCH_DIR)
-    ckpt = os.path.join(
-        SCRATCH_DIR, f"stream_ckpt_{uuid.uuid4().hex[:8]}-{os.getpid()}"
-    )
+    ckpt = scratch_dir("stream_ckpt", uuid.uuid4().hex[:8])
     return incremental_upsert(
         events_stream(spark, sf_dir),
         existing,
@@ -398,16 +391,13 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming plan itself (watermark + windowed agg) is the exact shape
     that runs unbounded at 100 TB/day."""
     import datetime
-    import hashlib
     import os
 
-    from graph_etl_pipeline_spark.io import SCRATCH_DIR
     from graph_etl_pipeline_spark.streaming.jobs import (
         dec, stage_three_batch_fixture,
     )
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    root = os.path.join(SCRATCH_DIR, f"wmlate_{key}-{os.getpid()}")
+    root = scratch_dir("wmlate", sf_key(sf_dir))
     src = stage_three_batch_fixture(
         spark,
         sf_dir,
@@ -585,14 +575,11 @@ def stream_left_join_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     state is bounded by the 30-minute horizon plus watermark delay, so
     state size tracks ingest RATE, not history."""
     import datetime
-    import hashlib
     import os
 
-    from graph_etl_pipeline_spark.io import SCRATCH_DIR
     from graph_etl_pipeline_spark.streaming.jobs import stage_three_batch_fixture
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    root = os.path.join(SCRATCH_DIR, f"lojto_{key}-{os.getpid()}")
+    root = scratch_dir("lojto", sf_key(sf_dir))
 
     # per following batch: one even (click-side) and one odd (conv-side)
     # id, both at tmax + 1h — raises BOTH per-input watermarks. DISTINCT
@@ -693,17 +680,14 @@ def _run_session_fixture(spark, sf_dir, root_prefix, sink_prefix, operator):
     gaps-and-islands sessionization. One copy so the two operators'
     pinned output-equality contract cannot drift on fixture details."""
     import datetime
-    import hashlib
     import os
 
-    from graph_etl_pipeline_spark.io import SCRATCH_DIR
     from graph_etl_pipeline_spark.streaming.jobs import (
         stage_three_batch_fixture,
         stream_shuffle_partitions,
     )
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    root = os.path.join(SCRATCH_DIR, f"{root_prefix}_{key}-{os.getpid()}")
+    root = scratch_dir(root_prefix, sf_key(sf_dir))
 
     def marker(uid):
         return [
@@ -874,16 +858,13 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     State note at 100 TB/day: one entry per key seen within the
     watermark horizon, independent of stream age."""
     import datetime
-    import hashlib
     import os
 
-    from graph_etl_pipeline_spark.io import SCRATCH_DIR
     from graph_etl_pipeline_spark.streaming.jobs import (
         stage_three_batch_fixture, stream_shuffle_partitions,
     )
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    root = os.path.join(SCRATCH_DIR, f"wmdedup_{key}-{os.getpid()}")
+    root = scratch_dir("wmdedup", sf_key(sf_dir))
     src = stage_three_batch_fixture(
         spark,
         sf_dir,
@@ -985,16 +966,13 @@ def stream_full_join_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by the 30-minute horizon plus the watermark delay — state
     tracks ingest rate, not stream age."""
     import datetime
-    import hashlib
     import os
 
-    from graph_etl_pipeline_spark.io import SCRATCH_DIR
     from graph_etl_pipeline_spark.streaming.jobs import stage_three_batch_fixture
 
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
     # SAME root as stream_left_join_timeout: the fixtures are identical,
     # so one staged copy serves both queries in a sweep/bench process.
-    root = os.path.join(SCRATCH_DIR, f"lojto_{key}-{os.getpid()}")
+    root = scratch_dir("lojto", sf_key(sf_dir))
 
     def advance_rows(ids):
         return [
@@ -1237,9 +1215,6 @@ def stream_sketch_register_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     serving form the HyperANF family standardizes on — estimates derive
     from it with one division, and state tables from disjoint shards
     union under the same slice-max aggregation."""
-    import os
-
-    from graph_etl_pipeline_spark.io import SCRATCH_DIR, _reap_stale_pid_dirs
     from graph_etl_pipeline_spark.streaming.jobs import incremental_upsert
 
     existing = table(spark, sf_dir, "customer").select(
@@ -1247,10 +1222,7 @@ def stream_sketch_register_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).cast("long").alias("r0"),
         F.lit(0).cast("long").alias("r1"),
     )
-    _reap_stale_pid_dirs(SCRATCH_DIR)
-    ckpt = os.path.join(
-        SCRATCH_DIR, f"stream_ckpt_{uuid.uuid4().hex[:8]}-{os.getpid()}"
-    )
+    ckpt = scratch_dir("stream_ckpt", uuid.uuid4().hex[:8])
     state = incremental_upsert(
         events_stream(spark, sf_dir),
         existing,
@@ -1282,18 +1254,15 @@ def _psm_sources(spark: SparkSession, sf_dir: str) -> str:
     batch touches EXACTLY ONE partition, exercising the pruned rewrite —
     v2 must not rewrite the other four). Pinned mtimes fix the file
     source's batch order."""
-    import hashlib
     import os
 
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from graph_etl_pipeline_spark.io import SCRATCH_DIR
     from graph_etl_pipeline_spark.streaming.jobs import staged_events_single_file
 
     events_file, _ = staged_events_single_file(spark, sf_dir)
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    src = os.path.join(SCRATCH_DIR, f"psm_{key}-{os.getpid()}", "src")
+    src = os.path.join(scratch_dir("psm", sf_key(sf_dir)), "src")
     names = ["a-even.parquet", "b-odd.parquet", "c-purchase.parquet"]
     if not os.path.exists(os.path.join(src, names[-1])):
         os.makedirs(src, exist_ok=True)
@@ -1361,12 +1330,8 @@ def stream_partitioned_sink_merge(spark: SparkSession, sf_dir: str) -> DataFrame
     versioned rewrite makes replays idempotent, so exactly-once +
     additivity ⇒ split-invariance. Restart recovery (new files, same
     checkpoint, state resumed from storage) is test-pinned alongside."""
-    import os
-
-    from graph_etl_pipeline_spark.io import SCRATCH_DIR, _reap_stale_pid_dirs
     from graph_etl_pipeline_spark.streaming.jobs import partitioned_incremental_merge
 
-    _reap_stale_pid_dirs(SCRATCH_DIR)
     src = _psm_sources(spark, sf_dir)
     schema = _fixture_schema(spark, src)
     ev = (
@@ -1375,9 +1340,7 @@ def stream_partitioned_sink_merge(spark: SparkSession, sf_dir: str) -> DataFrame
         .parquet(src)
         .select("event_type", "user_id", "value")
     )
-    ckpt = os.path.join(
-        SCRATCH_DIR, f"psm_ckpt_{uuid.uuid4().hex[:8]}-{os.getpid()}"
-    )
+    ckpt = scratch_dir("psm_ckpt", uuid.uuid4().hex[:8])
     final = partitioned_incremental_merge(
         ev, "event_type", ckpt, psm_prepare, psm_merge
     )
@@ -1392,16 +1355,12 @@ def _staged_documents_three_files(spark: SparkSession, sf_dir: str) -> str:
     """Documents split into three parquet files by doc_id % 3 with pinned
     mtimes — the document twin of stage_three_batch_fixture (driver-side
     pyarrow I/O, staged once per (corpus, process))."""
-    import hashlib
     import os
 
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from graph_etl_pipeline_spark.io import SCRATCH_DIR
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    src = os.path.join(SCRATCH_DIR, f"docstream_{key}-{os.getpid()}", "src")
+    src = os.path.join(scratch_dir("docstream", sf_key(sf_dir)), "src")
     done = os.path.join(src, "c-docs2.parquet")
     if not os.path.exists(done):
         os.makedirs(src, exist_ok=True)
@@ -1684,9 +1643,6 @@ def stream_countmin_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: state is a CONSTANT d·w = 1,536 rows forever; each batch's
     shuffle carries at most that after map-side combine; the probe join
     broadcasts the top-K keys against the cell table."""
-    import os
-
-    from graph_etl_pipeline_spark.io import SCRATCH_DIR, _reap_stale_pid_dirs
     from graph_etl_pipeline_spark.queries.aggregates import (
         CMS_MULTS, CMS_PROBE_K, CMS_W, _cms_pos,
     )
@@ -1697,10 +1653,7 @@ def stream_countmin_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.pmod(F.col("id"), F.lit(CMS_W)).cast("int").alias("pos"),
         F.lit(0).cast("long").alias("c"),
     )
-    _reap_stale_pid_dirs(SCRATCH_DIR)
-    ckpt = os.path.join(
-        SCRATCH_DIR, f"stream_cms_ckpt_{uuid.uuid4().hex[:8]}-{os.getpid()}"
-    )
+    ckpt = scratch_dir("stream_cms_ckpt", uuid.uuid4().hex[:8])
     cells = incremental_upsert(
         events_stream(spark, sf_dir).select("user_id"),
         seed,

@@ -376,17 +376,14 @@ def staged_events_single_file(spark: SparkSession, sf_dir: str) -> tuple[str, ob
     their working set AFTER readStream, where the parquet reader's
     column pruning applies per micro-batch."""
     import glob
-    import hashlib
     import os
 
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from graph_etl_pipeline_spark.io import SCRATCH_DIR, _reap_stale_pid_dirs, table
+    from graph_etl_pipeline_spark.io import scratch_dir, sf_key, table
 
-    _reap_stale_pid_dirs(SCRATCH_DIR)
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    root = os.path.join(SCRATCH_DIR, f"evsingle_{key}-{os.getpid()}")
+    root = scratch_dir("evsingle", sf_key(sf_dir))
     done = os.path.join(root, "events.parquet")
     if not os.path.exists(done):
         os.makedirs(root, exist_ok=True)

@@ -9,8 +9,25 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from graph_etl_pipeline_spark.io import SCRATCH_DIR  # noqa: E402
+
 SF_SMOKE = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 SF_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01")
+
+
+def listing(path):
+    return set(os.listdir(path)) if os.path.isdir(path) else set()
+
+
+# What the cache root and the scratch root held before any test ran; the
+# scratch audit in tests/test_scratch.py checks only what the suite adds.
+CACHE_AT_START = listing(os.path.dirname(SCRATCH_DIR))
+SCRATCH_AT_START = listing(SCRATCH_DIR)
+
+
+def pytest_collection_modifyitems(items):
+    """Run the scratch audit last, so it sees every dir the suite made."""
+    items.sort(key=lambda item: item.name == "test_suite_scratch_dirs_carry_a_pid")
 
 
 @pytest.fixture(scope="session")

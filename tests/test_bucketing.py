@@ -6,9 +6,11 @@ shuffle is paid once at write time, then every subsequent join is free."""
 
 from __future__ import annotations
 
+import os
 import uuid
 
 import pytest
+from conftest import listing
 
 from pyspark.sql import functions as F
 
@@ -85,3 +87,19 @@ def test_partitioned_write_prunes_partitions(spark, sf_dir, tmp_path):
     assert "lang" in pf and "en" in pf
 
     assert filtered.count() == docs.filter(F.col("lang") == "en").count()
+
+
+def test_bucketed_query_leaves_the_warehouse_untouched(spark, sf_dir, tmp_path):
+    """join_bucketed_colocated keeps its bucketed tables as external
+    tables under the scratch root, so nothing lands in the warehouse dir.
+    A fresh data-root path forces the tables to be written here."""
+    from urllib.parse import urlparse
+
+    from graph_etl_pipeline_spark.registry import all_queries
+
+    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+    before = listing(warehouse)
+    fresh = tmp_path / "sf"
+    fresh.symlink_to(os.path.abspath(sf_dir))
+    all_queries()["join_bucketed_colocated"].fn(spark, str(fresh)).collect()
+    assert listing(warehouse) == before

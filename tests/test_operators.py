@@ -12,23 +12,6 @@ from graph_etl_pipeline_spark.operators.multimodal import (
     decode_image,
     sample_frames,
 )
-from graph_etl_pipeline_spark.operators.skew import salted_join
-
-
-def test_salted_join_equals_plain_join(spark, sf_dir):
-    li = table(spark, sf_dir, "lineitem").select("l_partkey", "l_quantity")
-    p = table(spark, sf_dir, "part").select(F.col("p_partkey").alias("l_partkey"), "p_brand")
-    plain = (
-        li.join(p, "l_partkey")
-        .groupBy("p_brand")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    salted = (
-        salted_join(li, p, "l_partkey", salt_buckets=4)
-        .groupBy("p_brand")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
 
 
 def test_decode_stub_gated():
@@ -638,16 +621,13 @@ def test_compaction_preserves_content_and_is_idempotent(spark, sf_dir):
     staged layout (same file paths — no rewrite churn)."""
     import os
 
-    from graph_etl_pipeline_spark.io import SCRATCH_DIR
+    from graph_etl_pipeline_spark.io import scratch_dir, sf_key
     from graph_etl_pipeline_spark.registry import all_queries
 
     fn = all_queries()["sink_compact_small_files"].fn
     fn(spark, sf_dir).collect()
-    import hashlib
-
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    frag = os.path.join(SCRATCH_DIR, f"compact_frag-{key}-{os.getpid()}")
-    packed = os.path.join(SCRATCH_DIR, f"compact_out-{key}-{os.getpid()}")
+    frag = scratch_dir("compact_frag", sf_key(sf_dir))
+    packed = scratch_dir("compact_out", sf_key(sf_dir))
     a = spark.read.parquet(frag).groupBy("event_id").count()
     b = spark.read.parquet(packed).groupBy("event_id").count()
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
@@ -713,17 +693,15 @@ def test_vacuum_reaps_oldest_and_ignores_uncommitted(spark, sf_dir):
     survive, and a half-written (no _SUCCESS) version dir is neither a
     vacuum candidate nor a retained version — crashed writers are
     invisible to both readers and the reaper."""
-    import hashlib
     import os
 
-    from graph_etl_pipeline_spark.io import SCRATCH_DIR
+    from graph_etl_pipeline_spark.io import scratch_dir, sf_key
     from graph_etl_pipeline_spark.queries.sinks import VACUUM_RETAIN, VACUUM_VERSIONS
     from graph_etl_pipeline_spark.registry import all_queries
 
     fn = all_queries()["sink_vacuum_retention"].fn
     fn(spark, sf_dir).collect()
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    root = os.path.join(SCRATCH_DIR, f"vacuum_tbl-{key}-{os.getpid()}")
+    root = scratch_dir("vacuum_tbl", sf_key(sf_dir))
     assert not os.path.exists(os.path.join(root, "v0"))
     for i in range(VACUUM_VERSIONS - VACUUM_RETAIN, VACUUM_VERSIONS):
         assert os.path.exists(os.path.join(root, f"v{i}", "_SUCCESS"))

@@ -204,7 +204,7 @@ def test_kmeans_iterate_rounds_collapse_to_literal_centroids(spark, sf_dir):
     assert plan.count("Scan parquet") <= 2  # quantized corpus (+ seed filter)
 
 
-def test_zorder_layout_skips_files(spark, sf_dir):
+def test_zorder_layout_skips_files(spark, sf_dir, tmp_path):
     """sink_zorder_write's clustering must be REAL: for the 2-D box the
     query reads, strictly fewer z-ordered files intersect (by parquet
     footer min/max of user_id and hour) than row-order files of the same
@@ -214,7 +214,6 @@ def test_zorder_layout_skips_files(spark, sf_dir):
 
     import pyarrow.parquet as pq
 
-    from graph_etl_pipeline_spark.io import SCRATCH_DIR
     from graph_etl_pipeline_spark.queries.sinks import morton_code
     from pyspark.sql import functions as F
 
@@ -229,8 +228,7 @@ def test_zorder_layout_skips_files(spark, sf_dir):
         "event_id", "user_id", "value", hour.alias("hour"),
         morton_code(F.col("user_id"), hour % (1 << 16)).alias("z"),
     )
-    zdest = os.path.join(SCRATCH_DIR, f"ztest_z_{os.getpid()}")
-    rdest = os.path.join(SCRATCH_DIR, f"ztest_r_{os.getpid()}")
+    zdest, rdest = str(tmp_path / "z"), str(tmp_path / "r")
     cols.repartitionByRange(8, "z").sortWithinPartitions("z").write.mode(
         "overwrite"
     ).parquet(zdest)
@@ -586,3 +584,46 @@ def test_bench_host_sample_shape():
     assert isinstance(la0, float)
     assert total0 > idle0 > 0  # jiffies exist and idle < total
     assert idle1 >= idle0 and total1 >= total0  # monotone counters
+
+
+# (build jobs, total jobs, Exchange nodes, rows) of the interaction-graph
+# queries at the default test SF, on the second call: the first call pays
+# materialize's writes. The calls read the data through a fresh path, so
+# they write their own materialized tables (with AQE off) instead of
+# reusing ones that earlier tests wrote with AQE on: those have another
+# partition layout, and the counts depend on it.
+GRAPH_PINS = {
+    "triangle_count": (3, 8, 19, 1),
+    "sssp_bounded": (4, 9, 28, 15),
+    "kcore_bounded": (4, 5, 1, 15),
+    "label_propagation": (4, 8, 13, 15),
+    "jaccard_similarity": (5, 9, 6, 105),
+    "random_walks": (4, 8, 3, 15),
+    "assortativity": (3, 6, 6, 1),
+    "modularity": (5, 10, 8, 1),
+    "harmonic_centrality": (9, 11, 5, 15),
+    "closeness_sampled": (13, 15, 4, 15),
+    "betweenness_stress_sampled": (16, 19, 8, 0),
+    "hyperanf_sketch": (11, 12, 0, 15),
+    "neighborhood_function": (3, 4, 3, 3),
+    "clustering_coefficient": (3, 7, 17, 15),
+    "copurchase_project": (2, 4, 5, 2324),
+}
+
+
+@pytest.mark.parametrize("name", sorted(GRAPH_PINS))
+def test_graph_query_job_and_exchange_pins(spark, sf_dir, name, tmp_path):
+    from conftest import job_group
+
+    fn = all_queries()[f"graph_{name}"].fn
+    fresh = tmp_path / "sf"
+    fresh.symlink_to(os.path.abspath(sf_dir))
+    with job_group(spark):
+        fn(spark, str(fresh)).collect()
+    with job_group(spark) as jobs:
+        df = fn(spark, str(fresh))
+        build = jobs()
+        rows = len(df.collect())
+        total = jobs()
+        exchanges = df._jdf.queryExecution().executedPlan().toString().count("Exchange")
+    assert (build, total, exchanges, rows) == GRAPH_PINS[name]
