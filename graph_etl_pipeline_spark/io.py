@@ -260,6 +260,13 @@ def _reap_stale_pid_dirs(root: str) -> None:
             shutil.rmtree(path, ignore_errors=True)
 
 
+_LAYOUT_CONFS = (
+    "spark.sql.adaptive.enabled",
+    "spark.sql.adaptive.coalescePartitions.enabled",
+    "spark.sql.shuffle.partitions",
+)
+
+
 def materialize(df: DataFrame, name: str) -> DataFrame:
     """Write-then-read parquet materialization for subplans consumed by
     several downstream operators (Spark has no automatic CTE sharing).
@@ -272,12 +279,14 @@ def materialize(df: DataFrame, name: str) -> DataFrame:
     and is not column-prunable).
 
     Writes are CONTENT-ADDRESSED: the path carries a digest of the
-    analyzed logical plan, and an already-complete dir (``_SUCCESS``
-    present) for the same plan is reused instead of rewritten. Identical
-    plan over identical inputs ⇒ identical data (every materialized
-    subplan here is deterministic), so reuse is sound — and it is how a
-    production pipeline amortizes a shared derived table (the shingle
-    index is built once per corpus, not once per downstream query).
+    analyzed logical plan, its input files and the confs that shape the
+    written layout (``_LAYOUT_CONFS``), and an already-complete dir
+    (``_SUCCESS`` present) for the same digest is reused instead of
+    rewritten. Identical plan over identical inputs ⇒ identical data
+    (every materialized subplan here is deterministic), so reuse is
+    sound — and it is how a production pipeline amortizes a shared
+    derived table (the shingle index is built once per corpus, not once
+    per downstream query).
     Repeat runs in one process therefore measure steady-state: first
     execution pays the build, later executions scan. The path comes
     from scratch_dir, so concurrent runs don't race and dirs of dead pids
@@ -315,9 +324,13 @@ def materialize(df: DataFrame, name: str) -> DataFrame:
             plan,
         )
     # the plan string renders a parquet relation WITHOUT its path — the
-    # same query over two scale factors would collide; key the inputs in
+    # same query over two scale factors would collide; key the inputs in.
+    # The written layout (file count, partitioning) follows the writer's
+    # confs, and readers plan on that layout: key those confs in too, so
+    # an AQE-off reader never plans on an AQE-coalesced table
     files = "\n".join(sorted(df.inputFiles()))
-    digest = _hashlib.md5(f"{plan}\0{files}".encode()).hexdigest()[:12]
+    confs = "\n".join(spark.conf.get(k) for k in _LAYOUT_CONFS)
+    digest = _hashlib.md5(f"{plan}\0{files}\0{confs}".encode()).hexdigest()[:12]
     dest = scratch_dir(name, digest)
     if not _os.path.exists(_os.path.join(dest, "_SUCCESS")):
         df.write.mode("overwrite").parquet(dest)

@@ -4,6 +4,9 @@ approximate operators' accuracy bounds."""
 
 from __future__ import annotations
 
+import contextlib
+import shutil
+
 import pytest
 from conftest import job_group
 from pyspark.sql import functions as F
@@ -51,6 +54,164 @@ def test_catalog_query_roundtrip(spark, sf_dir):
     )
     assert rows[0]["n"] >= 0
     assert clear_all(spark) >= 10
+
+
+@pytest.fixture
+def views(spark):
+    """Drop the test's views and their snapshots afterwards, so no
+    snapshot is served to a later test's plans."""
+    yield
+    clear_all(spark)
+
+
+def _cached(spark, df) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().lookupCachedData(df._jdf).isDefined()
+
+
+def _storage(spark) -> dict[int, int]:
+    """RDD id -> bytes held in memory, for every RDD with stored blocks."""
+    return {i.id(): i.memSize() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def _snapshot_rdd(spark, df) -> int:
+    cached = spark._jsparkSession.sharedState().cacheManager().lookupCachedData(df._jdf)
+    return cached.get().cachedRepresentation().cacheBuilder().cachedColumnBuffers().id()
+
+
+def _rows(spark, n: int, tag: str):
+    return spark.createDataFrame([(i, f"{tag}{i}") for i in range(n)], "uid long, name string")
+
+
+NAMES = "SELECT name FROM v ORDER BY uid"
+
+
+def test_query_reads_a_re_registered_view(spark, tmp_path, views):
+    """Freshness: a view re-registered on a new parquet version answers
+    with the new version's rows."""
+    _rows(spark, 3, "a").write.parquet(str(tmp_path / "v1"))
+    spark.read.parquet(str(tmp_path / "v1")).createOrReplaceTempView("v")
+    assert [r["name"] for r in query(spark, NAMES)] == ["a0", "a1", "a2"]
+    _rows(spark, 4, "b").write.parquet(str(tmp_path / "v2"))
+    spark.read.parquet(str(tmp_path / "v2")).createOrReplaceTempView("v")
+    assert [r["name"] for r in query(spark, NAMES)] == ["b0", "b1", "b2", "b3"]
+
+
+def test_query_reads_a_path_overwritten_in_place(spark, tmp_path, views):
+    """Freshness: the same path overwritten, through Spark and then from
+    outside it, and re-read answers with the new rows. The outside
+    rewrite leaves a plan Spark's cache manager takes for the old one
+    (same root path); only the input files tell the versions apart."""
+    path, side = str(tmp_path / "v"), str(tmp_path / "side")
+    _rows(spark, 3, "a").write.parquet(path)
+    spark.read.parquet(path).createOrReplaceTempView("v")
+    assert [r["name"] for r in query(spark, NAMES)] == ["a0", "a1", "a2"]
+    _rows(spark, 2, "b").write.mode("overwrite").parquet(path)
+    spark.read.parquet(path).createOrReplaceTempView("v")
+    assert [r["name"] for r in query(spark, NAMES)] == ["b0", "b1"]
+    _rows(spark, 4, "c").coalesce(1).write.parquet(side)
+    shutil.rmtree(path)
+    shutil.move(side, path)
+    spark.read.parquet(path).createOrReplaceTempView("v")
+    assert [r["name"] for r in query(spark, NAMES)] == ["c0", "c1", "c2", "c3"]
+
+
+@contextlib.contextmanager
+def _broadcast_threshold(spark, value: str):
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_query_scans_a_view_over_the_threshold(spark, tmp_path, views):
+    """A parquet view whose size estimate is over
+    spark.sql.autoBroadcastJoinThreshold is not snapshotted, and still
+    answers."""
+    _rows(spark, 500, "r").write.parquet(str(tmp_path / "v"))
+    v = spark.read.parquet(str(tmp_path / "v"))
+    v.createOrReplaceTempView("v")
+    with _broadcast_threshold(spark, "1KB"):
+        rows = query(spark, "SELECT name FROM v WHERE uid = :k", k=321)
+    assert rows == [{"name": "r321"}]
+    assert not _cached(spark, v)
+
+
+def test_query_measures_a_view_of_unknown_size(spark, views):
+    """A createDataFrame view has no size estimate: it is snapshotted
+    lazily and then kept or released on its measured in-memory size. A
+    release is remembered for the view's version, so later calls scan it
+    instead of refilling a snapshot."""
+    small = _rows(spark, 3, "s")
+    small.createOrReplaceTempView("v")
+    sql = "SELECT name FROM v WHERE uid = :k"
+    assert query(spark, sql, k=2) == [{"name": "s2"}]
+    assert _cached(spark, small)
+    assert query(spark, sql, k=1) == [{"name": "s1"}]
+    assert _cached(spark, small)
+
+    large = _rows(spark, 500, "l")
+    large.createOrReplaceTempView("v")
+    with _broadcast_threshold(spark, "1KB"):
+        assert query(spark, sql, k=321) == [{"name": "l321"}]
+        assert not _cached(spark, large)
+        assert query(spark, sql, k=7) == [{"name": "l7"}]
+        assert not _cached(spark, large)
+
+
+def test_clear_all_releases_snapshots(spark, tmp_path, views):
+    """clear_all drops the snapshots query took: the cache manager holds
+    none of their plans, and block storage falls back."""
+    _rows(spark, 50, "a").write.parquet(str(tmp_path / "a"))
+    a = spark.read.parquet(str(tmp_path / "a"))
+    b = _rows(spark, 5, "b")
+    a.createOrReplaceTempView("va")
+    b.createOrReplaceTempView("vb")
+    rows = query(spark, "SELECT vb.name FROM va JOIN vb ON va.uid = vb.uid WHERE va.uid = :k", k=4)
+    assert rows == [{"name": "b4"}]
+    assert _cached(spark, a) and _cached(spark, b)
+    rdds = {_snapshot_rdd(spark, a), _snapshot_rdd(spark, b)}
+    filled = _storage(spark)
+    assert rdds <= filled.keys()
+    assert clear_all(spark) >= 2
+    assert not _cached(spark, a) and not _cached(spark, b)
+    left = _storage(spark)
+    assert not rdds & left.keys()
+    assert sum(left.values()) < sum(filled.values())
+
+
+def test_replacing_a_view_releases_its_snapshot(spark, tmp_path, views):
+    """A view's snapshot is released once the view is replaced, before
+    the new version's snapshot is taken."""
+    _rows(spark, 50, "a").write.parquet(str(tmp_path / "a"))
+    _rows(spark, 50, "b").write.parquet(str(tmp_path / "b"))
+    old = spark.read.parquet(str(tmp_path / "a"))
+    old.createOrReplaceTempView("v")
+    assert query(spark, NAMES)[0] == {"name": "a0"}
+    rdd = _snapshot_rdd(spark, old)
+    assert rdd in _storage(spark)
+    new = spark.read.parquet(str(tmp_path / "b"))
+    new.createOrReplaceTempView("v")
+    assert query(spark, NAMES)[0] == {"name": "b0"}
+    assert not _cached(spark, old) and _cached(spark, new)
+    assert rdd not in _storage(spark)
+
+
+def test_dropped_view_leaves_the_registry(spark, views):
+    """Spark drops a view's cached data with the view; the registry entry
+    goes at the next plan walk."""
+    from graph_etl_pipeline_spark import catalog
+
+    gone = _rows(spark, 3, "a")
+    gone.createOrReplaceTempView("gone")
+    assert query(spark, "SELECT COUNT(*) AS n FROM gone") == [{"n": 3}]
+    assert "gone" in catalog._SNAPSHOTS and _cached(spark, gone)
+    spark.catalog.dropTempView("gone")
+    _rows(spark, 2, "b").createOrReplaceTempView("v")
+    assert query(spark, NAMES) == [{"name": "b0"}, {"name": "b1"}]
+    assert "gone" not in catalog._SNAPSHOTS and not _cached(spark, gone)
 
 
 def test_stats(spark, sf_dir):
@@ -167,6 +328,40 @@ def test_traversal_shallow_path_job_count_pinned(spark):
         rows = visited.collect()
     assert build_jobs == 0
     assert {r.uid for r in rows} == {"08", "08 01", "08 01 11*", "08 01 12"}
+
+
+def test_item_lookup_job_count_pinned(spark, tmp_path, views):
+    """Pin the jobs of a Graph-RAG item lookup (item -> disposal targets,
+    a 3-way join over small parquet views). The second call is served
+    from the views' snapshots: no job while the query is built, and only
+    the broadcasts and the result job while it runs."""
+    items = spark.createDataFrame(
+        [(f"i{k}", f"item {k}") for k in range(40)], "uid string, name string"
+    )
+    targets = spark.createDataFrame(
+        [(f"t{k}", f"target {k}") for k in range(8)], "uid string, name string"
+    )
+    edges = spark.createDataFrame(
+        [(f"i{k}", f"t{k % 8}", "DISPOSED_AT") for k in range(40)],
+        "src_uid string, dst_uid string, rel_type string",
+    )
+    for name, df in (("items", items), ("targets", targets), ("edges", edges)):
+        df.write.parquet(str(tmp_path / name))
+        spark.read.parquet(str(tmp_path / name)).createOrReplaceTempView(f"kg_{name}")
+    sql = (
+        "SELECT e.rel_type, t.name FROM kg_edges e "
+        "JOIN kg_items i ON e.src_uid = i.uid JOIN kg_targets t ON e.dst_uid = t.uid "
+        "WHERE i.name = :key"
+    )
+    want = [{"rel_type": "DISPOSED_AT", "name": "target 3"}]
+    assert query(spark, sql, key="item 11") == want
+    with job_group(spark) as jobs:
+        spark.sql(sql, args={"key": "item 19"})
+        build = jobs()
+        rows = query(spark, sql, key="item 19")
+        total = jobs()
+    assert rows == want
+    assert (build, total) == (0, 3)
 
 
 def test_graph_hop_and_orphans(spark):

@@ -627,3 +627,28 @@ def test_graph_query_job_and_exchange_pins(spark, sf_dir, name, tmp_path):
         total = jobs()
         exchanges = df._jdf.queryExecution().executedPlan().toString().count("Exchange")
     assert (build, total, exchanges, rows) == GRAPH_PINS[name]
+
+
+def test_materialized_tables_follow_the_layout_confs(spark, sf_dir):
+    """materialize keys its tables on the confs that shape their layout.
+    After an AQE-on call on the same data root (no fresh path), the
+    AQE-off pinned call writes and reads its own tables and keeps its
+    pin, instead of planning on the AQE-coalesced ones."""
+    from conftest import job_group
+
+    fn = all_queries()["graph_label_propagation"].fn
+    old = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    try:
+        fn(spark, sf_dir).collect()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", old)
+    with job_group(spark):
+        fn(spark, sf_dir).collect()
+    with job_group(spark) as jobs:
+        df = fn(spark, sf_dir)
+        build = jobs()
+        df.collect()
+        total = jobs()
+        exchanges = df._jdf.queryExecution().executedPlan().toString().count("Exchange")
+    assert (build, total, exchanges) == GRAPH_PINS["label_propagation"][:3]
