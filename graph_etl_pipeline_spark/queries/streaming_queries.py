@@ -6,6 +6,7 @@ itself, not a batch stand-in."""
 
 from __future__ import annotations
 
+import datetime
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -15,29 +16,18 @@ from graph_etl_pipeline_spark.io import scratch_dir, sf_key, table
 from graph_etl_pipeline_spark.queries._sql import osum, sdec
 from graph_etl_pipeline_spark.registry import register
 from graph_etl_pipeline_spark.streaming.jobs import (
+    STREAM_JOIN_SHUFFLE_PARTITIONS,
     events_stream,
-    fresh_memory_sink_name,
+    fixture_stream,
     incremental_upsert,
+    partitioned_incremental_merge,
     run_to_memory,
     session_aggregate,
+    stage_batch_files,
+    stage_three_batch_fixture,
+    staged_events_single_file,
     tumbling_aggregate,
 )
-
-
-_FIXTURE_SCHEMA_MEMO: dict[str, object] = {}
-
-
-def _fixture_schema(spark: SparkSession, src: str):
-    """Memoized schema probe for a staged 3-batch fixture directory: the
-    probe is a driver batch job (listing + footer read) and fixture
-    schemas never change within a process — without the memo every timed
-    run pays it before the stream starts (same rationale as
-    streaming/jobs.py events_stream's memo)."""
-    schema = _FIXTURE_SCHEMA_MEMO.get(src)
-    if schema is None:
-        schema = spark.read.parquet(src).schema
-        _FIXTURE_SCHEMA_MEMO[src] = schema
-    return schema
 
 
 @register(
@@ -61,7 +51,7 @@ def stream_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = events_stream(spark, sf_dir)
     return run_to_memory(
         tumbling_aggregate(stream, window="1 hour", watermark="2 hours"),
-        name=f"stream_tumbling_{uuid.uuid4().hex[:8]}",
+        "stream_tumbling",
     )
 
 
@@ -84,7 +74,7 @@ def stream_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "sink"),
 )
 def stream_incremental_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T2 executed through the streaming engine (VERDICT r2 #8): readStream
+    """T2 executed through the streaming engine: readStream
     over events → foreachBatch merge into a customer-keyed state table via
     the SAME set-oriented merge_upsert the batch sinks use
     (sinks/upsert.py; reference re-run contract, waste_items.py:366-373).
@@ -201,7 +191,7 @@ def stream_stateful_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = events_stream(spark, sf_dir)
     totals = run_to_memory(
         running_user_totals(stream),
-        name=f"stream_stateful_{uuid.uuid4().hex[:8]}",
+        "stream_stateful",
         output_mode="update",
     )
     return totals.groupBy("user_id").agg(
@@ -231,11 +221,7 @@ def stream_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = stream.select("user_id", "event_type").dropDuplicates(
         ["user_id", "event_type"]
     )
-    return run_to_memory(
-        deduped,
-        name=f"stream_dedup_{uuid.uuid4().hex[:8]}",
-        output_mode="append",
-    )
+    return run_to_memory(deduped, "stream_dedup", output_mode="append")
 
 
 SESSION_GAP_US = 30 * 60 * 1_000_000  # mirrors win_session_batch's gap
@@ -286,7 +272,7 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = events_stream(spark, sf_dir)
     return run_to_memory(
         session_aggregate(stream, gap="30 minutes", watermark="2 hours"),
-        name=f"stream_sessions_{uuid.uuid4().hex[:8]}",
+        "stream_sessions",
     )
 
 
@@ -318,24 +304,9 @@ def stream_sliding_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     overlapping windows; the watermark bounds how many stay open. The
     single availableNow batch means complete mode must equal the batch
     oracle exactly, same contract as stream_tumbling_hourly."""
-    from graph_etl_pipeline_spark.streaming.jobs import dec
-
     stream = events_stream(spark, sf_dir)
-    agg = (
-        stream.withWatermark("ts", "2 hours")
-        .groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(dec("value")).cast("double").alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
-    return run_to_memory(agg, name=f"stream_sliding_{uuid.uuid4().hex[:8]}")
+    agg = tumbling_aggregate(stream, "1 hour", "2 hours", slide="15 minutes")
+    return run_to_memory(agg, "stream_sliding")
 
 
 @register(
@@ -358,10 +329,10 @@ def stream_sliding_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "watermark"),
 )
 def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T3 late data / watermark semantics, HASH-CHECKABLE (VERDICT r5 #7 —
-    previously rows-only). A three-micro-batch file stream drives Spark's
-    real watermark state machine through every observable behavior, and a
-    closed-form oracle reproduces the result exactly:
+    """T3 late data / watermark semantics, HASH-CHECKED. A
+    three-micro-batch file stream drives Spark's real watermark state
+    machine through every observable behavior, and a closed-form oracle
+    reproduces the result exactly:
 
       batch 0  a-events   the whole events table (one file = one batch)
       batch 1  b-advance  ONE synthetic row at tmax + 1h (advances the
@@ -390,59 +361,25 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     it — the fixture-build path is test-scale by design, while the
     streaming plan itself (watermark + windowed agg) is the exact shape
     that runs unbounded at 100 TB/day."""
-    import datetime
-    import os
-
-    from graph_etl_pipeline_spark.streaming.jobs import (
-        dec, stage_three_batch_fixture,
+    src = _replay_fixture(spark, sf_dir)
+    return run_to_memory(
+        tumbling_aggregate(fixture_stream(spark, src)), "stream_wmlate", "append"
     )
 
-    root = scratch_dir("wmlate", sf_key(sf_dir))
-    src = stage_three_batch_fixture(
+
+def _replay_fixture(spark: SparkSession, sf_dir: str) -> str:
+    """The 3-batch replay fixture shared by stream_watermark_late and
+    stream_dedup_within_watermark: the whole events table, ONE synthetic
+    row at tmax + 1h that advances the watermark, then a byte-identical
+    replay of the table."""
+    row = lambda t: (-1, t + datetime.timedelta(hours=1), -1, "wm_advance", 0.0)  # noqa: E731
+    return stage_three_batch_fixture(
         spark,
         sf_dir,
-        root,
-        [(
-            "b-advance",
-            [lambda t: (-1, t + datetime.timedelta(hours=1), -1, "wm_advance", 0.0)],
-        )],
+        scratch_dir("wmreplay", sf_key(sf_dir)),
+        [("b-advance", [row])],
         replay_events=True,
     )
-    schema = _fixture_schema(spark, src)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .select("event_id", "event_type", "ts", "value")
-    )
-    agg = (
-        stream.withWatermark("ts", "2 hours")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(dec("value")).cast("double").alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
-    name = fresh_memory_sink_name(spark, "stream_wmlate")
-    from graph_etl_pipeline_spark.streaming.jobs import stream_shuffle_partitions
-
-    with stream_shuffle_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(root, f"ckpt_{name}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
 
 
 @register(
@@ -474,8 +411,21 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Under availableNow's single batch nothing is evicted mid-run, so the
     emitted set must equal the batch interval join exactly — the same
     complete-vs-oracle contract stream_tumbling_hourly pins."""
+    return _click_conv_join(lambda: events_stream(spark, sf_dir), "inner", "stream_ivjoin")
+
+
+def _click_conv_join(source, how: str, prefix: str) -> DataFrame:
+    """The attribution join shared by the three stream-stream joins:
+    clicks (even event_id) join conversions (odd) of the same user within
+    [0, 30 min] of event time, both sides watermarked 1 hour, run into a
+    memory sink at the join width. ``source`` is a zero-argument factory:
+    each side reads its own stream. Conversions are ``% 2 != 0`` because
+    Spark's ``-1 % 2`` is -1 — the synthetic conversion row at event_id
+    -1 must stay a conversion. user_id is coalesced across sides so a
+    full join's conversion-only rows name their user; on inner and left
+    joins the coalesce returns the click side's user_id unchanged."""
     clicks = (
-        events_stream(spark, sf_dir)
+        source()
         .filter(F.col("event_id") % 2 == 0)
         .withWatermark("ts", "1 hour")
         .select(
@@ -485,38 +435,49 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     convs = (
-        events_stream(spark, sf_dir)
-        .filter(F.col("event_id") % 2 == 1)
+        source()
+        .filter(F.col("event_id") % 2 != 0)
         .withWatermark("ts", "1 hour")
         .select(
             F.col("event_id").alias("conv_id"),
-            F.col("user_id").alias("conv_user"),
+            F.col("user_id").alias("vu"),
             F.col("ts").alias("conv_ts"),
         )
     )
     joined = clicks.join(
         convs,
-        (F.col("user_id") == F.col("conv_user"))
+        (F.col("user_id") == F.col("vu"))
         & (F.col("conv_ts") >= F.col("click_ts"))
         & (F.col("conv_ts") <= F.col("click_ts") + F.expr("INTERVAL 30 MINUTES")),
-        "inner",
-    ).select("click_id", "conv_id", "user_id", "click_ts", "conv_ts")
-    name = fresh_memory_sink_name(spark, "stream_ivjoin")
-    from graph_etl_pipeline_spark.streaming.jobs import (
-        STREAM_JOIN_SHUFFLE_PARTITIONS,
-        stream_shuffle_partitions,
+        how,
+    ).select(
+        "click_id",
+        "conv_id",
+        F.coalesce("user_id", "vu").alias("user_id"),
+        "click_ts",
+        "conv_ts",
     )
+    return run_to_memory(joined, prefix, "append", STREAM_JOIN_SHUFFLE_PARTITIONS)
 
-    with stream_shuffle_partitions(spark, STREAM_JOIN_SHUFFLE_PARTITIONS):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+
+def _timeout_fixture(spark: SparkSession, sf_dir: str):
+    """Source factory for the outer-join timeout fixture shared by the
+    left and full joins (one staged copy serves both): the whole events
+    table, then one batch holding an even (click-side) and an odd
+    (conversion-side) row at tmax + 1h, which raises BOTH per-input
+    watermarks — the global watermark is their MIN, so one side alone
+    moves nothing. Each synthetic row has its own user (-100 + id), so
+    the two can never match each other. The engine's trailing no-data
+    micro-batch then runs with the advanced watermark and does the
+    eviction; no third data batch is needed."""
+    rows = [
+        lambda t, i=i: (i, t + datetime.timedelta(hours=1), -100 + i, "wm_advance", 0.0)
+        for i in (-2, -1)
+    ]
+    src = stage_three_batch_fixture(
+        spark, sf_dir, scratch_dir("lojto", sf_key(sf_dir)), [("b-advance", rows)]
+    )
+    return lambda: fixture_stream(spark, src).select("event_id", "user_id", "ts")
 
 
 @register(
@@ -564,8 +525,8 @@ def stream_left_join_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     inputs' watermarks (min semantics — one side alone moves nothing);
     the engine's trailing NO-DATA micro-batch then runs with the
     advanced watermark (wm = tmax after the 1h delay) and evicts
-    expired clicks (r17 — previously a third marker file forced this
-    batch; the no-data batch does the same eviction cheaper). The
+    expired clicks (a third marker file would force the same eviction
+    through a full data batch; the no-data batch is cheaper). The
     synthetic rows themselves can never be emitted: their match horizon
     ends past the final watermark. Oracle: matched pairs plus
     no-match clicks whose horizon closed by tmax — every emitted row
@@ -574,99 +535,9 @@ def stream_left_join_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     The production plan is the same join running unbounded: per-side
     state is bounded by the 30-minute horizon plus watermark delay, so
     state size tracks ingest RATE, not history."""
-    import datetime
-    import os
-
-    from graph_etl_pipeline_spark.streaming.jobs import stage_three_batch_fixture
-
-    root = scratch_dir("lojto", sf_key(sf_dir))
-
-    # per following batch: one even (click-side) and one odd (conv-side)
-    # id, both at tmax + 1h — raises BOTH per-input watermarks. DISTINCT
-    # user per synthetic row (-100 + id): they must never match each
-    # other (same user at the same instant would emit as a pair).
-    def advance_rows(ids):
-        return [
-            (
-                lambda t, i=i: (
-                    i, t + datetime.timedelta(hours=1), -100 + i, "wm_advance", 0.0
-                )
-            )
-            for i in ids
-        ]
-
-    # TWO data batches, not three (r17): the old c-evict marker file
-    # existed only so a batch RAN with the advanced watermark and evicted
-    # expired clicks — but availableNow already runs trailing NO-DATA
-    # micro-batches until the watermark stabilizes (noDataMicroBatches,
-    # pinned true in stream_shuffle_partitions), and a no-data batch
-    # performs the same eviction without paying a file-source read +
-    # join pass. Measured r17 at sf0.1: identical 49,986-row output,
-    # same total batch count (the data batch is replaced by a cheaper
-    # no-data one), fresh-checkpoint walls 3.70 → 3.49 min-of-3.
-    src = stage_three_batch_fixture(
-        spark,
-        sf_dir,
-        root,
-        [("b-advance", advance_rows((-2, -1)))],
+    return _click_conv_join(
+        _timeout_fixture(spark, sf_dir), "left_outer", "stream_lojto"
     )
-    schema = _fixture_schema(spark, src)
-
-    def side_stream():
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-            .select("event_id", "user_id", "ts")
-        )
-
-    clicks = (
-        side_stream()
-        .filter(F.col("event_id") % 2 == 0)
-        .withWatermark("ts", "1 hour")
-        .select(
-            F.col("event_id").alias("click_id"),
-            "user_id",
-            F.col("ts").alias("click_ts"),
-        )
-    )
-    convs = (
-        side_stream()
-        .filter(F.col("event_id") % 2 != 0)
-        .withWatermark("ts", "1 hour")
-        .select(
-            F.col("event_id").alias("conv_id"),
-            F.col("user_id").alias("vu"),
-            F.col("ts").alias("conv_ts"),
-        )
-    )
-    joined = clicks.join(
-        convs,
-        (F.col("user_id") == F.col("vu"))
-        & (F.col("conv_ts") >= F.col("click_ts"))
-        & (F.col("conv_ts") <= F.col("click_ts") + F.expr("INTERVAL 30 MINUTES")),
-        "left_outer",
-    ).select("click_id", "conv_id", "user_id", "click_ts", "conv_ts")
-    # drop the synthetic advance/evict rows from the visible result: their
-    # horizon is past the final watermark so the ENGINE never emits them;
-    # the filter is belt-and-braces for the matched-side projection only
-    name = fresh_memory_sink_name(spark, "stream_lojto")
-    from graph_etl_pipeline_spark.streaming.jobs import (
-        STREAM_JOIN_SHUFFLE_PARTITIONS,
-        stream_shuffle_partitions,
-    )
-
-    with stream_shuffle_partitions(spark, STREAM_JOIN_SHUFFLE_PARTITIONS):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(root, f"ckpt_{name}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
 
 
 def _run_session_fixture(spark, sf_dir, root_prefix, sink_prefix, operator):
@@ -679,54 +550,16 @@ def _run_session_fixture(spark, sf_dir, root_prefix, sink_prefix, operator):
     EVERY session is emitted and the output must equal the batch
     gaps-and-islands sessionization. One copy so the two operators'
     pinned output-equality contract cannot drift on fixture details."""
-    import datetime
-    import os
-
-    from graph_etl_pipeline_spark.streaming.jobs import (
-        stage_three_batch_fixture,
-        stream_shuffle_partitions,
-    )
-
-    root = scratch_dir(root_prefix, sf_key(sf_dir))
-
-    def marker(uid):
-        return [
-            lambda t: (uid, t + datetime.timedelta(hours=2), uid, "sess_advance", 0.0)
-        ]
-
-    # TWO data batches (r17): the c-flush marker's only job was to make
-    # a batch run with the advanced watermark so the timeout sweep
-    # fired; the availableNow trailing no-data batch does that for free
-    # (same final watermark, one fewer file-source pass). Output parity
-    # verified at sf0.1: identical 95,465 session rows.
+    row = lambda t: (-1, t + datetime.timedelta(hours=2), -1, "sess_advance", 0.0)  # noqa: E731
     src = stage_three_batch_fixture(
-        spark,
-        sf_dir,
-        root,
-        [("b-advance", marker(-1))],
+        spark, sf_dir, scratch_dir(root_prefix, sf_key(sf_dir)), [("b-advance", [row])]
     )
-    schema = _fixture_schema(spark, src)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .select("event_id", "user_id", "ts", "value")
+    stream = fixture_stream(spark, src).select("event_id", "user_id", "ts", "value")
+    # the synthetic advance user's session can never be emitted (its
+    # deadline sits past the final watermark); the filter is a backstop
+    return run_to_memory(operator(stream), sink_prefix, "append").filter(
+        F.col("user_id") >= 0
     )
-    name = fresh_memory_sink_name(spark, sink_prefix)
-    with stream_shuffle_partitions(spark):
-        q = (
-            operator(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(root, f"ckpt_{name}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    # the synthetic advance users' sessions can never be emitted (their
-    # deadlines sit past the final watermark); filter is belt-and-braces
-    return spark.table(name).filter(F.col("user_id") >= 0)
 
 
 # Shared by the per-user and bucketed stateful sessionizers: both must
@@ -794,12 +627,12 @@ def stream_stateful_session_timeout(spark: SparkSession, sf_dir: str) -> DataFra
     tags=("streaming", "stateful", "watermark", "scale"),
 )
 def stream_session_bucketed_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BUCKETED-STATE sessionization (r15) — the scale path for the
+    """BUCKETED-STATE sessionization — the scale path for the
     per-user operator above. stream_stateful_session_timeout pays the
     engine's per-GROUP fixed cost (state Arrow round trip, GroupState
     construction, one output frame) once per user per micro-batch —
-    ~1.9 ms × 3,002 invocations at sf0.1 (the r15 attribution), and at
-    100 TB/day (100M+ users) hundreds of millions of per-batch state
+    ~1.9 ms × 3,002 invocations at sf0.1, and at 100 TB/day (100M+
+    users) hundreds of millions of per-batch state
     round trips. Here the state key is pmod(user_id, SESSION_BUCKETS):
     one group per BUCKET holds every open session in packed int64
     arrays, the fold is one vectorized pass over the bucket's
@@ -857,46 +690,13 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     Emitting full row content is safe (replays are byte-identical).
     State note at 100 TB/day: one entry per key seen within the
     watermark horizon, independent of stream age."""
-    import datetime
-    import os
-
-    from graph_etl_pipeline_spark.streaming.jobs import (
-        stage_three_batch_fixture, stream_shuffle_partitions,
+    stream = fixture_stream(spark, _replay_fixture(spark, sf_dir))
+    deduped = (
+        stream.select("event_id", "event_type", "ts")
+        .withWatermark("ts", "2 hours")
+        .dropDuplicatesWithinWatermark(["event_id"])
     )
-
-    root = scratch_dir("wmdedup", sf_key(sf_dir))
-    src = stage_three_batch_fixture(
-        spark,
-        sf_dir,
-        root,
-        [(
-            "b-advance",
-            [lambda t: (-1, t + datetime.timedelta(hours=1), -1, "wm_advance", 0.0)],
-        )],
-        replay_events=True,
-    )
-    schema = _fixture_schema(spark, src)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .select("event_id", "event_type", "ts")
-    )
-    deduped = stream.withWatermark("ts", "2 hours").dropDuplicatesWithinWatermark(
-        ["event_id"]
-    )
-    name = fresh_memory_sink_name(spark, "stream_wmdedup")
-    with stream_shuffle_partitions(spark):
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(root, f"ckpt_{name}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(deduped, "stream_wmdedup", "append")
 
 
 @register(
@@ -965,99 +765,12 @@ def stream_full_join_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     entity. Scale notes match the left variant: per-side state is
     bounded by the 30-minute horizon plus the watermark delay — state
     tracks ingest rate, not stream age."""
-    import datetime
-    import os
-
-    from graph_etl_pipeline_spark.streaming.jobs import stage_three_batch_fixture
-
-    # SAME root as stream_left_join_timeout: the fixtures are identical,
-    # so one staged copy serves both queries in a sweep/bench process.
-    root = scratch_dir("lojto", sf_key(sf_dir))
-
-    def advance_rows(ids):
-        return [
-            (
-                lambda t, i=i: (
-                    i, t + datetime.timedelta(hours=1), -100 + i, "wm_advance", 0.0
-                )
-            )
-            for i in ids
-        ]
-
-    # TWO data batches (r17) — same change and measurement as
-    # stream_left_join_timeout: the eviction batch is the engine's own
-    # trailing no-data micro-batch. Both-side expiry (including the
-    # strict conv_ts boundary the docstring explains) verified identical
-    # on the 98,853-row sf0.1 output before/after the fixture change.
-    src = stage_three_batch_fixture(
-        spark,
-        sf_dir,
-        root,
-        [("b-advance", advance_rows((-2, -1)))],
-    )
-    schema = _fixture_schema(spark, src)
-
-    def side_stream():
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-            .select("event_id", "user_id", "ts")
-        )
-
-    clicks = (
-        side_stream()
-        .filter(F.col("event_id") % 2 == 0)
-        .withWatermark("ts", "1 hour")
-        .select(
-            F.col("event_id").alias("click_id"),
-            "user_id",
-            F.col("ts").alias("click_ts"),
-        )
-    )
-    convs = (
-        side_stream()
-        .filter(F.col("event_id") % 2 != 0)
-        .withWatermark("ts", "1 hour")
-        .select(
-            F.col("event_id").alias("conv_id"),
-            F.col("user_id").alias("vu"),
-            F.col("ts").alias("conv_ts"),
-        )
-    )
-    joined = clicks.join(
-        convs,
-        (F.col("user_id") == F.col("vu"))
-        & (F.col("conv_ts") >= F.col("click_ts"))
-        & (F.col("conv_ts") <= F.col("click_ts") + F.expr("INTERVAL 30 MINUTES")),
-        "full_outer",
-    ).select(
-        "click_id",
-        "conv_id",
-        F.coalesce("user_id", "vu").alias("user_id"),
-        "click_ts",
-        "conv_ts",
-    )
-    name = fresh_memory_sink_name(spark, "stream_fojto")
-    from graph_etl_pipeline_spark.streaming.jobs import (
-        STREAM_JOIN_SHUFFLE_PARTITIONS,
-        stream_shuffle_partitions,
+    return _click_conv_join(
+        _timeout_fixture(spark, sf_dir), "full_outer", "stream_fojto"
     )
 
-    with stream_shuffle_partitions(spark, STREAM_JOIN_SHUFFLE_PARTITIONS):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(root, f"ckpt_{name}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
 
-
-# --- Streaming HLL register maintenance (r12, VERDICT r11 #7b) ---------------
+# --- Streaming HLL register maintenance ---------------------------------------
 
 _EHLL_M = 16  # registers per key (m=2^4), matching the HyperANF layout
 _EHLL_HALF = _EHLL_M // 2
@@ -1136,11 +849,10 @@ def ehll_register_merge(current: DataFrame, incoming: DataFrame) -> DataFrame:
     merge-neutral zero registers (MAX(0, x) = x), so the helper is
     correct for OPEN key universes: an incoming user absent from the
     state table creates its row rather than silently losing sketch
-    state (ADVICE r12 #4 — the previous LEFT join relied on the
-    customer-seeded fixture's incoming ⊆ current invariant; under that
-    invariant full-outer emits the identical rows, and both sides
-    already shuffle on user_id, so the physical plan cost is the
-    same SortMergeJoin exchange pair)."""
+    state (a LEFT join would rely on the customer-seeded fixture's
+    incoming ⊆ current invariant; under that invariant full-outer emits
+    the identical rows, and both sides already shuffle on user_id, so
+    the physical plan cost is the same SortMergeJoin exchange pair)."""
     e, i = current.alias("e"), incoming.alias("i")
     j = e.join(i, F.col("e.user_id") == F.col("i.user_id"), "full_outer")
 
@@ -1196,11 +908,11 @@ def _ehll_sql_lane(start: int) -> str:
     tags=("streaming", "sketch", "sink"),
 )
 def stream_sketch_register_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING SKETCH MAINTENANCE (VERDICT r11 #7): foreachBatch
+    """STREAMING SKETCH MAINTENANCE: foreachBatch
     register-MAX merge into a persisted per-user HLL state table —
     T2's versioned-parquet merge discipline (streaming/jobs.py
     incremental_upsert: checkpoint + idempotent versioned rewrite =
-    effectively-exactly-once) applied to the r11 packed-register sketch
+    effectively-exactly-once) applied to the packed-register sketch
     layout (two BIGINT words of 16 × 6-bit registers per key).
 
     Each micro-batch reduces to per-user register MAXes (map-combinable
@@ -1215,8 +927,6 @@ def stream_sketch_register_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     serving form the HyperANF family standardizes on — estimates derive
     from it with one division, and state tables from disjoint shards
     union under the same slice-max aggregation."""
-    from graph_etl_pipeline_spark.streaming.jobs import incremental_upsert
-
     existing = table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"),
         F.lit(0).cast("long").alias("r0"),
@@ -1242,7 +952,7 @@ def stream_sketch_register_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     return state.select("user_id", "r0", "r1", d.alias("d"))
 
 
-# --- Streaming merge into a hive-partitioned sink (r14, VERDICT r13 #8) ------
+# --- Streaming merge into a hive-partitioned sink ----------------------------
 
 
 def _psm_sources(spark: SparkSession, sf_dir: str) -> str:
@@ -1254,31 +964,31 @@ def _psm_sources(spark: SparkSession, sf_dir: str) -> str:
     batch touches EXACTLY ONE partition, exercising the pruned rewrite —
     v2 must not rewrite the other four). Pinned mtimes fix the file
     source's batch order."""
-    import os
-
     import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    from graph_etl_pipeline_spark.streaming.jobs import staged_events_single_file
 
     events_file, _ = staged_events_single_file(spark, sf_dir)
-    src = os.path.join(scratch_dir("psm", sf_key(sf_dir)), "src")
-    names = ["a-even.parquet", "b-odd.parquet", "c-purchase.parquet"]
-    if not os.path.exists(os.path.join(src, names[-1])):
-        os.makedirs(src, exist_ok=True)
-        t = pq.read_table(events_file)
-        purch = pc.equal(t["event_type"], "purchase")
-        nonp = pc.invert(purch)
-        even = pc.equal(pc.bit_wise_and(t["event_id"], 1), 0)
-        pq.write_table(t.filter(pc.and_(nonp, even)), os.path.join(src, names[0]))
-        pq.write_table(
-            t.filter(pc.and_(nonp, pc.invert(even))), os.path.join(src, names[1])
-        )
-        pq.write_table(t.filter(purch), os.path.join(src, names[2]))
-        base = 1_000_000_000
-        for i, fname in enumerate(names):
-            os.utime(os.path.join(src, fname), (base + 10 * i, base + 10 * i))
-    return src
+    purch = lambda t: pc.equal(t["event_type"], "purchase")  # noqa: E731
+    even = lambda t: pc.equal(pc.bit_wise_and(t["event_id"], 1), 0)  # noqa: E731
+    masks = [
+        ("a-even.parquet", lambda t: pc.and_not(even(t), purch(t))),
+        ("b-odd.parquet", lambda t: pc.invert(pc.or_(even(t), purch(t)))),
+        ("c-purchase.parquet", purch),
+    ]
+    files = [(name, _rows_where(events_file, keep)) for name, keep in masks]
+    return stage_batch_files(scratch_dir("psm", sf_key(sf_dir)), files)
+
+
+def _rows_where(source: str, keep):
+    """A stage_batch_files writer: the rows of the parquet file ``source``
+    where the mask ``keep(table)`` is true."""
+
+    def write(path: str) -> None:
+        import pyarrow.parquet as pq
+
+        t = pq.read_table(source)
+        pq.write_table(t.filter(keep(t)), path)
+
+    return write
 
 
 def psm_prepare(batch_df: DataFrame) -> DataFrame:
@@ -1313,8 +1023,8 @@ def psm_merge(prev: DataFrame, prepared: DataFrame) -> DataFrame:
     tags=("streaming", "sink", "layout", "transaction"),
 )
 def stream_partitioned_sink_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING EXACTLY-ONCE MERGE INTO A PARTITIONED SINK (VERDICT r13
-    #8) — the composition the streaming family lacked:
+    """STREAMING EXACTLY-ONCE MERGE INTO A PARTITIONED SINK — the
+    composition of the two sink contracts:
     stream_incremental_upsert proves foreachBatch MERGE with versioned
     exactly-once state; sink_dynamic_partition_overwrite proves
     partition-granular publish; this runs BOTH at once through
@@ -1330,16 +1040,8 @@ def stream_partitioned_sink_merge(spark: SparkSession, sf_dir: str) -> DataFrame
     versioned rewrite makes replays idempotent, so exactly-once +
     additivity ⇒ split-invariance. Restart recovery (new files, same
     checkpoint, state resumed from storage) is test-pinned alongside."""
-    from graph_etl_pipeline_spark.streaming.jobs import partitioned_incremental_merge
-
     src = _psm_sources(spark, sf_dir)
-    schema = _fixture_schema(spark, src)
-    ev = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .select("event_type", "user_id", "value")
-    )
+    ev = fixture_stream(spark, src).select("event_type", "user_id", "value")
     ckpt = scratch_dir("psm_ckpt", uuid.uuid4().hex[:8])
     final = partitioned_incremental_merge(
         ev, "event_type", ckpt, psm_prepare, psm_merge
@@ -1352,30 +1054,24 @@ def stream_partitioned_sink_merge(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 def _staged_documents_three_files(spark: SparkSession, sf_dir: str) -> str:
-    """Documents split into three parquet files by doc_id % 3 with pinned
-    mtimes — the document twin of stage_three_batch_fixture (driver-side
-    pyarrow I/O, staged once per (corpus, process))."""
+    """Documents split into three parquet files by doc_id % 3, one
+    micro-batch each (driver-side pyarrow I/O, staged once per corpus and
+    process)."""
     import os
 
     import pyarrow.compute as pc
-    import pyarrow.parquet as pq
 
-    src = os.path.join(scratch_dir("docstream", sf_key(sf_dir)), "src")
-    done = os.path.join(src, "c-docs2.parquet")
-    if not os.path.exists(done):
-        os.makedirs(src, exist_ok=True)
-        t = pq.read_table(os.path.join(sf_dir, "documents.parquet"))
-        # pyarrow has no mod kernel in this build: a - 3*floor_div(a, 3)
-        # (doc_id >= 0, so truncating and flooring division agree)
-        residue = pc.subtract(
-            t["doc_id"], pc.multiply(pc.divide(t["doc_id"], 3), 3)
-        )
-        base = 1_000_000_000
-        for i, name in enumerate(("a-docs0", "b-docs1", "c-docs2")):
-            path = os.path.join(src, f"{name}.parquet")
-            pq.write_table(t.filter(pc.equal(residue, i)), path)
-            os.utime(path, (base + 10 * i, base + 10 * i))
-    return src
+    docs = os.path.join(sf_dir, "documents.parquet")
+    # pyarrow has no mod kernel in this build: a - 3*floor_div(a, 3)
+    # (doc_id >= 0, so truncating and flooring division agree)
+    residue = lambda t: pc.subtract(  # noqa: E731
+        t["doc_id"], pc.multiply(pc.divide(t["doc_id"], 3), 3)
+    )
+    files = [
+        (f"{name}.parquet", _rows_where(docs, lambda t, i=i: pc.equal(residue(t), i)))
+        for i, name in enumerate(("a-docs0", "b-docs1", "c-docs2"))
+    ]
+    return stage_batch_files(scratch_dir("docstream", sf_key(sf_dir)), files)
 
 
 from graph_etl_pipeline_spark.functions.text import SQL_TOKS as _SQL_TOKS_D, sql_shingles as _sql_shingles_d
@@ -1387,9 +1083,9 @@ def bench_shingle_probe_table(d: DataFrame) -> tuple[DataFrame, int]:
     hash table — ``(_one, btab)`` where ``btab`` is array<array<string>>
     of B buckets, bucket index = pmod(xxhash64(s), B) — plus B itself.
 
-    This replaces the r16 plan-embedded ``F.array(*[F.lit(s) ...])``
-    literal (VERDICT r16 #2): a literal ships inside the serialized plan
-    of EVERY task and arrays_overlap re-scans it per row (it hashes the
+    It is not a plan-embedded ``F.array(*[F.lit(s) ...])`` literal on
+    purpose: a literal ships inside the serialized plan of EVERY task
+    and arrays_overlap re-scans it per row (it hashes the
     smaller side per invocation — O(|bench|) per document). The probe
     table instead travels ONCE per executor as a broadcast relation, and
     the per-document check is O(|doc shingles|): element_at into the
@@ -1468,12 +1164,12 @@ def stream_ingest_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INGEST-TIME contamination firewall — benchmark decontamination as
     a STREAMING filter: documents arrive in micro-batches (3 staged
     files) and every batch is screened against the held-out eval set's
-    8-gram shingles via a stream-static BROADCAST probe (r17, VERDICT
-    r16 #2): the bench set is packed once into a dense exact hash table
+    8-gram shingles via a stream-static BROADCAST probe: the bench set
+    is packed once into a dense exact hash table
     (bench_shingle_probe_table) and attached by a broadcast-hash join on
     a constant key — one build row, shipped once per executor, never
-    re-serialized per task the way the previous plan-embedded literal
-    array was. The per-document check is O(|doc shingles|) bucket
+    re-serialized per task the way a plan-embedded literal array
+    would be. The per-document check is O(|doc shingles|) bucket
     probes. Zero streaming state, zero shuffles on the stream side: the
     exact shape an ingest firewall needs at 100 TB/day — every core
     screens its own Arrow batch and the filter's throughput IS scan
@@ -1507,7 +1203,7 @@ def stream_ingest_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Stream-static gotcha: the STATIC side of a stream-static join is
     # re-executed on every micro-batch — unpinned, the whole probe-table
     # derivation (eval-doc scan → shingle explode → distinct → pack)
-    # would run once per batch (measured r17: 4.1 s → 12+ s). Persist +
+    # would run once per batch (measured 4.1 s → 12+ s). Persist +
     # force the ONE packed row before the stream starts; each batch's
     # broadcast build then reads one cached row. The bench shingle frame
     # is itself cached across the builder's sizing count and the pack
@@ -1521,44 +1217,20 @@ def stream_ingest_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe_tab.count()
     bench.unpersist()
 
-    schema = _fixture_schema(spark, src)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
     hit = decontam_hit_expr(
         shingles(norm_tokens(F.col("text")), k=DECONTAM_K), n_buckets
     )
     clean = (
-        stream.withColumn("_one", F.lit(1))
+        fixture_stream(spark, src)
+        .withColumn("_one", F.lit(1))
         .join(F.broadcast(probe_tab), "_one")
         .filter(~F.coalesce(hit, F.lit(False)))
         .select("doc_id", "source", "n_chars")
     )
-
-    import os
-
-    name = fresh_memory_sink_name(spark, "stream_decontam")
-    from graph_etl_pipeline_spark.streaming.jobs import stream_shuffle_partitions
-
     try:
-        with stream_shuffle_partitions(spark):
-            q = (
-                clean.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .option(
-                    "checkpointLocation",
-                    os.path.join(os.path.dirname(src), f"ckpt_{name}"),
-                )
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        return run_to_memory(clean, "stream_decontam", "append")
     finally:
         probe_tab.unpersist()
-    return spark.table(name)
 
 
 def cms_batch_cells(batch_df: DataFrame) -> DataFrame:
@@ -1646,7 +1318,6 @@ def stream_countmin_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from graph_etl_pipeline_spark.queries.aggregates import (
         CMS_MULTS, CMS_PROBE_K, CMS_W, _cms_pos,
     )
-    from graph_etl_pipeline_spark.streaming.jobs import incremental_upsert
 
     seed = spark.range(len(CMS_MULTS) * CMS_W).select(
         (F.col("id") / CMS_W).cast("int").alias("i"),

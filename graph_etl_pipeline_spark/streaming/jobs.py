@@ -13,7 +13,8 @@ data and assert equality with the batch plans (tests/test_streaming.py).
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+import contextlib
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -21,50 +22,57 @@ from pyspark.sql import functions as F
 from graph_etl_pipeline_spark.functions.numeric import dec
 from graph_etl_pipeline_spark.sinks.upsert import merge_upsert
 
-_EVENTS_SCHEMA_MEMO: dict[str, object] = {}
+# One memo for every file-source schema probe, keyed by the probed path.
+_SCHEMA_MEMO: dict[str, object] = {}
+
+
+def fixture_stream(spark: SparkSession, src: str, files: str | None = None) -> DataFrame:
+    """File-source stream over the directory ``src``, one file per
+    micro-batch in the source's (mtime, path) order; ``files`` narrows
+    the directory to the matching file names (the file source needs a
+    directory, so a single table file is read out of its data root this
+    way). The required explicit schema is probed from the parquet footer
+    once per path and process: the probe is a driver batch job (listing
+    + footer read), the stream-stream joins build two sources per query,
+    and a staged fixture's schema never changes within a process."""
+    import os
+
+    probe = os.path.join(src, files) if files else src
+    schema = _SCHEMA_MEMO.get(probe)
+    if schema is None:
+        schema = _SCHEMA_MEMO[probe] = spark.read.parquet(probe).schema
+    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+    if files:
+        reader = reader.option("pathGlobFilter", files)
+    return reader.parquet(src)
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the events table. The required explicit
-    schema is probed from the parquet footer (one metadata read), so ts
+    """File-source stream over the events table, one micro-batch. ts
     arrives however THIS PySpark reads TIMESTAMP(NANOS) — long nanos on
     ≤4.0 with the legacy conf, TIMESTAMP_NTZ on 4.1+ — and is rebuilt
-    into a proper timestamp by the same helper as the batch reader.
-    The probe is memoized per events path: it is a driver batch job
-    (footer read + file listing), and the stream-stream joins build TWO
-    sources per query — without the memo every run pays 2 untracked
-    batch jobs before the stream even starts (the schema of a fixture
-    table never changes within a process)."""
+    into a proper timestamp by the same helper as the batch reader."""
     from graph_etl_pipeline_spark.io import rebuild_event_ts
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    key = f"{sf_dir}/events.parquet"
-    schema = _EVENTS_SCHEMA_MEMO.get(key)
-    if schema is None:
-        schema = spark.read.parquet(key).schema
-        _EVENTS_SCHEMA_MEMO[key] = schema
-    # The file source requires a directory; glob-filter down to the events
-    # file inside the sf_dir.
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1000")
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    return rebuild_event_ts(raw)
+    return rebuild_event_ts(fixture_stream(spark, sf_dir, "events.parquet"))
 
 
 def tumbling_aggregate(
-    stream: DataFrame, window: str = "1 hour", watermark: str = "2 hours"
+    stream: DataFrame,
+    window: str = "1 hour",
+    watermark: str = "2 hours",
+    slide: str | None = None,
 ) -> DataFrame:
-    """T1+T3: tumbling-window aggregation with a watermark. The watermark
-    bounds state: windows older than (max event time - watermark) are
-    finalized and evicted — the difference between O(stream length) and
-    O(watermark horizon) state at 100 TB/day ingest."""
+    """T1+T3: tumbling-window aggregation with a watermark (sliding
+    windows when ``slide`` is given). The watermark bounds state: windows
+    older than (max event time - watermark) are finalized and evicted —
+    the difference between O(stream length) and O(watermark horizon)
+    state at 100 TB/day ingest."""
     return (
         stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
+        .groupBy(F.window("ts", window, slide).alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(dec("value")).cast("double").alias("sum_value"),
@@ -119,9 +127,9 @@ def _state_versions(target_dir: str) -> list[int]:
 # derived from the PREVIOUS version's on-disk size (driver-side listing
 # only — no extra Spark job), so state that grows re-widens automatically
 # and test-scale state collapses to one file per version instead of one
-# per shuffle partition (VERDICT r5 #6: N batches × 32 shuffle partitions
-# of a few KB each is the classic streaming small-file leak; Delta calls
-# the equivalent maintenance OPTIMIZE).
+# per shuffle partition (N batches × 32 shuffle partitions of a few KB
+# each is the classic streaming small-file leak; Delta calls the
+# equivalent maintenance OPTIMIZE).
 STATE_TARGET_FILE_BYTES = 128 * 1024 * 1024
 
 
@@ -160,9 +168,9 @@ def incremental_upsert(
     State lives in versioned parquet under ``target_dir`` (default:
     ``{checkpoint_dir}/state_table``), one complete ``v{batch_id}`` dir
     per committed batch — the plain-parquet equivalent of a Delta
-    ``MERGE INTO`` target (VERDICT r3 #4: state must not ride executor
-    memory as chained localCheckpoints, which dies with the executor and
-    is not restart-recoverable). Batch b reads the newest version BELOW
+    ``MERGE INTO`` target (state must not ride executor memory as
+    chained localCheckpoints, which dies with the executor and is not
+    restart-recoverable). Batch b reads the newest version BELOW
     b, merges, and writes ``v{b}``; version selection makes replay
     self-healing — a crash after the write but before the checkpoint
     commit leaves a ``v{b}`` that the replayed batch deterministically
@@ -231,60 +239,13 @@ def incremental_upsert(
     return spark.read.parquet(os.path.join(target, f"v{_state_versions(target)[-1]}"))
 
 
-def fresh_memory_sink_name(spark, prefix: str) -> str:
-    """A unique memory-sink table name, dropping any PREVIOUS run's view
-    for the same query shape first. Memory sinks pin their collected
-    rows on the driver heap for as long as the temp view references
-    them, so repeat runs (bench min-of-N, long sessions) would otherwise
-    accumulate one full result set per run — unreclaimable by GC because
-    the catalog still holds them. Measured r13: a session running the
-    stateful-stream family degrades 4.6 → 5.9 s/query over ~24 query
-    starts with the views retained. One live result per query shape is
-    the steady-state contract; the caller's own just-returned frame is
-    never dropped (it gets a fresh name)."""
-    import uuid as _uuid
-
-    for t in spark.catalog.listTables():
-        if t.isTemporary and t.name.startswith(prefix + "_"):
-            spark.catalog.dropTempView(t.name)
-    return f"{prefix}_{_uuid.uuid4().hex[:8]}"
-
-
-def run_to_memory(df: DataFrame, name: str, output_mode: str = "complete"):
-    """Execute a streaming aggregation to completion (availableNow) into an
-    in-memory sink; returns the finished batch DataFrame. Runs at the
-    bounded streaming width (see stream_shuffle_partitions). The name
-    should come from fresh_memory_sink_name (or at least follow its
-    ``prefix_hex`` shape): stale same-prefix views are dropped here as
-    belt-and-braces for callers that mint names directly."""
-    spark = df.sparkSession
-    if "_" in name:
-        prefix = name.rsplit("_", 1)[0]
-        for t in spark.catalog.listTables():
-            if t.isTemporary and t.name != name and t.name.startswith(prefix + "_"):
-                spark.catalog.dropTempView(t.name)
-    with stream_shuffle_partitions(df.sparkSession):
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return df.sparkSession.table(name)
-
-
-import contextlib
-
-
 STREAM_SHUFFLE_PARTITIONS = 8
 
 # Stream-STREAM joins run even narrower: each shuffle partition carries
 # FOUR state-store instances (left/right keyToNumValues + keyWithIndex),
 # so their per-micro-batch fixed cost (open, lookup, commit, snapshot ×
 # stores × partitions) is 4× a single-operator stateful query's at the
-# same width. Fresh-process A/B at sf0.1 (r12): width 8→4 takes
+# same width. Fresh-process A/B at sf0.1: width 8→4 takes
 # stream_full_join_timeout 6.4→4.0 s and stream_left_join_timeout
 # 4.6→4.1 s with identical results; the Python-stateful sessionizer
 # moves the OTHER way (8→2 is 6.3→10.4 s — applyInPandasWithState needs
@@ -305,7 +266,7 @@ def stream_shuffle_partitions(spark: SparkSession, n: int = STREAM_SHUFFLE_PARTI
     small-state stream at a batch-sized width is the classic
     misconfiguration — measured here at sf0.1, the interval join drops
     16.3 s → 3.5 s going from 64 to 16 partitions, and again to ~2.4 s
-    at 8 (r8 A/B: 16 → 8 also cut the session-timeout and left-join
+    at 8 (16 → 8 also cut the session-timeout and left-join
     fixtures by ~25-45%), with identical results throughout.
     Production sizing follows state VOLUME (keys × bytes ÷ target
     store size), never the batch analytics width; the partition count is
@@ -317,11 +278,11 @@ def stream_shuffle_partitions(spark: SparkSession, n: int = STREAM_SHUFFLE_PARTI
     old = spark.conf.get(key)
     old_nd = spark.conf.get(nd_key)
     spark.conf.set(key, str(n))
-    # Pin no-data micro-batches ON (the Spark default, made explicit in
-    # r17): the watermark fixtures now rely on the trailing no-data
-    # batch to fire timeout/eviction emission instead of paying a third
-    # data batch — a session that had disabled this conf would silently
-    # truncate their output.
+    # Pin no-data micro-batches ON (the Spark default, made explicit):
+    # the watermark fixtures rely on the trailing no-data batch to fire
+    # timeout/eviction emission instead of paying a third data batch — a
+    # session that had disabled this conf would silently truncate their
+    # output.
     spark.conf.set(nd_key, "true")
     try:
         yield
@@ -335,7 +296,7 @@ def unload_state_stores(spark: SparkSession) -> None:
     """Unload every loaded state-store provider and stop the maintenance
     thread (both restart lazily on the next stateful query).
 
-    Why (VERDICT r9 #3, the stream-family bench regression): executors
+    Why: executors
     keep state-store providers LOADED per (checkpoint, operator,
     partition, store-name) for the process lifetime — correct for one
     long-lived production stream (the cache is the point), but a
@@ -344,12 +305,11 @@ def unload_state_stores(spark: SparkSession) -> None:
     its recent version maps on the heap and each visited by the periodic
     maintenance pass — later streaming queries in the session inherit a
     GROWING tax. Measured A/B at sf0.1, three passes over the
-    six-fixture stream family in one session (r10): without the unload,
+    six-fixture stream family in one session: without the unload,
     pass-3 stream_full_join_timeout 12.9 s / stream_left_join_timeout
-    10.1 s and still climbing; with it, 4.4 s / 4.9 s and flat. This is
-    the r9 bench regression's mechanism — the r9 numbers were taken
-    after the EXTRA list grew, i.e. with more accumulated providers in
-    front of the stream rows. Local-mode note: driver JVM == executor
+    10.1 s and still climbing; with it, 4.4 s / 4.9 s and flat — so a
+    bench that runs more queries before the stream rows does not tax
+    them. Local-mode note: driver JVM == executor
     JVM, so this py4j call
     reaches the real provider registry; on a cluster it would touch only
     the driver's (empty) registry and executors unload via their own
@@ -362,13 +322,57 @@ def unload_state_stores(spark: SparkSession) -> None:
         # nuisance, never a correctness problem
 
 
+def fresh_memory_sink_name(spark, prefix: str) -> str:
+    """A unique memory-sink table name, dropping any PREVIOUS run's view
+    for the same query shape first. Memory sinks pin their collected
+    rows on the driver heap for as long as the temp view references
+    them, so repeat runs (bench min-of-N, long sessions) would otherwise
+    accumulate one full result set per run — unreclaimable by GC because
+    the catalog still holds them (a session running the stateful-stream
+    family degraded 4.6 → 5.9 s/query over ~24 query starts with the
+    views retained). One live result per query shape is the steady-state
+    contract; the caller's own just-returned frame is never dropped (it
+    gets a fresh name)."""
+    import uuid as _uuid
+
+    for t in spark.catalog.listTables():
+        if t.isTemporary and t.name.startswith(prefix + "_"):
+            spark.catalog.dropTempView(t.name)
+    return f"{prefix}_{_uuid.uuid4().hex[:8]}"
+
+
+def run_to_memory(
+    df: DataFrame,
+    prefix: str,
+    output_mode: str = "complete",
+    partitions: int = STREAM_SHUFFLE_PARTITIONS,
+) -> DataFrame:
+    """Run a streaming query to completion (availableNow) into a memory
+    sink named by fresh_memory_sink_name(prefix), at ``partitions``
+    shuffle partitions (see stream_shuffle_partitions), and return the
+    finished table. No checkpointLocation is set: Spark checkpoints to a
+    temporary dir and deletes it when the query stops, so repeat runs
+    leave nothing behind — each run starts from batch 0 anyway."""
+    spark = df.sparkSession
+    name = fresh_memory_sink_name(spark, prefix)
+    with stream_shuffle_partitions(spark, partitions):
+        (
+            df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+    return spark.table(name)
+
+
 def staged_events_single_file(spark: SparkSession, sf_dir: str) -> tuple[str, object]:
     """ONE single-file parquet image of the full events table per
-    (sf_dir, pid), SHARED by every 3-batch streaming fixture (VERDICT r7
-    #7: the four watermark fixtures each staged their own coalesce(1)
-    copy of the same table — roughly half their measured cost was
-    staging, not streaming; now the big write happens once per process
-    and each fixture just file-copies it). Returns ``(file_path, tmax)``
+    (sf_dir, pid), SHARED by every 3-batch streaming fixture: a
+    coalesce(1) copy per fixture made staging roughly half of each
+    fixture's measured cost, so the big write happens once per process
+    and each fixture just file-copies it. Returns ``(file_path, tmax)``
     with tmax (the table's max event time, a naive-UTC datetime) read
     from the staged file's ts column via pyarrow — no extra Spark job.
 
@@ -419,6 +423,51 @@ def write_event_marker_file(path: str, rows: Sequence[tuple]) -> None:
     )
 
 
+def stage_batch_files(
+    root: str, files: Sequence[tuple[str, Callable[[str], None]]], stamp: object = None
+) -> str:
+    """Stage a file-source fixture directory ``{root}/src`` and return it.
+    ``files`` lists (name, write) pairs in batch order; ``write(path)``
+    writes one file, driver-side. Mtimes are pinned 10 s apart so the
+    file source's (mtime, path) order is the list order.
+
+    An existing directory is reused only when its file set matches
+    EXACTLY and a fingerprint of the names and ``stamp`` (the content
+    the writers depend on, e.g. marker rows) matches too. The fingerprint
+    sits beside src, where the file source does not list it, and is
+    written last, so a stale layout (pid reuse), an interrupted build,
+    same-named files with other rows or a non-directory at src all
+    rebuild instead of replaying the wrong batches."""
+    import hashlib
+    import os
+    import shutil
+
+    src = os.path.join(root, "src")
+    names = [name for name, _ in files]
+    stamp_path = os.path.join(root, "src.fingerprint")
+    digest = hashlib.sha256(repr((names, stamp)).encode()).hexdigest()
+    existing = sorted(os.listdir(src)) if os.path.isdir(src) else None
+    if existing == sorted(names) and os.path.isfile(stamp_path):
+        with open(stamp_path, encoding="utf-8") as f:
+            if f.read() == digest:
+                return src
+    if os.path.exists(stamp_path):
+        os.remove(stamp_path)
+    if existing is not None:
+        shutil.rmtree(src)
+    elif os.path.lexists(src):
+        os.remove(src)
+    os.makedirs(src)
+    base = 1_000_000_000
+    for i, (name, write) in enumerate(files):
+        path = os.path.join(src, name)
+        write(path)
+        os.utime(path, (base + 10 * i, base + 10 * i))
+    with open(stamp_path, "w", encoding="utf-8") as f:
+        f.write(digest)
+    return src
+
+
 def stage_three_batch_fixture(
     spark: SparkSession,
     sf_dir: str,
@@ -426,58 +475,29 @@ def stage_three_batch_fixture(
     marker_files: Sequence[tuple[str, Sequence[tuple]]],
     replay_events: bool = False,
 ) -> str:
-    """Assemble a 3-batch watermark fixture directory: batch 0 is the
-    shared single-file events image (a-events.parquet), followed by the
-    given marker files (each a (name, rows) pair in mtime order), with
-    an optional byte-identical replay of batch 0 appended last
-    (c-replay). File mtimes are pinned so the file source's (mtime,
-    path) ordering is deterministic. Returns the src directory. The
+    """Assemble a watermark fixture directory: batch 0 is the shared
+    single-file events image (a-events.parquet), followed by the given
+    marker files (each a (name, rows) pair; a callable row is called with
+    the table's max event time), with an optional byte-identical replay
+    of batch 0 appended last (c-replay). Returns the src directory. The
     whole assembly is driver-side file I/O except the once-per-process
     events write inside staged_events_single_file."""
-    import hashlib
-    import os
     import shutil
 
-    src = os.path.join(root, "src")
-    names = ["a-events.parquet"] + [f"{n}.parquet" for n, _ in marker_files]
-    if replay_events:
-        names.append("c-replay.parquet")
     events_file, tmax = staged_events_single_file(spark, sf_dir)
     markers = [
-        (fname, [r if not callable(r) else r(tmax) for r in rows])
-        for fname, rows in marker_files
+        (f"{name}.parquet", [r(tmax) if callable(r) else r for r in rows])
+        for name, rows in marker_files
     ]
-    # Reuse only a directory whose file set matches EXACTLY and whose
-    # marker rows match too (kept in a fingerprint file beside src, where
-    # the file source does not list it): a stale scratch dir from an
-    # older fixture layout (pid reuse / interrupted run) would replay its
-    # extra files as data batches, and same-named markers with other rows
-    # would serve stale data. Rebuild on any mismatch; a non-directory at
-    # `src` is a mismatch too.
-    stamp_path = os.path.join(root, "src.fingerprint")
-    stamp = hashlib.sha256(repr((names, markers)).encode()).hexdigest()
-    existing = sorted(os.listdir(src)) if os.path.isdir(src) else None
-    stale = existing != sorted(names) or not os.path.isfile(stamp_path)
-    if not stale:
-        with open(stamp_path, encoding="utf-8") as f:
-            stale = f.read() != stamp
-    if stale:
-        if existing is not None:
-            shutil.rmtree(src)
-        elif os.path.lexists(src):
-            os.remove(src)
-        os.makedirs(src, exist_ok=True)
-        shutil.copy(events_file, os.path.join(src, "a-events.parquet"))
-        for fname, rows in markers:
-            write_event_marker_file(os.path.join(src, f"{fname}.parquet"), rows)
-        if replay_events:
-            shutil.copy(events_file, os.path.join(src, "c-replay.parquet"))
-        base = 1_000_000_000
-        for i, fname in enumerate(names):
-            os.utime(os.path.join(src, fname), (base + 10 * i, base + 10 * i))
-        with open(stamp_path, "w", encoding="utf-8") as f:
-            f.write(stamp)
-    return src
+    copy = lambda path: shutil.copy(events_file, path)  # noqa: E731
+    files = [("a-events.parquet", copy)]
+    files += [
+        (name, lambda path, rows=rows: write_event_marker_file(path, rows))
+        for name, rows in markers
+    ]
+    if replay_events:
+        files.append(("c-replay.parquet", copy))
+    return stage_batch_files(root, files, stamp=markers)
 
 
 # Spark writes NULL (and empty-string) partition values under this
@@ -489,7 +509,7 @@ HIVE_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 # 0x01-0x1F, 0x7F, and the listed specials). A raw f"{col}={value}"
 # lookup silently misses the on-disk dir for any such value — prev state
 # resolves to None and the partition's accumulated state would reset to
-# the current batch (ADVICE r14 #1, silent data loss).
+# the current batch (silent data loss).
 _PART_ESCAPE_CHARS = frozenset('"#%\'*/:=?\\{[]^')
 
 
@@ -522,7 +542,7 @@ def partitioned_incremental_merge(
     target_dir: str | None = None,
 ) -> DataFrame | None:
     """Streaming MERGE INTO a hive-partitioned, versioned parquet target
-    with PARTITION-PRUNED rewrite (VERDICT r13 #8) — the composition of
+    with PARTITION-PRUNED rewrite — the composition of
     ``incremental_upsert``'s versioned exactly-once scheme with
     ``sink_dynamic_partition_overwrite``'s partition-granular publish.
 
@@ -603,12 +623,12 @@ def partitioned_incremental_merge(
                 shutil.rmtree(os.path.join(target, f"v{v}"), ignore_errors=True)
         # localCheckpoint: `prepared` is consumed twice (touched-partition
         # metadata below + the merge write) — eager checkpointing runs
-        # the batch transformation once instead of twice per micro-batch
-        # (VERDICT r14 #8). The checkpointed blocks are explicitly
+        # the batch transformation once instead of twice per micro-batch.
+        # The checkpointed blocks are explicitly
         # unpersisted in the finally below: without that, a long-running
         # stream accumulates one batch's blocks per micro-batch on the
-        # executors until driver GC lets ContextCleaner reap them
-        # (ADVICE r15 #1). localCheckpoint data does not survive executor
+        # executors until driver GC lets ContextCleaner reap them.
+        # localCheckpoint data does not survive executor
         # loss — a failure mid-batch fails the batch, which replays
         # whole; exactly-once holds because the v{batch_id} write is the
         # only commit point.

@@ -222,14 +222,15 @@ def test_stream_firewall_is_stateless(spark, sf_dir):
     as a plan-embedded literal array of shingles (VERDICT r16 #2)."""
     from graph_etl_pipeline_spark.functions.text import norm_tokens, shingles
     from graph_etl_pipeline_spark.queries.streaming_queries import (
-        _fixture_schema, _staged_documents_three_files,
-        bench_shingle_probe_table, decontam_hit_expr,
+        _staged_documents_three_files, bench_shingle_probe_table, decontam_hit_expr,
     )
     from graph_etl_pipeline_spark.queries.textops import (
         DECONTAM_BENCH_DOCS, DECONTAM_K,
     )
     from graph_etl_pipeline_spark.io import table
-    from graph_etl_pipeline_spark.streaming.jobs import fresh_memory_sink_name
+    from graph_etl_pipeline_spark.streaming.jobs import (
+        fixture_stream, fresh_memory_sink_name,
+    )
 
     src = _staged_documents_three_files(spark, sf_dir)
     d = table(spark, sf_dir, "documents")
@@ -241,11 +242,7 @@ def test_stream_firewall_is_stateless(spark, sf_dir):
         .distinct()
     )
     probe_tab, n_buckets = bench_shingle_probe_table(bench)
-    stream = (
-        spark.readStream.schema(_fixture_schema(spark, src))
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
+    stream = fixture_stream(spark, src)
     hit = decontam_hit_expr(
         shingles(norm_tokens(F.col("text")), k=DECONTAM_K), n_buckets
     )
@@ -270,9 +267,6 @@ def test_stream_firewall_is_stateless(spark, sf_dir):
         clean.writeStream.format("memory")
         .queryName(name)
         .outputMode("append")
-        .option(
-            "checkpointLocation", os.path.join(os.path.dirname(src), f"ckpt_{name}")
-        )
         .trigger(availableNow=True)
         .start()
     )

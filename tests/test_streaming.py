@@ -4,6 +4,7 @@ availableNow over the same files."""
 
 from __future__ import annotations
 
+import glob
 import os
 import tempfile
 import uuid
@@ -26,9 +27,7 @@ def _rows(df, cols):
 
 def test_tumbling_stream_equals_batch(spark, sf_dir):
     stream = events_stream(spark, sf_dir)
-    result = run_to_memory(
-        tumbling_aggregate(stream), f"tumbling_{uuid.uuid4().hex[:8]}"
-    )
+    result = run_to_memory(tumbling_aggregate(stream), "tumbling")
 
     ev = table(spark, sf_dir, "events")
     batch = (
@@ -45,9 +44,7 @@ def test_tumbling_stream_equals_batch(spark, sf_dir):
 
 def test_session_stream_produces_sessions(spark, sf_dir):
     stream = events_stream(spark, sf_dir)
-    result = run_to_memory(
-        session_aggregate(stream), f"sessions_{uuid.uuid4().hex[:8]}"
-    )
+    result = run_to_memory(session_aggregate(stream), "sessions")
     rows = result.collect()
     assert len(rows) > 0
     ev_count = table(spark, sf_dir, "events").count()
@@ -1155,3 +1152,131 @@ def test_three_batch_fixture_rebuilds_on_changed_marker_rows(spark, sf_dir, tmp_
     ids, built = staged(-2)
     assert ids == [-2]
     assert staged(-2) == ([-2], built)
+
+
+def test_stage_batch_files_reuses_only_a_complete_matching_build(tmp_path):
+    """A staged fixture is rebuilt unless its file set and fingerprint
+    both match; a build that never wrote its fingerprint (interrupted)
+    is rebuilt, and the pinned mtimes give the file source list order."""
+    from graph_etl_pipeline_spark.streaming.jobs import stage_batch_files
+
+    writes = []
+
+    def writer(tag):
+        def write(path):
+            writes.append(tag)
+            with open(path, "w", encoding="utf-8") as f:
+                f.write(tag)
+
+        return write
+
+    files = [("b-first", writer("b")), ("a-second", writer("a"))]
+    src = stage_batch_files(str(tmp_path), files, stamp=1)
+    assert writes == ["b", "a"]
+    mtimes = [os.stat(os.path.join(src, name)).st_mtime for name, _ in files]
+    assert mtimes == sorted(mtimes) and len(set(mtimes)) == 2
+    assert stage_batch_files(str(tmp_path), files, stamp=1) == src
+    assert writes == ["b", "a"]
+    stage_batch_files(str(tmp_path), files, stamp=2)
+    assert writes == ["b", "a"] * 2
+    os.remove(tmp_path / "src.fingerprint")
+    stage_batch_files(str(tmp_path), files, stamp=2)
+    assert writes == ["b", "a"] * 3
+
+
+def test_fixture_query_reruns_leave_no_checkpoint_dir(spark, sf_dir):
+    """Fixture queries restart from batch 0 on every run, so their
+    checkpoints are temporary: two runs add no `ckpt_*` dir to this
+    process's scratch dirs."""
+    from graph_etl_pipeline_spark.io import SCRATCH_DIR
+    from graph_etl_pipeline_spark.queries.streaming_queries import (
+        stream_watermark_late,
+    )
+
+    pattern = os.path.join(SCRATCH_DIR, f"*-{os.getpid()}", "ckpt_*")
+    before = set(glob.glob(pattern))
+    for _ in range(2):
+        assert stream_watermark_late(spark, sf_dir).count() > 0
+    assert set(glob.glob(pattern)) - before == set()
+
+
+def test_only_the_stream_runner_reads_streams_or_sinks_to_memory():
+    """How a stream query is read and run is decided in one module: in
+    the package, `readStream` and `format("memory")` each appear in
+    exactly one function, and both functions are in streaming/jobs.py."""
+    import ast
+    import pathlib
+
+    import graph_etl_pipeline_spark as pkg
+
+    hits = set()
+
+    class Calls(ast.NodeVisitor):
+        def __init__(self, where):
+            self.where, self.scope = where, ["<module>"]
+
+        def visit_FunctionDef(self, node):
+            self.scope.append(node.name)
+            self.generic_visit(node)
+            self.scope.pop()
+
+        def visit_Attribute(self, node):
+            if node.attr == "readStream":
+                hits.add(("readStream", self.where, self.scope[-1]))
+            self.generic_visit(node)
+
+        def visit_Call(self, node):
+            fn, args = node.func, node.args
+            if (
+                isinstance(fn, ast.Attribute)
+                and fn.attr == "format"
+                and args
+                and isinstance(args[0], ast.Constant)
+                and args[0].value == "memory"
+            ):
+                hits.add(("memory", self.where, self.scope[-1]))
+            self.generic_visit(node)
+
+    root = pathlib.Path(pkg.__file__).parent
+    for path in sorted(root.rglob("*.py")):
+        Calls(str(path.relative_to(root))).visit(ast.parse(path.read_text()))
+    assert sorted(hits) == [
+        ("memory", "streaming/jobs.py", "run_to_memory"),
+        ("readStream", "streaming/jobs.py", "fixture_stream"),
+    ]
+
+
+def test_stream_queries_run_at_their_pinned_widths(spark, sf_dir, monkeypatch):
+    """The three stream-stream joins run at STREAM_JOIN_SHUFFLE_PARTITIONS
+    (4): each of their shuffle partitions carries four join state stores,
+    and the full join took 6.4 s at width 8 against 4.0 s at 4 (sf0.1).
+    Every other bounded stream runs at STREAM_SHUFFLE_PARTITIONS (8); the
+    foreachBatch upserts run at the session width."""
+    from graph_etl_pipeline_spark.queries import streaming_queries
+    from graph_etl_pipeline_spark.registry import all_queries
+    from graph_etl_pipeline_spark.streaming import jobs
+
+    real = jobs.stream_shuffle_partitions
+    widths: list[int] = []
+
+    def spy(spark, n=jobs.STREAM_SHUFFLE_PARTITIONS):
+        widths.append(n)
+        return real(spark, n)
+
+    monkeypatch.setattr(jobs, "stream_shuffle_partitions", spy)
+    streams = {
+        name: spec.fn
+        for name, spec in all_queries().items()
+        if spec.fn.__module__ == streaming_queries.__name__
+    }
+    assert len(streams) == 17
+    got = {}
+    for name, fn in sorted(streams.items()):
+        widths.clear()
+        fn(spark, sf_dir)
+        got[name] = list(widths)
+    joins = {"stream_interval_join", "stream_left_join_timeout", "stream_full_join_timeout"}
+    upserts = {"stream_incremental_upsert", "stream_sketch_register_merge", "stream_countmin_topk"}
+    assert got == {
+        name: [] if name in upserts else [4] if name in joins else [8] for name in streams
+    }
