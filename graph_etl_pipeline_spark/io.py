@@ -7,7 +7,12 @@ predicate-pushdown-friendly parquet reads instead of in-memory dicts.
 
 from __future__ import annotations
 
+from collections.abc import Callable, Sequence
+from typing import TypeVar
+
 from pyspark.sql import DataFrame, SparkSession
+
+T = TypeVar("T")
 
 TABLES = (
     "region",
@@ -180,6 +185,7 @@ def tables(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
 # (see scratch_dir); dirs of dead pids are reaped on next use.
 import hashlib as _hashlib
 import os as _os
+import uuid as _uuid
 
 SCRATCH_DIR = _os.path.join(_os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))), ".cache", "scratch")
 
@@ -197,6 +203,22 @@ def scratch_dir(name: str, key: str) -> str:
     The dir itself is not created; writers create it."""
     _reap_stale_pid_dirs(SCRATCH_DIR)
     return _os.path.join(SCRATCH_DIR, f"{name}-{key}-{_os.getpid()}")
+
+
+def fresh_scratch_dir(name: str) -> str:
+    """A new scratch dir for one run of ``name``, after removing the dirs
+    this process made for earlier runs of it: one live dir per name, the
+    contract streaming.jobs.fresh_memory_sink_name keeps for memory
+    sinks. A frame that reads an earlier run's dir is invalid once the
+    next run starts."""
+    import shutil
+
+    path = scratch_dir(name, _uuid.uuid4().hex[:8])
+    own = f"-{_os.getpid()}"
+    for entry in _os.listdir(SCRATCH_DIR) if _os.path.isdir(SCRATCH_DIR) else ():
+        if entry.endswith(own) and entry.rsplit("-", 2)[0] == name:
+            shutil.rmtree(_os.path.join(SCRATCH_DIR, entry), ignore_errors=True)
+    return path
 
 
 def _pid_alive(pid: int) -> bool:
@@ -327,11 +349,56 @@ def materialize(df: DataFrame, name: str) -> DataFrame:
     # same query over two scale factors would collide; key the inputs in.
     # The written layout (file count, partitioning) follows the writer's
     # confs, and readers plan on that layout: key those confs in too, so
-    # an AQE-off reader never plans on an AQE-coalesced table
-    files = "\n".join(sorted(df.inputFiles()))
+    # an AQE-off reader never plans on an AQE-coalesced table. A plan
+    # that reads no file (one over a localCheckpoint renders as a bare
+    # LogicalRDD) carries nothing that tells two corpora apart, so it
+    # gets a fresh address instead of reusing another corpus's table.
+    files = "\n".join(sorted(df.inputFiles())) or _uuid.uuid4().hex
     confs = "\n".join(spark.conf.get(k) for k in _LAYOUT_CONFS)
     digest = _hashlib.md5(f"{plan}\0{files}\0{confs}".encode()).hexdigest()[:12]
     dest = scratch_dir(name, digest)
     if not _os.path.exists(_os.path.join(dest, "_SUCCESS")):
         df.write.mode("overwrite").parquet(dest)
     return spark.read.parquet(dest)
+
+
+# Every memoized per-corpus value (see memo), by full key.
+_MEMO: dict[tuple, object] = {}
+
+
+def memo(
+    name: str,
+    frames: Sequence[DataFrame],
+    build: Callable[[], T],
+    *extra,
+    refresh: bool = False,
+) -> T:
+    """``build()``, computed once per corpus and served from then on: the
+    one home of derived per-corpus state (trained centroids, sketch
+    state, yesterday's labels, pair frames, hot-key verdicts).
+
+    The key is ``(name, applicationId, sorted input files of frames,
+    *extra)``. Rewriting a corpus, even in place, changes its input
+    files; a frame with no file-backed relation keys on name and extra
+    alone. One retention rule holds for every entry: entries of other
+    applications are dropped on sight (their frames belong to a stopped
+    session), and within an application a new file set for the same
+    ``(name, extra)`` replaces the old entry, so superseded frames and
+    the blocks they pin are released. ``refresh=True`` rebuilds on a hit:
+    the producer of an artifact pays its build every call."""
+    app = frames[0].sparkSession.sparkContext.applicationId
+    files: list[str] = []
+    for df in frames:
+        try:
+            files += df.inputFiles()
+        except Exception:
+            pass  # no file-backed relation
+    key = (name, app, tuple(sorted(files)), *extra)
+    stale = [
+        k for k in _MEMO if k[1] != app or (k[0], k[3:]) == (name, extra) and k != key
+    ]
+    for k in stale:
+        del _MEMO[k]
+    if refresh or key not in _MEMO:
+        _MEMO[key] = build()
+    return _MEMO[key]

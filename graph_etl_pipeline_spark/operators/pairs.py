@@ -1,8 +1,7 @@
 """Bounded within-group self-pair generation — the ONE copy of the
-cap/probe/triangle-tile idea that previously existed three times over
-(embedding-cosine hot labels, copurchase hot baskets, and the dedup
-df-cap all bound quadratic per-group fanout the same way; VERDICT r6 #4
-asked for the extraction).
+cap/probe/triangle-tile idea: embedding-cosine hot labels, copurchase
+hot baskets, Jaccard wedge hubs and SemDeDup hot cells all bound
+quadratic per-group fanout through it.
 
 ``bounded_self_pairs(df, key, order_col, cap, select_pairs)`` emits every
 within-``key`` pair (a, b) with ``a.order_col < b.order_col`` — exactly
@@ -11,8 +10,8 @@ the plain per-group self-join's pair set — but ADAPTIVELY:
 * A map-combined per-key count probes for groups over ``cap``. None (the
   common case once upstream blocking sizes groups sanely) ⇒ the plain
   self-join, zero extra work, zero WindowExecs. The probe's verdict is
-  memoized per (application, input plan, key, cap) — see ``_HOT_PROBE``
-  — so steady-state runs skip the eager count job entirely.
+  memoized per input plan, key and cap through ``io.memo``, so
+  steady-state runs skip the eager count job entirely.
 * Hot groups present (power-law corpora — hub nodes, mega-baskets, fat
   LSH buckets) ⇒ keys split cold/hot via broadcast anti/semi joins; cold
   keys keep the plain join, hot keys go through TRIANGLE TILING: rows
@@ -39,22 +38,10 @@ from collections.abc import Callable
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from graph_etl_pipeline_spark.io import memo
+
 # Internal column names; callers' frames must not collide.
 _TILE_I, _TILE_J, _CHUNK, _MAXC = "__tile_i", "__tile_j", "__chunk", "__max_chunk"
-
-# Hot-key probe memo: (applicationId, input-plan semanticHash, key, cap)
-# -> bool. The probe is BLOCKING STATISTICS, not data — both branches emit
-# the identical pair set (a stale/wrong verdict can only mis-pick the
-# physical strategy, never the rows), so caching it per corpus is the
-# same move a production planner makes when it keeps table stats between
-# queries. Without the memo every steady-state run of an adaptive caller
-# pays one full eager count job before the real query starts (measured
-# sf0.1: ~0.4 s of the dedup_embedding_cosine bench row was this probe).
-# Values are plain bools — no DataFrame/checkpoint retention (the
-# ADVICE r11 #2 backlog class does not apply) — and the dict is cleared
-# at a small cap as a belt-and-braces bound.
-_HOT_PROBE: dict[tuple, bool] = {}
-_HOT_PROBE_CAP = 256
 
 
 def hot_keys(df: DataFrame, key: str, cap: int) -> DataFrame:
@@ -126,31 +113,19 @@ def bounded_self_pairs(
     the key count (the SemDeDup cell join). It must emit exactly
     ``plain_self_pairs``' pair set; only the physical strategy differs."""
     plain = plain_impl or (lambda d: plain_self_pairs(d, key, order_col))
-    # Memo key includes the resolved input FILE LIST, not just the plan
-    # hash (ADVICE r12 #2): semanticHash is plan-shape-based, so data
-    # rewritten in place under the same path within one application
-    # would otherwise serve a stale verdict and a newly-hot corpus could
-    # run the unbounded plain join — the skew blowup this module exists
-    # to prevent. inputFiles() is a driver-side plan walk (no job); a
-    # re-ingest that changes any part file changes the key. Same
-    # fingerprint discipline as graph_queries._ANF_DENOMS.
-    try:
-        files = tuple(sorted(df.inputFiles()))
-    except Exception:
-        files = ()  # non-file-backed frames: plan hash alone
-    probe_key = (
-        df.sparkSession.sparkContext.applicationId,
+    # The verdict is blocking statistics, not data: both branches emit
+    # the identical pair set, so a verdict can only pick the physical
+    # strategy. Keying it on the input files as well as the plan keeps a
+    # corpus rewritten in place from reusing a stale verdict and running
+    # the unbounded plain join on newly hot groups.
+    has_hot = memo(
+        "hot_probe",
+        [df],
+        lambda: hot_keys(df, key, cap).limit(1).count() > 0,
         df.semanticHash(),
-        files,
         key,
         cap,
     )
-    has_hot = _HOT_PROBE.get(probe_key)
-    if has_hot is None:
-        has_hot = hot_keys(df, key, cap).limit(1).count() > 0
-        if len(_HOT_PROBE) >= _HOT_PROBE_CAP:
-            _HOT_PROBE.clear()
-        _HOT_PROBE[probe_key] = has_hot
     if not has_hot:
         return select_pairs(plain(df))
     hot = hot_keys(df, key, cap)

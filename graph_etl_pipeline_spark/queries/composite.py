@@ -750,7 +750,7 @@ def pipeline_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- Cross-modal dedup closure (r13) -----------------------------------------
+# --- Cross-modal dedup closure ----------------------------------------------
 
 
 def _sql_retrained_sempairs_ctes() -> str:
@@ -878,11 +878,7 @@ def pipeline_crossmodal_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- Incremental cross-modal dedup (r14, VERDICT r13 #7) ---------------------
-
-# Yesterday's-labels memo: pair-artifact file set → the materialized base
-# CC label frame (a parquet scan). See pipeline_incremental_crossmodal.
-_INCR_BASE_LABELS: dict[tuple, DataFrame] = {}
+# --- Incremental cross-modal dedup -------------------------------------------
 
 
 def _sql_frozen_sempairs_ctes() -> str:
@@ -1010,11 +1006,11 @@ def _incremental_crossmodal_oracle() -> str:
     tags=("pipeline", "dedup", "incremental", "llm"),
 )
 def pipeline_incremental_crossmodal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INCREMENTAL cross-modal dedup closure (VERDICT r13 #7) — the
-    daily-refresh shape the three verified composites lacked: they
-    rebuild their pair graphs per corpus; this query takes yesterday's
-    PERSISTED state (base pair artifacts + base component labels, all
-    content-addressed) and folds in a new day's batch
+    """INCREMENTAL cross-modal dedup closure — the daily-refresh shape:
+    the three verified composites rebuild their pair graphs per corpus;
+    this query takes yesterday's PERSISTED state (base pair artifacts +
+    base component labels, all content-addressed) and folds in a new
+    day's batch
     (doc_id % INCR_NEW_MOD == 0, the dedup_incremental_lsh cohort)
     touching only delta-sized work:
 
@@ -1045,7 +1041,7 @@ def pipeline_incremental_crossmodal(spark: SparkSession, sf_dir: str) -> DataFra
     pay delta-bounded joins plus a CC over the contracted graph — the
     full pair generation and corpus-wide CC never re-run."""
     from graph_etl_pipeline_spark.graph.model import PropertyGraph, edge_endpoints
-    from graph_etl_pipeline_spark.io import materialize
+    from graph_etl_pipeline_spark.io import materialize, memo
     from graph_etl_pipeline_spark.queries.dedup import _incr_lexical_pairs
     from graph_etl_pipeline_spark.queries.similarity import _incr_semantic_pairs
 
@@ -1062,32 +1058,22 @@ def pipeline_incremental_crossmodal(spark: SparkSession, sf_dir: str) -> DataFra
         )
 
     # Yesterday's labels: CC over the base pair union, persisted once per
-    # base corpus. The CC rounds execute EAGERLY while the CC output
-    # plan is being BUILT (each round localCheckpoints), so even a
-    # content-addressed materialize would re-pay the rounds per call
-    # just to compute the digest — the path memo below is what actually
-    # makes "read yesterday's labels from storage" true: keyed on the
-    # two pair artifacts' files (themselves content-addressed per
-    # corpus), it hands back the parquet-scan frame directly.
-    # applicationId in the key (the _HOT_PROBE precedent, ADVICE r14 #2);
-    # dead-session entries evicted on sight (they pin full DataFrame
-    # lineage, unlike _HOT_PROBE's bools)
-    app = spark.sparkContext.applicationId
-    for stale in [k for k in _INCR_BASE_LABELS if k[0] != app]:
-        del _INCR_BASE_LABELS[stale]
-    memo_key = (app, *sorted(lex_b.inputFiles() + sem_b.inputFiles()))
-    base_labels = _INCR_BASE_LABELS.get(memo_key)
-    if base_labels is None:
+    # base corpus. The CC rounds execute EAGERLY while the CC output plan
+    # is being BUILT (each round localCheckpoints), so even a
+    # content-addressed materialize would re-pay the rounds per call just
+    # to compute the digest; memoizing on the two base pair artifacts'
+    # files (themselves content-addressed per corpus) is what makes
+    # "read yesterday's labels from storage" true.
+    def base_cc_labels() -> DataFrame:
         base_edges = as_edges(lex_b, sem_b)
-        base_labels = materialize(
+        return materialize(
             PropertyGraph(edge_endpoints(base_edges), base_edges)
             .connected_components()
-            .select(
-                F.col("uid").alias("doc_id"), F.col("component").alias("base_label")
-            ),
+            .select(F.col("uid").alias("doc_id"), F.col("component").alias("base_label")),
             "incr_base_cc_labels",
         )
-        _INCR_BASE_LABELS[memo_key] = base_labels
+
+    base_labels = memo("incr_base_cc_labels", [lex_b, sem_b], base_cc_labels)
 
     # Today: contract new-edge endpoints through yesterday's labels. The
     # delta edge set is pinned once (its lineage carries the band join +
@@ -1134,7 +1120,7 @@ def pipeline_incremental_crossmodal(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-# --- Retrain boundary of the incremental family (r15, VERDICT r14 #7) --------
+# --- Retrain boundary of the incremental family ------------------------------
 
 
 def _retrain_reconciliation_oracle() -> str:
@@ -1198,9 +1184,9 @@ def _retrain_reconciliation_oracle() -> str:
     tags=("pipeline", "dedup", "incremental", "llm"),
 )
 def pipeline_crossmodal_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RETRAIN-BOUNDARY RECONCILIATION (VERDICT r14 #7) — the scheduled
-    edge pipeline_incremental_crossmodal's frozen-quantizer contract
-    defers to: production retrains Lloyd on base+batch on a schedule,
+    """RETRAIN-BOUNDARY RECONCILIATION — the scheduled edge
+    pipeline_incremental_crossmodal's frozen-quantizer contract defers
+    to: production retrains Lloyd on base+batch on a schedule,
     and at that boundary every semantic cell/pair artifact is
     INVALIDATED while the lexical artifacts survive (shingles and
     Jaccard verification never see the quantizer). This operator runs

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from graph_etl_pipeline_spark.functions.text import SQL_TOKS, norm_tokens, shingles, sql_shingles
-from graph_etl_pipeline_spark.io import materialize, table
+from graph_etl_pipeline_spark.io import materialize, memo, table
 from graph_etl_pipeline_spark.registry import register
 
 N_HASHES = 8
@@ -78,6 +78,13 @@ MINHASH_ROWS_PER_TASK = 150
 def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents", rows_per_task=MINHASH_ROWS_PER_TASK)
     return d.select("doc_id", shingles(norm_tokens(d.text)).alias("shingles"))
+
+
+def _shingle_table(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The per-doc shingle arrays, materialized once per corpus: every LSH
+    path (pairs, recall audit, daily batch, bucket stats, incremental
+    pairs) scans this one content-addressed table."""
+    return materialize(_doc_shingles(spark, sf_dir), "lsh_doc_shingles")
 
 
 def _rare_shingle_index(
@@ -247,11 +254,7 @@ def _lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # localCheckpoint pinning blocks to executor storage. The COMPACT
     # array form is what's written (one doc_id per row); consumers explode
     # lazily — exploding a scanned array is cheap, re-tokenizing isn't.
-    d = table(spark, sf_dir, "documents", rows_per_task=MINHASH_ROWS_PER_TASK)
-    ds = materialize(
-        d.select("doc_id", shingles(norm_tokens(d.text)).alias("shingles")),
-        "lsh_doc_shingles",
-    )
+    ds = _shingle_table(spark, sf_dir)
     # Signatures are map-side from the materialized array table; NOT
     # separately materialized (VERDICT r2 #6): both band-join sides
     # recompute only a scan + md5 projection off the shingle parquet —
@@ -1053,7 +1056,7 @@ def dedup_lsh_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The θ comparison is integer cross-multiplied (2·|∩| ≥ |∪|), so
     truth membership never touches a float."""
-    ds = materialize(_doc_shingles(spark, sf_dir), "lsh_doc_shingles")
+    ds = _shingle_table(spark, sf_dir)
     ex = ds.select("doc_id", F.explode("shingles").alias("s"))
     sizes = ds.select("doc_id", F.size("shingles").cast("long").alias("n_sh"))
     ea, eb = ex.alias("ra"), ex.alias("rb")
@@ -1083,20 +1086,7 @@ def dedup_lsh_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_a", "doc_b")
     )
-    sigs = _signatures_from_arrays(ds)
-    unpivoted = sigs.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(f"b{b}").alias("band"), F.col(f"band{b}").alias("sig")
-                    )
-                    for b in range(N_BANDS)
-                ]
-            )
-        ).alias("bs"),
-    ).select("doc_id", "bs.band", "bs.sig")
+    unpivoted = _band_unpivoted(_signatures_from_arrays(ds))
     ua, ub = unpivoted.alias("ua"), unpivoted.alias("ub")
     candidates = (
         ua.join(
@@ -1499,23 +1489,8 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     only; verification explodes shingles for CANDIDATE pairs alone. At
     100 TB the standing-index side is additionally pre-partitioned by
     band signature on disk, making the daily join a co-located probe."""
-    d = table(spark, sf_dir, "documents", rows_per_task=MINHASH_ROWS_PER_TASK)
-    ds = materialize(
-        d.select("doc_id", shingles(norm_tokens(d.text)).alias("shingles")),
-        "lsh_doc_shingles",
-    )
-    sigs = _signatures_from_arrays(ds)
-    unpivoted = sigs.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(f"b{b}").alias("band"), F.col(f"band{b}").alias("sig"))
-                    for b in range(N_BANDS)
-                ]
-            )
-        ).alias("bs"),
-    ).select("doc_id", "bs.band", "bs.sig")
+    ds = _shingle_table(spark, sf_dir)
+    unpivoted = _band_unpivoted(_signatures_from_arrays(ds))
 
     is_new = F.col("doc_id") % INCR_NEW_MOD == 0
     new_u = unpivoted.filter(is_new).alias("n")
@@ -1609,23 +1584,8 @@ def dedup_band_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-combined count per (band, sig), one 4-row rollup — strictly
     cheaper than any dedup it de-risks, and every output is an exact
     integer the driver hash certifies."""
-    d = table(spark, sf_dir, "documents", rows_per_task=MINHASH_ROWS_PER_TASK)
-    ds = materialize(
-        d.select("doc_id", shingles(norm_tokens(d.text)).alias("shingles")),
-        "lsh_doc_shingles",
-    )
-    sigs = _signatures_from_arrays(ds)
-    unpivoted = sigs.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(f"b{b}").alias("band"), F.col(f"band{b}").alias("sig"))
-                    for b in range(N_BANDS)
-                ]
-            )
-        ).alias("bs"),
-    ).select("doc_id", "bs.band", "bs.sig")
+    ds = _shingle_table(spark, sf_dir)
+    unpivoted = _band_unpivoted(_signatures_from_arrays(ds))
     bs = unpivoted.groupBy("band", "sig").agg(F.count(F.lit(1)).alias("sz"))
     return bs.groupBy("band").agg(
         F.count(F.lit(1)).alias("n_buckets"),
@@ -1634,14 +1594,6 @@ def dedup_band_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("sz") == 1, 1).otherwise(0)).alias("n_singletons"),
         F.sum(F.expr("sz * (sz - 1) div 2")).alias("cand_pairs"),
     )
-
-
-# Per-corpus memo for the incremental pair frames: the content-addressed
-# artifacts already dedupe the WRITES, but computing their digests means
-# re-ANALYZING the full shingle/band/verify derivation per call (~1 s of
-# pure Catalyst time at sf0.1); the memo hands back the parquet-scan
-# frames directly, keyed on the corpus files that would invalidate them.
-_INCR_LEX_MEMO: dict[tuple, tuple[DataFrame, DataFrame]] = {}
 
 
 def _incr_lexical_pairs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
@@ -1665,24 +1617,18 @@ def _incr_lexical_pairs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, Da
     base-base ∪ delta-involved candidate pairs ≡ the full-corpus
     candidate set, and the union of the two verified halves ≡ the
     full-recompute pair graph — which is what lets the composite's
-    DuckDB oracle recompute from scratch."""
+    DuckDB oracle recompute from scratch.
+
+    The pair frames are memoized per corpus (io.memo): the artifacts
+    already dedupe the writes, but computing their digests re-analyzes
+    the whole shingle/band/verify derivation per call (~1 s of Catalyst
+    time at sf0.1); the memo hands back the parquet-scan frames."""
     d = table(spark, sf_dir, "documents", rows_per_task=MINHASH_ROWS_PER_TASK)
-    # applicationId in the key (the _HOT_PROBE precedent, ADVICE r14 #2):
-    # the memoized values are DataFrames bound to a live session — a
-    # stopped-and-recreated SparkSession must miss, not serve dead frames.
-    # Entries from OTHER applicationIds are evicted on sight: they are
-    # dead-session DataFrames pinning full lineage, and unlike
-    # _HOT_PROBE's plain bools they must not accumulate.
-    app = spark.sparkContext.applicationId
-    for stale in [k for k in _INCR_LEX_MEMO if k[0] != app]:
-        del _INCR_LEX_MEMO[stale]
-    memo_key = (app, *sorted(d.inputFiles()))
-    if memo_key in _INCR_LEX_MEMO:
-        return _INCR_LEX_MEMO[memo_key]
-    ds = materialize(
-        d.select("doc_id", shingles(norm_tokens(d.text)).alias("shingles")),
-        "lsh_doc_shingles",
-    )
+    return memo("incr_lex_pairs", [d], lambda: _split_lexical_pairs(spark, sf_dir))
+
+
+def _split_lexical_pairs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    ds = _shingle_table(spark, sf_dir)
     unpiv = _band_unpivoted(_signatures_from_arrays(ds))
     is_new = F.col("doc_id") % INCR_NEW_MOD == 0
     base_u, delta_u = unpiv.filter(~is_new), unpiv.filter(is_new)
@@ -1721,5 +1667,4 @@ def _incr_lexical_pairs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, Da
     delta_pairs = materialize(
         _jaccard_verify(dcand, ds).select("doc_a", "doc_b"), "incr_lex_delta_pairs"
     )
-    _INCR_LEX_MEMO[memo_key] = (base_pairs, delta_pairs)
     return base_pairs, delta_pairs

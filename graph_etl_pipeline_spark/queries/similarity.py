@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from graph_etl_pipeline_spark.io import materialize, table
+from graph_etl_pipeline_spark.io import materialize, memo, table
 from graph_etl_pipeline_spark.registry import register
 
 DIM = 64
@@ -465,47 +465,32 @@ def _collect_centroids(cents: DataFrame) -> DataFrame:
     return spark.createDataFrame(rows, "cid bigint, ce array<bigint>")
 
 
-# Trained-quantizer memo: (sorted input files, rounds) → centroid rows.
-# The K × DIM int64 centroids are the TRAINED ARTIFACT of Lloyd — in
-# production they are persisted once and every consumer loads them; five
-# registry queries train on the identical corpus, so re-running the
-# rounds-1 corpus passes per query was pure waste. Values are exact
-# int64, so the cached table is bit-identical to a fresh training run
-# (asserted transitively by every consumer's oracle row).
-_TRAINED_CENTROIDS: dict[tuple, list] = {}
-
-
-def _lloyd(e: DataFrame, rounds: int) -> tuple[DataFrame, DataFrame]:
-    """Run `rounds` Lloyd assignment steps (rounds-1 centroid recomputes)
-    from the deterministic first-K seed; returns ``(assigned, cents)`` —
-    the final assignment AND the centroids it was scored against, so
-    consumers (the IVF probe ranking) reuse the same trained centroids
-    instead of re-deriving them (ADVICE r5: also removes the latent
-    None-centroids branch when rounds == 1). Trained centroids are
-    memoized per (corpus files, rounds): the first caller in a process
-    pays the training passes, later callers assign against the cached
-    literal centroid table directly."""
-    q = _quantize_fixed(e)
-    if rounds == 1:
-        cents = q.filter(F.col("vec_id") < K_CLUSTERS).select(
-            F.col("vec_id").alias("cid"), F.col("qe").alias("ce")
-        )
-        return _assign_cells(q, cents), cents
-    key = (tuple(sorted(e.inputFiles())), rounds)
-    if key not in _TRAINED_CENTROIDS:
-        cents = q.filter(F.col("vec_id") < K_CLUSTERS).select(
-            F.col("vec_id").alias("cid"), F.col("qe").alias("ce")
-        )
-        assigned = _assign_cells(q, cents)
-        for _ in range(rounds - 1):
-            cents = _collect_centroids(_recompute_centroids(assigned))
-            assigned = _assign_cells(q, cents)
-        # cents is a literal table here (_collect_centroids); its rows are
-        # the trained artifact.
-        _TRAINED_CENTROIDS[key] = [(r["cid"], list(r["ce"])) for r in cents.collect()]
-    cents = e.sparkSession.createDataFrame(
-        _TRAINED_CENTROIDS[key], "cid bigint, ce array<bigint>"
+def _train_centroids(q: DataFrame) -> list:
+    """LLOYD_ROUNDS of Lloyd over the quantized vectors ``q`` from the
+    deterministic first-K seed; returns the trained centroid rows
+    ``[(cid, ce)]``. The K × DIM int64 centroids are the trained artifact:
+    callers memoize them per corpus (io.memo) and every consumer assigns
+    against them as a literal table. Values are exact int64, so the rows
+    are bit-identical to a fresh training run (asserted transitively by
+    every consumer's oracle row)."""
+    cents = q.filter(F.col("vec_id") < K_CLUSTERS).select(
+        F.col("vec_id").alias("cid"), F.col("qe").alias("ce")
     )
+    for _ in range(LLOYD_ROUNDS - 1):
+        cents = _collect_centroids(_recompute_centroids(_assign_cells(q, cents)))
+    return [(r["cid"], list(r["ce"])) for r in cents.collect()]
+
+
+def _lloyd(e: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Assign every vector of ``e`` to the corpus's trained centroids;
+    returns ``(assigned, cents)`` — the final assignment AND the
+    centroids it was scored against, so consumers (the IVF probe
+    ranking) reuse the same trained centroids instead of re-deriving
+    them. The first caller per corpus pays the training passes, later
+    callers assign against the memoized literal centroid table."""
+    q = _quantize_fixed(e)
+    rows = memo("lloyd_centroids", [e], lambda: _train_centroids(q))
+    cents = e.sparkSession.createDataFrame(rows, "cid bigint, ce array<bigint>")
     return _assign_cells(q, cents), cents
 
 
@@ -572,7 +557,7 @@ def sim_kmeans_iterate(spark: SparkSession, sf_dir: str) -> DataFrame:
     DIM-fanout explode feeding a two-level partial agg for the mean.
     Rounds are a fixed small constant (production Lloyd runs 5-20); state
     between rounds is K centroids, never the corpus."""
-    assigned, _cents = _lloyd(table(spark, sf_dir, "embeddings"), LLOYD_ROUNDS)
+    assigned, _cents = _lloyd(table(spark, sf_dir, "embeddings"))
     return assigned.select(
         "vec_id", "label", F.col("cid").alias("cluster"), "score"
     )
@@ -604,7 +589,7 @@ def sim_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment table is written once (partitioned by cell) and queries
     touch only probed partitions."""
     e = table(spark, sf_dir, "embeddings")
-    assigned, cents = _lloyd(e, LLOYD_ROUNDS)
+    assigned, cents = _lloyd(e)
     assigned = assigned.select("vec_id", "cid")
     # rank cells by the query vector's integer score against the SAME
     # trained centroids the assignment used (single training pass —
@@ -843,7 +828,7 @@ def _semdedup_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     from graph_etl_pipeline_spark.io import materialize
 
     e = table(spark, sf_dir, "embeddings")
-    assigned, _cents = _lloyd(e, LLOYD_ROUNDS)
+    assigned, _cents = _lloyd(e)
     return materialize(
         assigned.select("vec_id", "cid", "qe", _int_dot("qe", "qe").alias("nn")),
         "semdedup_members",
@@ -873,14 +858,6 @@ def _semdedup_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return materialize(verified, "semdedup_pairs")
 
 
-# Frozen-model memo: sorted corpus files → BASE-cohort-trained centroid
-# rows. Deliberately separate from _TRAINED_CENTROIDS: that memo keys on
-# input files alone, and the base cohort is a FILTER over the same files
-# — sharing the dict would serve full-corpus centroids to the frozen
-# path (or vice versa) whenever both run in one process.
-_FROZEN_BASE_CENTROIDS: dict[tuple, list] = {}
-
-
 def _lloyd_frozen_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LLOYD_ROUNDS of Lloyd trained on the STANDING corpus only
     (vec_id % INCR_NEW_MOD != 0 — the dedup_incremental_lsh cohort
@@ -897,28 +874,9 @@ def _lloyd_frozen_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     from graph_etl_pipeline_spark.queries.dedup import INCR_NEW_MOD
 
     e = table(spark, sf_dir, "embeddings")
-    key = tuple(sorted(e.inputFiles()))
-    if key not in _FROZEN_BASE_CENTROIDS:
-        qb = _quantize_fixed(e.filter(F.col("vec_id") % INCR_NEW_MOD != 0))
-        cents = qb.filter(F.col("vec_id") < K_CLUSTERS).select(
-            F.col("vec_id").alias("cid"), F.col("qe").alias("ce")
-        )
-        assigned = _assign_cells(qb, cents)
-        for _ in range(LLOYD_ROUNDS - 1):
-            cents = _collect_centroids(_recompute_centroids(assigned))
-            assigned = _assign_cells(qb, cents)
-        _FROZEN_BASE_CENTROIDS[key] = [
-            (r["cid"], list(r["ce"])) for r in cents.collect()
-        ]
-    return spark.createDataFrame(
-        _FROZEN_BASE_CENTROIDS[key], "cid bigint, ce array<bigint>"
-    )
-
-
-# Per-corpus memo for the incremental semantic pair frames — same
-# rationale as dedup._INCR_LEX_MEMO: the artifacts dedupe writes, the
-# memo dedupes the per-call Catalyst re-analysis of their derivations.
-_INCR_SEM_MEMO: dict[tuple, tuple[DataFrame, DataFrame]] = {}
+    qb = _quantize_fixed(e.filter(F.col("vec_id") % INCR_NEW_MOD != 0))
+    rows = memo("lloyd_base_centroids", [e], lambda: _train_centroids(qb))
+    return spark.createDataFrame(rows, "cid bigint, ce array<bigint>")
 
 
 def _incr_semantic_pairs(
@@ -941,19 +899,17 @@ def _incr_semantic_pairs(
 
     Given frozen cells, assignment is per-vector and the τ test is
     per-pair, so base ∪ delta ≡ the full pair set under the same model —
-    exact decomposition, same as the lexical half."""
+    exact decomposition, same as the lexical half. The pair frames are
+    memoized per corpus (io.memo), like the lexical half's."""
+    e = table(spark, sf_dir, "embeddings")
+    return memo("incr_sem_pairs", [e], lambda: _split_semantic_pairs(spark, sf_dir, e))
+
+
+def _split_semantic_pairs(
+    spark: SparkSession, sf_dir: str, e: DataFrame
+) -> tuple[DataFrame, DataFrame]:
     from graph_etl_pipeline_spark.queries.dedup import INCR_NEW_MOD
 
-    e = table(spark, sf_dir, "embeddings")
-    # applicationId in the key (the _HOT_PROBE precedent, ADVICE r14 #2);
-    # dead-session entries evicted on sight (they pin full DataFrame
-    # lineage, unlike _HOT_PROBE's bools)
-    app = spark.sparkContext.applicationId
-    for stale in [k for k in _INCR_SEM_MEMO if k[0] != app]:
-        del _INCR_SEM_MEMO[stale]
-    memo_key = (app, *sorted(e.inputFiles()))
-    if memo_key in _INCR_SEM_MEMO:
-        return _INCR_SEM_MEMO[memo_key]
     cents = _lloyd_frozen_base(spark, sf_dir)
     q = _quantize_fixed(e)
     is_new = F.col("vec_id") % INCR_NEW_MOD == 0
@@ -1006,7 +962,6 @@ def _incr_semantic_pairs(
         ),
         "incr_sem_delta_pairs",
     )
-    _INCR_SEM_MEMO[memo_key] = (base_pairs, delta_pairs)
     return base_pairs, delta_pairs
 
 
@@ -1796,7 +1751,7 @@ def pipeline_ivf_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     LUT; the final top-k is TakeOrderedAndProject. No stage touches more
     than the probed cells after the coarse assignment."""
     e = table(spark, sf_dir, "embeddings")
-    assigned, cents = _lloyd(e, LLOYD_ROUNDS)
+    assigned, cents = _lloyd(e)
     qvec = _quantize_fixed(e).filter(F.col("vec_id") == QUERY_VEC_ID)
     scored_cells = qvec.crossJoin(F.broadcast(cents)).select(
         "cid",

@@ -12,7 +12,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from graph_etl_pipeline_spark.io import scratch_dir, sf_key, table
+from graph_etl_pipeline_spark.io import fresh_scratch_dir, scratch_dir, sf_key, table
 from graph_etl_pipeline_spark.queries._sql import osum, sdec
 from graph_etl_pipeline_spark.registry import register
 from graph_etl_pipeline_spark.streaming.jobs import (
@@ -98,10 +98,7 @@ def stream_incremental_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(None).cast("double").alias("last_value"),
     )
 
-    # pid-keyed checkpoint under the reaped scratch root (not a leaked
-    # tempfile.mkdtemp): dead-process checkpoints get collected like
-    # every other scratch dir.
-    ckpt = scratch_dir("stream_ckpt", uuid.uuid4().hex[:8])
+    ckpt = fresh_scratch_dir("stream_upsert_ckpt")
     return incremental_upsert(
         events_stream(spark, sf_dir),
         existing,
@@ -932,7 +929,7 @@ def stream_sketch_register_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).cast("long").alias("r0"),
         F.lit(0).cast("long").alias("r1"),
     )
-    ckpt = scratch_dir("stream_ckpt", uuid.uuid4().hex[:8])
+    ckpt = fresh_scratch_dir("stream_ehll_ckpt")
     state = incremental_upsert(
         events_stream(spark, sf_dir),
         existing,
@@ -1042,7 +1039,7 @@ def stream_partitioned_sink_merge(spark: SparkSession, sf_dir: str) -> DataFrame
     checkpoint, state resumed from storage) is test-pinned alongside."""
     src = _psm_sources(spark, sf_dir)
     ev = fixture_stream(spark, src).select("event_type", "user_id", "value")
-    ckpt = scratch_dir("psm_ckpt", uuid.uuid4().hex[:8])
+    ckpt = fresh_scratch_dir("psm_ckpt")
     final = partitioned_incremental_merge(
         ev, "event_type", ckpt, psm_prepare, psm_merge
     )
@@ -1324,7 +1321,7 @@ def stream_countmin_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.pmod(F.col("id"), F.lit(CMS_W)).cast("int").alias("pos"),
         F.lit(0).cast("long").alias("c"),
     )
-    ckpt = scratch_dir("stream_cms_ckpt", uuid.uuid4().hex[:8])
+    ckpt = fresh_scratch_dir("stream_cms_ckpt")
     cells = incremental_upsert(
         events_stream(spark, sf_dir).select("user_id"),
         seed,

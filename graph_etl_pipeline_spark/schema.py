@@ -144,27 +144,22 @@ def apply_schema(spark: SparkSession, warehouse: str) -> dict[str, int]:
     """S7: idempotent DDL applier (reference: src/scripts/init_db.py:23-66
     — parses schema.cql, executes CREATE ... IF NOT EXISTS, tolerates
     'already exists'). Creates one empty partitioned parquet table per
-    label if missing; returns applied/skipped counts like the reference."""
+    label if missing; returns applied/skipped counts like the reference.
+    A table exists when its read resolves: the read raises on a missing
+    path, so no job runs just to probe."""
     stats = {"applied": 0, "skipped": 0, "errors": 0}
-    for ls in REGISTRY.values():
-        path = f"{warehouse}/{ls.label}"
+    tables = [(ls.label, ls.schema) for ls in REGISTRY.values()]
+    for label, schema in [*tables, ("_edges", EDGE_SCHEMA)]:
+        path = f"{warehouse}/{label}"
         try:
-            spark.read.parquet(path).limit(0).collect()
+            spark.read.parquet(path)
             stats["skipped"] += 1
         except Exception:
             try:
-                empty = spark.createDataFrame([], ls.schema)
-                empty.write.mode("ignore").parquet(path)
+                spark.createDataFrame([], schema).write.mode("ignore").parquet(path)
                 stats["applied"] += 1
             except Exception:
                 stats["errors"] += 1
-    edge_path = f"{warehouse}/_edges"
-    try:
-        spark.read.parquet(edge_path).limit(0).collect()
-        stats["skipped"] += 1
-    except Exception:
-        spark.createDataFrame([], EDGE_SCHEMA).write.mode("ignore").parquet(edge_path)
-        stats["applied"] += 1
     return stats
 
 

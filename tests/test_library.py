@@ -235,6 +235,18 @@ def test_schema_registry_shapes():
     assert REGISTRY["ConditionValue"].unique_keys == ("key", "value")
 
 
+def test_apply_schema_is_idempotent(spark, tmp_path):
+    """The first call creates every label table plus `_edges`; the second
+    finds them all and skips, with no errors either time."""
+    from graph_etl_pipeline_spark.schema import EDGE_SCHEMA, apply_schema
+
+    first = apply_schema(spark, str(tmp_path))
+    assert first == {"applied": len(REGISTRY) + 1, "skipped": 0, "errors": 0}
+    assert spark.read.parquet(str(tmp_path / "_edges")).schema == EDGE_SCHEMA
+    second = apply_schema(spark, str(tmp_path))
+    assert second == {"applied": 0, "skipped": len(REGISTRY) + 1, "errors": 0}
+
+
 def test_uniqueness_audit(spark):
     df = spark.createDataFrame(
         [("a", 1), ("a", 2), ("b", 3)], "name string, v int"

@@ -502,11 +502,11 @@ def test_semdedup_hot_cell_tiling_equivalent(spark, sf_dir):
     from collections import Counter
 
     from graph_etl_pipeline_spark.queries.similarity import (
-        LLOYD_ROUNDS, _int_dot, _lloyd, _semdedup_cell_pairs,
+        _int_dot, _lloyd, _semdedup_cell_pairs,
     )
 
     e = table(spark, sf_dir, "embeddings")
-    assigned, _ = _lloyd(e, LLOYD_ROUNDS)
+    assigned, _ = _lloyd(e)
     m = assigned.select(
         "vec_id", "cid", "qe", _int_dot("qe", "qe").alias("nn")
     ).localCheckpoint()

@@ -532,7 +532,8 @@ def test_incremental_crossmodal_state_served_from_storage(spark, sf_dir):
     rounds execute eagerly while the CC output plan is BUILT, so even a
     content-addressed materialize would re-pay them per call); this pins
     that the memoized frames really are storage scans."""
-    from graph_etl_pipeline_spark.queries import composite, dedup, similarity
+    from graph_etl_pipeline_spark import io
+    from graph_etl_pipeline_spark.queries import dedup, similarity
 
     # first call populates artifacts + memos
     all_queries()["pipeline_incremental_crossmodal"].fn(spark, sf_dir).collect()
@@ -551,8 +552,8 @@ def test_incremental_crossmodal_state_served_from_storage(spark, sf_dir):
     assert_is_scan(sem_d, "semantic delta pairs")
     ((_, base_labels),) = [
         (k, v)
-        for k, v in composite._INCR_BASE_LABELS.items()
-        if set(lex_b.inputFiles()) <= set(k)
+        for k, v in io._MEMO.items()
+        if k[0] == "incr_base_cc_labels" and set(lex_b.inputFiles()) <= set(k[2])
     ]
     assert_is_scan(base_labels, "base CC labels")
 

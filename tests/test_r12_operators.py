@@ -51,9 +51,10 @@ def test_minhash_verified_dedup_keeper_invariants(spark, sf_dir):
 
 
 def test_hot_probe_memo_is_strategy_only(spark):
-    """The _HOT_PROBE memo can only change the physical strategy, never
+    """The hot-probe memo can only change the physical strategy, never
     the rows: force both verdicts for the same frame and assert an
     identical pair set either way."""
+    from graph_etl_pipeline_spark import io
     from graph_etl_pipeline_spark.operators import pairs as P
 
     df = spark.createDataFrame(
@@ -62,22 +63,22 @@ def test_hot_probe_memo_is_strategy_only(spark):
     sel = lambda j: j.select(  # noqa: E731
         F.col("a.k").alias("k"), F.col("a.o").alias("oa"), F.col("b.o").alias("ob")
     )
-    # memo key layout: (appId, semanticHash, inputFiles fingerprint, key,
-    # cap) — the fingerprint is empty for this in-memory frame (ADVICE
-    # r12 #2 added it for file-backed frames rewritten in place)
+    # io.memo key layout: (name, appId, input files, semanticHash, key,
+    # cap) — the input files are empty for this in-memory frame
     key = (
+        "hot_probe",
         df.sparkSession.sparkContext.applicationId,
-        df.semanticHash(),
         (),
+        df.semanticHash(),
         "k",
         4,
     )
-    P._HOT_PROBE.pop(key, None)
+    io._MEMO.pop(key, None)
     tiled = {tuple(r) for r in P.bounded_self_pairs(df, "k", "o", 4, sel).collect()}
-    assert P._HOT_PROBE[key] is True  # groups of 6 > cap 4 → hot
-    P._HOT_PROBE[key] = False  # force the plain branch on the same frame
+    assert io._MEMO[key] is True  # groups of 6 > cap 4 → hot
+    io._MEMO[key] = False  # force the plain branch on the same frame
     plain = {tuple(r) for r in P.bounded_self_pairs(df, "k", "o", 4, sel).collect()}
-    P._HOT_PROBE.pop(key, None)
+    io._MEMO.pop(key, None)
     assert tiled == plain and len(plain) == 2 * (6 * 5 // 2)
 
 

@@ -159,10 +159,14 @@ def test_crossmodal_dedup_scale_smoke_amplified(spark, tmp_path):
     component — kept(amp) can never exceed kept(base)'s document count."""
     import time
 
-    from graph_etl_pipeline_spark.operators import pairs as pairs_mod
+    from graph_etl_pipeline_spark import io
     from graph_etl_pipeline_spark.queries.composite import (
         pipeline_crossmodal_dedup,
     )
+
+    def hot_probes():
+        # io.memo key: (name, appId, input files, semanticHash, key, cap)
+        return {k: v for k, v in io._MEMO.items() if k[0] == "hot_probe"}
 
     AMP_XM = 15
     base_sf = "/root/testdata/sf0.01"
@@ -182,14 +186,14 @@ def test_crossmodal_dedup_scale_smoke_amplified(spark, tmp_path):
     # have already left (legitimately True) "cid" probe entries in the
     # process-global memo, so both deltas below must be scoped to THIS
     # test's own runs (the r16 gate caught exactly that contamination)
-    probes_at_start = dict(pairs_mod._HOT_PROBE)
+    probes_at_start = hot_probes()
     t0 = time.perf_counter()
     base = pipeline_crossmodal_dedup(spark, base_sf)
     base_rows = base.count()
     base_kept = base.filter("kept").count()
     t_base = time.perf_counter() - t0
 
-    probes_before = dict(pairs_mod._HOT_PROBE)
+    probes_before = hot_probes()
     t0 = time.perf_counter()
     amp = pipeline_crossmodal_dedup(spark, sf)
     amp_rows = amp.count()
@@ -206,8 +210,8 @@ def test_crossmodal_dedup_scale_smoke_amplified(spark, tmp_path):
     # hot-probe entry for the cell key with verdict True (the base run
     # must not have tripped it — 74 < 1024)
     new_probes = {
-        k: v for k, v in pairs_mod._HOT_PROBE.items()
-        if k not in probes_before and k[3] == "cid"
+        k: v for k, v in hot_probes().items()
+        if k not in probes_before and k[4] == "cid"
     }
     assert any(new_probes.values()), (
         "amplified corpus did not trip the semdedup hot-cell guard",
@@ -216,7 +220,7 @@ def test_crossmodal_dedup_scale_smoke_amplified(spark, tmp_path):
     assert not any(
         v
         for k, v in probes_before.items()
-        if k not in probes_at_start and k[3] == "cid"
+        if k not in probes_at_start and k[4] == "cid"
     ), "base corpus unexpectedly tripped the cell cap — AMP_XM stale?"
 
     # (c) sub-quadratic wall-clock (pair work is ×AMP² by construction).

@@ -9,10 +9,12 @@ import os
 import pathlib
 import re
 import subprocess
+from collections import Counter
 
 from conftest import CACHE_AT_START, SCRATCH_AT_START, listing
 
 from graph_etl_pipeline_spark import io
+from graph_etl_pipeline_spark.registry import all_queries
 
 
 def test_scratch_dir_names_by_pid_and_reaps_dead_owners(tmp_path, monkeypatch):
@@ -46,6 +48,31 @@ def test_only_io_builds_scratch_paths():
         if hand_built.search(line)
     ]
     assert offenders == []
+
+
+# foreachBatch stream queries -> the scratch name of their checkpoint dir
+STREAM_CHECKPOINTS = {
+    "stream_incremental_upsert": "stream_upsert_ckpt",
+    "stream_sketch_register_merge": "stream_ehll_ckpt",
+    "stream_partitioned_sink_merge": "psm_ckpt",
+    "stream_countmin_topk": "stream_cms_ckpt",
+}
+
+
+def test_stream_reruns_keep_one_checkpoint_dir(spark, sf_dir):
+    """Each run of a foreachBatch stream query removes its previous run's
+    checkpoint and state dir: three runs in one process leave one dir per
+    query, and each run's frame reads before the next run starts."""
+    for name in STREAM_CHECKPOINTS:
+        for _ in range(3):
+            assert all_queries()[name].fn(spark, sf_dir).count() > 0
+    own = f"-{os.getpid()}"
+    dirs = Counter(
+        entry.rsplit("-", 2)[0] for entry in listing(io.SCRATCH_DIR) if entry.endswith(own)
+    )
+    assert {n: dirs[n] for n in STREAM_CHECKPOINTS.values()} == dict.fromkeys(
+        STREAM_CHECKPOINTS.values(), 1
+    )
 
 
 def test_suite_scratch_dirs_carry_a_pid():
