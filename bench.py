@@ -14,6 +14,9 @@ import os
 import sys
 import time
 
+# Per-row bands and the per-query r1 baselines (single source for both).
+BANDS_JSON = os.path.join(os.path.dirname(os.path.abspath(__file__)), "bands.json")
+
 HEADLINE = [
     "join_four_hop_chain",  # flagship: fact⋈fact shuffle + broadcast dims
     "agg_multi_counter",  # TPC-H Q1 shape: scan + hash agg
@@ -265,7 +268,7 @@ def _adjudicate_bands(
             "skipped": f"bands pinned at sf0.1, this run is sf={sf_val}",
         }
     try:
-        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "bands.json")) as f:
+        with open(BANDS_JSON) as f:
             spec = json.load(f)
     except (OSError, json.JSONDecodeError):
         return {"metric": "bands_adjudication", "error": "bands.json unreadable"}
@@ -400,25 +403,16 @@ def main() -> None:
     # visible as such. Runs on every host (a transient co-scheduled
     # process can spike one row even when load_start was flat).
     band_retries: dict[str, dict] = {}
-    # Per-query r1 baselines (BASELINE.md's round-1 table — the same
-    # regex round_gate.sh uses): a HEADLINE row past 2× its baseline is
+    # Per-query r1 baselines (bands.json "baseline_r1_sec", the table
+    # round_gate.sh also reads): a HEADLINE row past 2× its baseline is
     # the hard per-round gate, so it earns the same one-shot retry as a
-    # band breach (r16: a quiet-host run read agg_multi_counter 3.25 vs
-    # baseline 1.22 from transient post-suite page-cache state, then
-    # 1.40 minutes later — exactly the spike the retry absorbs).
-    import re as _re
-
-    baselines: dict[str, float] = {}
+    # band breach — transient page-cache state after a test suite can
+    # spike one row well past 2× for a single run.
     try:
-        with open(
-            os.path.join(os.path.dirname(os.path.abspath(__file__)), "BASELINE.md")
-        ) as f:
-            for line in f:
-                m = _re.match(r"\| (\w+) \([^)]*\) \| ([0-9.]+) \|", line)
-                if m:
-                    baselines[m.group(1)] = float(m.group(2))
-    except OSError:
-        pass
+        with open(BANDS_JSON) as f:
+            baselines: dict[str, float] = json.load(f).get("baseline_r1_sec", {})
+    except (OSError, json.JSONDecodeError):
+        baselines = {}
     # Re-adjudicate after each retry pass: a retried HEADLINE row shrinks
     # the total and with it the session factor, which can newly fail a
     # row that passed the first adjudication only via the factor — each

@@ -83,7 +83,7 @@ def main(argv: list[str] | None = None) -> int:
     elif args.cmd == "schema":
         from graph_etl_pipeline_spark.schema import apply_schema
 
-        print(json.dumps(apply_schema(spark, args.warehouse)))
+        print(json.dumps(apply_schema(args.warehouse)))
     elif args.cmd == "reset":
         # interactive confirm like the reference (init_db.py:149-155);
         # CLI state lives in the warehouse (a fresh session has no temp

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from graph_etl_pipeline_spark.functions.numeric import davg, dec, dsum
 from graph_etl_pipeline_spark.queries.joins import _revenue_col
+from graph_etl_pipeline_spark.functions.hashing import md5_lane, md5_lane_sql
 from graph_etl_pipeline_spark.io import table
 from graph_etl_pipeline_spark.queries._sql import REVENUE, oavg, osum, sdec
 from graph_etl_pipeline_spark.registry import register
@@ -179,7 +180,7 @@ def agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 100 TB replacement for exact distinct sets — constant memory per
     group (HLL++ sketch) instead of a shuffle of every distinct value.
 
-    Checkable contract (VERDICT r1 #8): the query emits the EXACT counts
+    Checkable contract: the query emits the EXACT counts
     plus in-query booleans asserting |approx-exact|/exact ≤ 5×rsd; the
     oracle matches the exact counts and expects TRUE — so the driver's
     hash row goes green iff the sketch meets its accuracy bound. HLL++ is
@@ -655,8 +656,8 @@ CMS_W = 512
 CMS_MULTS = (2654435761, 2246822519, 3266489917)
 CMS_PROBE_K = 10
 
-# Position hash: EXACT integer arithmetic end to end (ADVICE r6). The key is
-# pre-masked to 31 bits with a BITWISE AND — sign-safe (ADVICE r7: `%` has
+# Position hash: EXACT integer arithmetic end to end. The key is
+# pre-masked to 31 bits with a BITWISE AND — sign-safe (`%` has
 # engine-divergent sign semantics for negative dividends; `&` agrees in
 # DuckDB and Spark for any int64 key) — so (masked_key * mult) ≤
 # (2^31-1) · 3.27e9 < 2^63: the product can never wrap int64, and integer
@@ -798,9 +799,8 @@ KMV_M = 1 << 60  # hash space: 15 md5 hex chars = 60 uniform bits
 KMV_SRC_A, KMV_SRC_B = "src1", "src2"
 KMV_SHINGLE_W = 3
 
-# 60-bit engine-equal uniform hash of a string: decimal value of the first
-# 15 md5 hex chars (Spark conv(x,16,10) == DuckDB ('0x'||x)::BIGINT).
-_KMV_H_SQL = "(('0x' || substr(md5(shingle), 1, 15))::BIGINT)"
+# 60-bit engine-equal uniform hash of a shingle: its first 15 md5 hex chars.
+_KMV_H_SQL = md5_lane_sql("shingle", "", 1, 15)
 
 
 def _kmv_shingle_sql(src: str) -> str:
@@ -892,11 +892,7 @@ def agg_kmv_distinct_intersection(spark: SparkSession, sf_dir: str) -> DataFrame
                     )
                 ).alias("shingle")
             )
-            .select(
-                F.conv(F.substring(F.md5("shingle"), 1, 15), 16, 10)
-                .cast("long")
-                .alias("h")
-            )
+            .select(md5_lane("shingle", "", 1, 15).alias("h"))
             .distinct()
         )
 
@@ -1357,12 +1353,11 @@ def agg_chi2_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistic is the sum of absdiff^2/den over categories, computable to
     any precision by the consumer. ``chi2_absdiff`` carries the UNSQUARED
     |o_a*n_b - o_b*n_a| (<= n_a*n_b < 8.5e37 — exact in decimal(38,0)
-    and HUGEINT for ALL int64 counts; the square, carried through r13,
-    NULLed silently past |diff| >= 1e19 under non-ANSI decimal narrowing
-    — ADVICE r13 #4) and ``chi2_den`` the exact denominator, both
-    rendered to strings (the engine-stable form 6e10792 established for
-    int128 outputs) so the hash row certifies the test statistic itself,
-    not a float echo.
+    and HUGEINT for ALL int64 counts; the square would NULL silently past
+    |diff| >= 1e19 under non-ANSI decimal narrowing) and ``chi2_den`` the
+    exact denominator, both rendered to strings (the engine-stable form
+    6e10792 established for int128 outputs) so the hash row certifies the
+    test statistic itself, not a float echo.
 
     Plan: the midpoint is one broadcastable min/max scalar (ONE extra
     1-column scan); the heavy input collapses FIRST through a
@@ -1426,7 +1421,7 @@ KMV_MERGE_K = 256
     "agg_kmv_shard_merge",
     oracle=f"""
     WITH hs AS (
-        SELECT DISTINCT ('0x' || substr(md5(CAST(l_orderkey AS VARCHAR)), 1, 15))::BIGINT AS h,
+        SELECT DISTINCT {md5_lane_sql("l_orderkey", "", 1, 15)} AS h,
                l_orderkey % 2 AS shard
         FROM lineitem
     ),
@@ -1481,9 +1476,7 @@ def agg_kmv_shard_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     hs = (
         li.distinct()
         .select(
-            F.conv(F.substring(F.md5(F.col("l_orderkey").cast("string")), 1, 15), 16, 10)
-            .cast("long")
-            .alias("h"),
+            md5_lane("l_orderkey", "", 1, 15).alias("h"),
             (F.col("l_orderkey") % 2).alias("shard"),
         )
     )
@@ -1885,10 +1878,9 @@ def agg_welch_t_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     then ships as EXACT INT128 RATIONAL PIECES rendered as strings —
     Δ = delta_num/delta_den (mean difference) and the two variance terms
     s₁²/n₁ = var1_num/var1_den, s₂²/n₂ = var2_num/var2_den EACH as their own
-    pair (named var*_ since r12 — the r11 split reused the earlier
-    combined-rational names se2_num/se2_den with changed semantics, which
-    would let a stale consumer silently misread instead of failing on a
-    missing column, ADVICE r11 #4; denominators n_i²(n_i−1), ~n⁴; a COMMON denominator would be
+    pair (named var*_, never the combined-rational se2_num/se2_den, so a
+    consumer of the combined form fails on a missing column instead of
+    misreading; denominators n_i²(n_i−1), ~n⁴; a COMMON denominator would be
     ~n⁶ and overflow decimal(38)/HUGEINT past ~2M rows per half — the
     split form holds to ~10¹² rows per half at cent quantization) — so
     the hash row certifies every bit of the inference inputs; the
@@ -1932,7 +1924,7 @@ def agg_welch_t_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # s_i²/n_i ships as its OWN rational pair (num_i = n_i·q_i − s_i²,
     # den_i = n_i²(n_i−1), each ~n⁴) instead of over the common
     # denominator n₁²(n₁−1)·n₂²(n₂−1) (~n⁶), which overflows decimal(38)
-    # once either half passes ~2M rows (ADVICE r10 #2) — the split form
+    # once either half passes ~2M rows — the split form
     # holds to ~10¹² rows per half at cent quantization.
     pieces = sums.select(
         "n1",
@@ -1964,7 +1956,7 @@ def agg_welch_t_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- HDR shard-merge + accuracy contract (r12) --------------------------
+# --- HDR shard-merge + accuracy contract ---------------------------------
 
 
 @register(

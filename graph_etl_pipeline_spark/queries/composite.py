@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from graph_etl_pipeline_spark.functions.hashing import md5_lane_sql
 from graph_etl_pipeline_spark.functions.text import SQL_TOKS, norm_tokens, shingles, sql_shingles
 from graph_etl_pipeline_spark.queries.dedup import (
     MAX_SHINGLE_DF,
@@ -557,8 +558,7 @@ REPAIR_DRIFT_MOD = 97  # replica B drifts on every 97th order key
 @register(
     "pipeline_antientropy_repair",
     oracle=f"""
-    SELECT CAST(('0x' || substr(md5('bk:' || CAST(o_orderkey AS VARCHAR)), 1, 8))
-                AS BIGINT) % 64 AS bucket,
+    SELECT {md5_lane_sql("o_orderkey", "bk:", 1, 8)} % 64 AS bucket,
            CAST(COUNT(*) AS BIGINT) AS n_resync,
            CAST(MIN(o_orderkey) AS BIGINT) AS min_key,
            CAST(MAX(o_orderkey) AS BIGINT) AS max_key

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from graph_etl_pipeline_spark.functions.hashing import md5_lane, md5_lane_sql
 from graph_etl_pipeline_spark.io import table
 from graph_etl_pipeline_spark.registry import register
 
@@ -35,24 +36,14 @@ GEO_UNITS = 1_000_000  # coordinate space: [0, 1e6) micro-units per axis
 GEO_CELL = 125_000  # 8×8 grid; one-ring search radius == cell size
 
 
-def _coord(seed: str, key: F.Column) -> F.Column:
-    """Deterministic micro-unit coordinate from a seeded md5 lane —
-    24 hex bits (< 2^24) taken mod GEO_UNITS; exact in both engines."""
-    return F.pmod(
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit(seed + ":"), key.cast("string"))), 1, 6),
-            16,
-            10,
-        ).cast("long"),
-        F.lit(GEO_UNITS),
-    )
+def _coord(seed: str, key: F.Column, units: int = GEO_UNITS) -> F.Column:
+    """Deterministic coordinate in [0, units) from a seeded 24-bit md5
+    lane; exact in both engines."""
+    return F.pmod(md5_lane(key, seed + ":", 1, 6), F.lit(units))
 
 
-def _coord_sql(seed: str, key: str) -> str:
-    return (
-        f"CAST(('0x' || substr(md5('{seed}:' || CAST({key} AS VARCHAR)), 1, 6))"
-        f" AS BIGINT) % {GEO_UNITS}"
-    )
+def _coord_sql(seed: str, key: str, units: int = GEO_UNITS) -> str:
+    return f"{md5_lane_sql(key, seed + ':', 1, 6)} % {units}"
 
 
 @register(
@@ -170,24 +161,6 @@ def geo_grid_nn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 GEO_BOX_MAX_HALF = 60_000
 
 
-def _half_sql(seed: str, key: str) -> str:
-    return (
-        f"1 + CAST(('0x' || substr(md5('{seed}:' || CAST({key} AS VARCHAR)), 1, 6))"
-        f" AS BIGINT) % {GEO_BOX_MAX_HALF}"
-    )
-
-
-def _half(seed: str, key: F.Column) -> F.Column:
-    return 1 + F.pmod(
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit(seed + ":"), key.cast("string"))), 1, 6),
-            16,
-            10,
-        ).cast("long"),
-        F.lit(GEO_BOX_MAX_HALF),
-    )
-
-
 @register(
     "geo_bbox_contains_join",
     oracle=f"""
@@ -201,8 +174,8 @@ def _half(seed: str, key: F.Column) -> F.Column:
         SELECT s_suppkey,
                {_coord_sql("sx", "s_suppkey")} AS cx,
                {_coord_sql("sy", "s_suppkey")} AS cy,
-               {_half_sql("shw", "s_suppkey")} AS hw,
-               {_half_sql("shh", "s_suppkey")} AS hh
+               1 + {_coord_sql("shw", "s_suppkey", GEO_BOX_MAX_HALF)} AS hw,
+               1 + {_coord_sql("shh", "s_suppkey", GEO_BOX_MAX_HALF)} AS hh
         FROM supplier
     )
     SELECT p.c_custkey, b.s_suppkey,
@@ -249,8 +222,8 @@ def geo_bbox_contains_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "s_suppkey",
         _coord("sx", F.col("s_suppkey")).alias("cx"),
         _coord("sy", F.col("s_suppkey")).alias("cy"),
-        _half("shw", F.col("s_suppkey")).alias("hw"),
-        _half("shh", F.col("s_suppkey")).alias("hh"),
+        (1 + _coord("shw", F.col("s_suppkey"), GEO_BOX_MAX_HALF)).alias("hw"),
+        (1 + _coord("shh", F.col("s_suppkey"), GEO_BOX_MAX_HALF)).alias("hh"),
     )
     cover = b.select(
         "s_suppkey",
@@ -276,7 +249,7 @@ def geo_bbox_contains_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dimension-sized geofence case) and falls back to a shuffle
     # equi-join on (cell_x, cell_y) when the boxes side is fact-sized —
     # a hard hint would pin the build side and OOM the driver instead
-    # of degrading to the shuffle plan (ADVICE r10 #3).
+    # of degrading to the shuffle plan.
     joined = p.join(cover, ["cell_x", "cell_y"]).filter(
         F.col("x").between(F.col("cx") - F.col("hw"), F.col("cx") + F.col("hw"))
         & F.col("y").between(F.col("cy") - F.col("hh"), F.col("cy") + F.col("hh"))

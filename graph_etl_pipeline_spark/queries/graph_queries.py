@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from graph_etl_pipeline_spark.functions import hll
 from graph_etl_pipeline_spark.graph.build import star_graph
 from graph_etl_pipeline_spark.io import memo, table
 from graph_etl_pipeline_spark.registry import register
@@ -1741,25 +1742,12 @@ def graph_betweenness_stress_sampled(spark: SparkSession, sf_dir: str) -> DataFr
 # --- HyperANF sketched neighborhood function --------------------------------
 
 ANF_HOPS = 3
-ANF_M = 16  # HLL registers per vertex (m=2^4; alpha_16 = 0.673)
-# Registers pack 6 bits each (rho <= 33) into two BIGINT words of 8.
-_ANF_SCALE = 8589934592  # 2^33: empty register contributes 2^(33-0)
-
-
-def _sql_anf_hash(node_expr: str) -> tuple[str, str]:
-    """DuckDB (j, rho) for a vertex: register index from md5 lane 1,
-    rank-of-leftmost-one from lane 2 (the split-one-strong-hash economy
-    the MinHash family uses). Both pieces verified engine-identical:
-    Spark conv(hex,16,10) == DuckDB ('0x'||hex)::BIGINT and both bin()
-    functions agree on length semantics."""
-    lane1 = f"('0x'||substr(md5('anf:'||CAST({node_expr} AS VARCHAR)),1,8))::BIGINT"
-    lane2 = f"('0x'||substr(md5('anf:'||CAST({node_expr} AS VARCHAR)),9,8))::BIGINT"
-    rho = f"CASE WHEN {lane2} = 0 THEN 33 ELSE 33 - length(bin({lane2})) END"
-    return f"{lane1} % {ANF_M}", rho
 
 
 def _sql_anf_denoms() -> str:
-    j, rho = _sql_anf_hash("verts.node")
+    """DuckDB per-hop denominators den_t from the exact hop balls p_t,
+    t = 1..ANF_HOPS."""
+    j, rho = hll.rank_sql("verts.node", "anf:")
     ctes = [
         f"""vh AS (
         SELECT verts.node, {j} AS j, {rho} AS rho FROM verts
@@ -1772,47 +1760,25 @@ def _sql_anf_denoms() -> str:
         GROUP BY p.src, vh.j
     )""")
         ctes.append(f"""den{t} AS (
-        SELECT src,
-               CAST(({ANF_M} - COUNT(*)) * {_ANF_SCALE}
-                    + SUM(CAST(1 AS BIGINT) << (33 - m)) AS BIGINT) AS d
+        SELECT src, {hll.DENOMINATOR_SQL} AS d
         FROM regs{t} GROUP BY src
     )""")
     return ",\n    ".join(ctes)
 
 
-_ANF_EST_NUM = "(CAST(0.673 AS DOUBLE) * 256 * 8589934592)"
+_ANF_EST_NUM = f"(CAST(0.673 AS DOUBLE) * 256 * {hll.SCALE})"
 
 
 def anf_hop(bi: DataFrame, state: DataFrame) -> DataFrame:
     """ONE HyperANF hop: every vertex register-wise MAXes its own packed
     HLL words with its neighbors' — B_t(v) = B_{t-1}(v) ∪ ⋃_{u∈N(v)}
-    B_{t-1}(u) under register MAX. The slice-max aggregation unpacks each
-    6-bit register with shift/mask INSIDE the aggregate expressions
-    (map-combinable partial HashAggregate — pinned in tests/test_plans.py)
-    and repacks, so the shuffle carries only (node, r0, r1) rows."""
-    half = ANF_M // 2
-
-    def slice_max(col: str, k: int):
-        return F.max(F.shiftright(F.col(col), 6 * k).bitwiseAND(63))
-
-    def repack(prefix: str) -> F.Column:
-        out = F.lit(0).cast("long")
-        for k in range(half):
-            out = out + F.shiftleft(F.col(f"{prefix}{k}").cast("long"), 6 * k)
-        return out
-
+    B_{t-1}(u) under register MAX, as one map-combinable aggregation
+    (hll.register_max; its partial HashAggregate is pinned in
+    tests/test_plans.py)."""
     contrib = bi.join(
         state.select(F.col("node").alias("t"), "r0", "r1"), "t"
     ).select(F.col("s").alias("node"), "r0", "r1")
-    return (
-        contrib.unionByName(state)
-        .groupBy("node")
-        .agg(
-            *[slice_max("r0", k).alias(f"a{k}") for k in range(half)],
-            *[slice_max("r1", k).alias(f"b{k}") for k in range(half)],
-        )
-        .select("node", repack("a").alias("r0"), repack("b").alias("r1"))
-    )
+    return hll.register_max(contrib.unionByName(state), "node")
 
 
 @register(
@@ -1851,9 +1817,9 @@ def graph_hyperanf_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     same mergeability contract agg_hll_mergeable pins for counters).
 
     Determinism/exactness discipline: registers are integers from seeded
-    md5 lanes (j = lane1 mod 16, rho = 33 − ⌊log2(lane2)⌋ via length of
-    bin()), so the SKETCH ITSELF is hash-exact — the query ships the
-    per-hop denominators D_t = Σ_j 2^(33−M_j) as exact BIGINTs plus the
+    md5 lanes seeded 'anf:' (functions/hll.py: j = lane1 mod 16,
+    rho = 33 − bit length of lane2), so the SKETCH ITSELF is
+    hash-exact — the query ships the per-hop denominators D_t = Σ_j 2^(33−M_j) as exact BIGINTs plus the
     standard alpha·m²/Σ2^(−M_j) estimate as ONE double division from
     those integers (bigint→double is exact below 2^53; both engines
     perform the identical op sequence). The DuckDB oracle computes the
@@ -1862,7 +1828,7 @@ def graph_hyperanf_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     that must agree bit-for-bit because register MAX over a set equals
     MAX over any union decomposition of it.
 
-    Estimator note (ADVICE r11 #3): est1/2/3 apply the RAW
+    Estimator note: est1/2/3 apply the RAW
     alpha_16·m²/Σ2^(−M) formula with NO small-range (linear-counting)
     correction — with m=16 and hop balls of 2-5 vertices the estimates
     carry the well-known strong small-cardinality bias. That is
@@ -1881,7 +1847,7 @@ def graph_hyperanf_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumers (graph_neighborhood_function) serve from — so its bench
     row prices the full build, not post-memo serving."""
     out = _anf_denominators(spark, sf_dir, refresh=True)
-    num = 0.673 * 256 * 8589934592.0
+    num = 0.673 * 256 * float(hll.SCALE)
     return out.select(
         "node",
         "d1",
@@ -1914,48 +1880,11 @@ def _anf_denominators(
 def _anf_state(edges: DataFrame) -> DataFrame:
     bi = _both_ways(edges).localCheckpoint(eager=True)
     verts = bi.select(F.col("s").alias("node")).distinct()
-    lane = lambda start: F.conv(  # noqa: E731
-        F.substring(F.md5(F.concat(F.lit("anf:"), F.col("node").cast("string"))), start, 8),
-        16,
-        10,
-    ).cast("long")
-    j = (lane(1) % ANF_M).alias("j")
-    rho = (
-        (F.when(lane(9) == 0, F.lit(33)).otherwise(33 - F.length(F.bin(lane(9)))))
-        .cast("long")
-        .alias("rho")
-    )
-    half = ANF_M // 2
-    # Variable shift counts need the SQL expression form — the Python
-    # F.shiftleft binding only takes a literal bit count.
-    state = (
-        verts.select("node", j, rho)
-        .select(
-            "node",
-            F.expr(
-                f"CASE WHEN j < {half} THEN shiftleft(rho, CAST(j * 6 AS INT))"
-                " ELSE CAST(0 AS BIGINT) END"
-            ).alias("r0"),
-            F.expr(
-                f"CASE WHEN j >= {half}"
-                f" THEN shiftleft(rho, CAST((j - {half}) * 6 AS INT))"
-                " ELSE CAST(0 AS BIGINT) END"
-            ).alias("r1"),
-        )
-        .localCheckpoint(eager=True)
-    )
-
+    state = hll.words(verts, "node", "node", "anf:").localCheckpoint(eager=True)
     denoms = []
-    for _hop in range(1, ANF_HOPS + 1):
+    for hop in range(1, ANF_HOPS + 1):
         state = anf_hop(bi, state).localCheckpoint(eager=True)
-        d = F.lit(0).cast("long")
-        for col in ("r0", "r1"):
-            for k in range(half):
-                d = d + F.expr(
-                    "shiftleft(CAST(1 AS BIGINT),"
-                    f" CAST(33 - (shiftright({col}, {6 * k}) & 63) AS INT))"
-                )
-        denoms.append(state.select("node", d.alias(f"d{_hop}")))
+        denoms.append(state.select("node", hll.denominator().alias(f"d{hop}")))
 
     out = denoms[0]
     for dn in denoms[1:]:
@@ -1966,7 +1895,7 @@ def _anf_state(edges: DataFrame) -> DataFrame:
 # alpha_16 · m² · 2^33 in EXACT milli-units: 0.673 = 673/1000, so
 # est(v)·1000 = 673·256·2^33 / D(v) — an integer floor-division both
 # engines perform identically (verified: Spark div == DuckDB //).
-ANF_NUM_MILLI = 673 * 256 * 8589934592  # = 1_479_942_650_986_496 < 2^63
+ANF_NUM_MILLI = 673 * 256 * hll.SCALE  # = 1_479_942_650_986_496 < 2^63
 
 
 @register(
@@ -2088,8 +2017,8 @@ EFF_DIAMETER_PPM = 900_000
     tags=("graph", "sketch", "agg"),
 )
 def graph_effective_diameter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EFFECTIVE-DIAMETER SERVING READOUT over the HyperANF state
-    (VERDICT r11 #7): the smallest hop t whose sketched N(t) reaches 90%
+    """EFFECTIVE-DIAMETER SERVING READOUT over the HyperANF state:
+    the smallest hop t whose sketched N(t) reaches 90%
     of the hop-k neighborhood mass — the headline number HyperANF papers
     report for web graphs and the reason the N(t) roll-up ships a ppm
     fraction column. A 3-row scan of graph_neighborhood_function's

@@ -24,6 +24,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from graph_etl_pipeline_spark.functions.hashing import (
+    hex_lane,
+    hex_lane_sql,
+    md5_lane,
+    md5_lane_sql,
+)
 from graph_etl_pipeline_spark.io import table
 from graph_etl_pipeline_spark.registry import register
 
@@ -761,18 +767,7 @@ def merkle_rows(o: DataFrame) -> DataFrame:
             F.col("o_orderpriority"),
         )
     )
-    bucket = F.pmod(
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("bk:"), F.col("o_orderkey").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long"),
-        F.lit(MERKLE_BUCKETS),
-    )
+    bucket = F.pmod(md5_lane("o_orderkey", "bk:", 1, 8), F.lit(MERKLE_BUCKETS))
     return o.select(
         bucket.alias("bucket"),
         F.col("o_orderkey").alias("key"),
@@ -784,12 +779,8 @@ def merkle_summary(rows: DataFrame) -> DataFrame:
     """Order-insensitive, mergeable per-bucket digest summary."""
     return rows.groupBy("bucket").agg(
         F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.conv(F.substring("digest", 1, 8), 16, 10).cast("long")).alias(
-            "sum_h1"
-        ),
-        F.sum(F.conv(F.substring("digest", 9, 8), 16, 10).cast("long")).alias(
-            "sum_h2"
-        ),
+        F.sum(hex_lane("digest", 1, 8)).alias("sum_h1"),
+        F.sum(hex_lane("digest", 9, 8)).alias("sum_h2"),
         F.min("digest").alias("min_digest"),
         F.max("digest").alias("max_digest"),
     )
@@ -800,8 +791,7 @@ def merkle_summary(rows: DataFrame) -> DataFrame:
     oracle=f"""
     WITH canon AS (
         SELECT
-            CAST(('0x' || substr(md5('bk:' || CAST(o_orderkey AS VARCHAR)), 1, 8))
-                 AS BIGINT) % {MERKLE_BUCKETS} AS bucket,
+            {md5_lane_sql("o_orderkey", "bk:", 1, 8)} % {MERKLE_BUCKETS} AS bucket,
             md5(concat_ws(chr(31),
                 CAST(o_orderkey AS VARCHAR),
                 CAST(o_custkey AS VARCHAR),
@@ -813,10 +803,8 @@ def merkle_summary(rows: DataFrame) -> DataFrame:
     )
     SELECT bucket,
            CAST(COUNT(*) AS BIGINT) AS n_rows,
-           CAST(SUM(CAST(('0x' || substr(digest, 1, 8)) AS BIGINT)) AS BIGINT)
-               AS sum_h1,
-           CAST(SUM(CAST(('0x' || substr(digest, 9, 8)) AS BIGINT)) AS BIGINT)
-               AS sum_h2,
+           CAST(SUM({hex_lane_sql("digest", 1, 8)}) AS BIGINT) AS sum_h1,
+           CAST(SUM({hex_lane_sql("digest", 9, 8)}) AS BIGINT) AS sum_h2,
            MIN(digest) AS min_digest,
            MAX(digest) AS max_digest
     FROM canon GROUP BY bucket
@@ -1029,7 +1017,7 @@ def dq_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-# --- Per-column profile drift (r13) ------------------------------------------
+# --- Per-column profile drift -----------------------------------------------
 _PROFILE_DRIFT_COLS = ("user_id", "event_type", "cents", "props")
 
 

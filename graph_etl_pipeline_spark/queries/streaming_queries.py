@@ -12,6 +12,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from graph_etl_pipeline_spark.functions import hll
 from graph_etl_pipeline_spark.io import fresh_scratch_dir, scratch_dir, sf_key, table
 from graph_etl_pipeline_spark.queries._sql import osum, sdec
 from graph_etl_pipeline_spark.registry import register
@@ -769,137 +770,45 @@ def stream_full_join_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Streaming HLL register maintenance ---------------------------------------
 
-_EHLL_M = 16  # registers per key (m=2^4), matching the HyperANF layout
-_EHLL_HALF = _EHLL_M // 2
-_EHLL_SCALE = 8589934592  # 2^33: an empty register contributes 2^(33-0)
-
-
-def _ehll_event_words(batch_df: DataFrame) -> DataFrame:
-    """Map each event to its single-register packed contribution
-    (user_id, r0, r1): register index j from md5 lane 1 of the event id,
-    rank rho from lane 2 — the same seeded split-one-strong-hash layout
-    as graph_queries._anf_denominators, seeded 'ehll:' so the two sketch
-    families never collide."""
-    lane = lambda start: F.conv(  # noqa: E731
-        F.substring(
-            F.md5(F.concat(F.lit("ehll:"), F.col("event_id").cast("string"))),
-            start,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
-    j = (lane(1) % _EHLL_M).alias("j")
-    rho = (
-        (F.when(lane(9) == 0, F.lit(33)).otherwise(33 - F.length(F.bin(lane(9)))))
-        .cast("long")
-        .alias("rho")
-    )
-    return batch_df.select("user_id", j, rho).select(
-        "user_id",
-        F.expr(
-            f"CASE WHEN j < {_EHLL_HALF} THEN shiftleft(rho, CAST(j * 6 AS INT))"
-            " ELSE CAST(0 AS BIGINT) END"
-        ).alias("r0"),
-        F.expr(
-            f"CASE WHEN j >= {_EHLL_HALF}"
-            f" THEN shiftleft(rho, CAST((j - {_EHLL_HALF}) * 6 AS INT))"
-            " ELSE CAST(0 AS BIGINT) END"
-        ).alias("r1"),
-    )
-
 
 def ehll_batch_registers(batch_df: DataFrame) -> DataFrame:
-    """Reduce one micro-batch to per-user packed register MAXes — the
-    same map-combinable slice-max aggregation as graph_queries.anf_hop
-    (partial HashAggregate; the shuffle carries (user_id, r0, r1))."""
-    words = _ehll_event_words(batch_df)
-    slice_max = lambda col, k: F.max(  # noqa: E731
-        F.shiftright(F.col(col), 6 * k).bitwiseAND(63)
-    )
-
-    def repack(prefix: str) -> F.Column:
-        out = F.lit(0).cast("long")
-        for k in range(_EHLL_HALF):
-            out = out + F.shiftleft(F.col(f"{prefix}{k}").cast("long"), 6 * k)
-        return out
-
-    return (
-        words.groupBy("user_id")
-        .agg(
-            *[slice_max("r0", k).alias(f"a{k}") for k in range(_EHLL_HALF)],
-            *[slice_max("r1", k).alias(f"b{k}") for k in range(_EHLL_HALF)],
-        )
-        .select("user_id", repack("a").alias("r0"), repack("b").alias("r1"))
-    )
+    """Reduce one micro-batch to per-user packed register MAXes, each
+    event hashed by its id under the 'ehll:' seed (functions/hll.py)."""
+    return hll.register_max(hll.words(batch_df, "user_id", "event_id", "ehll:"), "user_id")
 
 
 def ehll_register_merge(current: DataFrame, incoming: DataFrame) -> DataFrame:
     """Cross-batch register-wise MAX merge for the per-user HLL state
-    table — expression-level unpack/greatest/repack on the packed words
-    (no aggregation; state is already key-unique per side). MAX is
-    associative, commutative, and idempotent, so the final state is
-    independent of how the engine split the stream into micro-batches
-    AND of replays — the T2 merge discipline applied to sketch state.
-
-    The join is FULL OUTER with both sides coalesced to the
-    merge-neutral zero registers (MAX(0, x) = x), so the helper is
-    correct for OPEN key universes: an incoming user absent from the
-    state table creates its row rather than silently losing sketch
-    state (a LEFT join would rely on the customer-seeded fixture's
-    incoming ⊆ current invariant; under that invariant full-outer emits
-    the identical rows, and both sides already shuffle on user_id, so
-    the physical plan cost is the same SortMergeJoin exchange pair)."""
-    e, i = current.alias("e"), incoming.alias("i")
-    j = e.join(i, F.col("e.user_id") == F.col("i.user_id"), "full_outer")
-
-    def regmax(col: str) -> F.Column:
-        out = F.lit(0).cast("long")
-        for k in range(_EHLL_HALF):
-            sl = lambda side: F.shiftright(  # noqa: B023,E731
-                F.col(f"{side}.{col}"), 6 * k
-            ).bitwiseAND(63)
-            zero = F.lit(0).cast("long")
-            out = out + F.shiftleft(
-                F.greatest(F.coalesce(sl("e"), zero), F.coalesce(sl("i"), zero)),
-                6 * k,
-            )
-        return out.alias(col)
-
-    return j.select(
-        F.coalesce(F.col("e.user_id"), F.col("i.user_id")).alias("user_id"),
-        regmax("r0"),
-        regmax("r1"),
-    )
+    table. MAX is associative, commutative and idempotent, so the final
+    state is independent of how the engine split the stream into
+    micro-batches AND of replays. The merge is FULL OUTER, so an incoming
+    user absent from the state table creates its row; both sides already
+    shuffle on user_id, so it plans the same SortMergeJoin exchange pair
+    as a LEFT join would."""
+    return hll.merge(current, incoming, "user_id")
 
 
-def _ehll_sql_lane(start: int) -> str:
-    return f"('0x'||substr(md5('ehll:'||CAST(event_id AS VARCHAR)),{start},8))::BIGINT"
+_EHLL_J, _EHLL_RHO = hll.rank_sql("event_id", "ehll:")
 
 
 @register(
     "stream_sketch_register_merge",
     oracle=f"""
     WITH eh AS (
-        SELECT user_id,
-               ({_ehll_sql_lane(1)}) % {_EHLL_M} AS j,
-               CASE WHEN {_ehll_sql_lane(9)} = 0 THEN 33
-                    ELSE 33 - length(bin({_ehll_sql_lane(9)})) END AS rho
-        FROM events
+        SELECT user_id, {_EHLL_J} AS j, {_EHLL_RHO} AS rho FROM events
     ),
     regs AS (SELECT user_id, j, MAX(rho) AS m FROM eh GROUP BY user_id, j),
     packed AS (
         SELECT user_id,
-               CAST(SUM(CASE WHEN j < {_EHLL_HALF} THEN m << (j * 6) ELSE 0 END) AS BIGINT) AS r0,
-               CAST(SUM(CASE WHEN j >= {_EHLL_HALF} THEN m << ((j - {_EHLL_HALF}) * 6) ELSE 0 END) AS BIGINT) AS r1,
-               CAST(({_EHLL_M} - COUNT(*)) * {_EHLL_SCALE}
-                    + SUM(CAST(1 AS BIGINT) << (33 - m)) AS BIGINT) AS d
+               CAST(SUM(CASE WHEN j < 8 THEN m << (j * 6) ELSE 0 END) AS BIGINT) AS r0,
+               CAST(SUM(CASE WHEN j >= 8 THEN m << ((j - 8) * 6) ELSE 0 END) AS BIGINT) AS r1,
+               {hll.DENOMINATOR_SQL} AS d
         FROM regs GROUP BY user_id
     )
     SELECT c.c_custkey AS user_id,
            COALESCE(p.r0, 0) AS r0,
            COALESCE(p.r1, 0) AS r1,
-           COALESCE(p.d, {_EHLL_M} * {_EHLL_SCALE}) AS d
+           COALESCE(p.d, {hll.M * hll.SCALE}) AS d
     FROM customer c LEFT JOIN packed p ON p.user_id = c.c_custkey
     """,
     tags=("streaming", "sketch", "sink"),
@@ -939,14 +848,7 @@ def stream_sketch_register_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         prepare=ehll_batch_registers,
         merge=ehll_register_merge,
     )
-    d = F.lit(0).cast("long")
-    for col in ("r0", "r1"):
-        for k in range(_EHLL_HALF):
-            d = d + F.expr(
-                "shiftleft(CAST(1 AS BIGINT),"
-                f" CAST(33 - (shiftright({col}, {6 * k}) & 63) AS INT))"
-            )
-    return state.select("user_id", "r0", "r1", d.alias("d"))
+    return state.select("user_id", "r0", "r1", hll.denominator().alias("d"))
 
 
 # --- Streaming merge into a hive-partitioned sink ----------------------------

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from graph_etl_pipeline_spark.functions.text import SQL_TOKS, norm_tokens, sql_shingles
+from graph_etl_pipeline_spark.functions.hashing import md5_lane, md5_lane_sql
 from graph_etl_pipeline_spark.io import table
 from graph_etl_pipeline_spark.registry import register
 
@@ -873,8 +874,7 @@ WINNOW_W = 5      # consecutive k-grams per selection window
 # the RIGHTMOST position — the winnowing paper's tie rule — as one integer
 # min both engines order identically.
 _WINNOW_KEY_SQL = (
-    "(('0x' || substr(md5(gram), 1, 15))::BIGINT % 281474976710656) * 4096"
-    " + (4095 - pos % 4096)"
+    f"({md5_lane_sql('gram', '', 1, 15)} % {1 << 48}) * 4096 + (4095 - pos % 4096)"
 )
 
 
@@ -955,10 +955,7 @@ def text_winnowing_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "doc_id", "n_kgrams", (F.col("p0") + 1).alias("pos"), "gram"
     )
-    h48 = F.pmod(
-        F.conv(F.substring(F.md5("gram"), 1, 15), 16, 10).cast("long"),
-        F.lit(1 << 48),
-    )
+    h48 = F.pmod(md5_lane("gram", "", 1, 15), F.lit(1 << 48))
     keyed = grams.select(
         "doc_id",
         "n_kgrams",
@@ -1019,7 +1016,7 @@ _BPE_RE = r"[a-z]+|[0-9]+|[^a-z0-9\s]"
     tags=("text", "llm", "pack"),
 )
 def text_pack_tokenized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TOKENIZER-AWARE sequence packing (VERDICT r9 #7) — the companion
+    """TOKENIZER-AWARE sequence packing — the companion
     to text_pack_sequences that budgets by the BPE-ish LEXER token count
     (letter runs | digit runs | single symbols — the text_token_count
     proxy whose cross-engine parity is already proven) instead of
@@ -1069,7 +1066,7 @@ def text_pack_tokenized(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- Token-histogram drift monitor (r13, VERDICT r12 #7) ---------------------
+# --- Token-histogram drift monitor --------------------------------------------
 TOKEN_DRIFT_BUCKETS = 64  # fixed-width hashed-vocabulary histogram
 
 
@@ -1085,8 +1082,7 @@ TOKEN_DRIFT_BUCKETS = 64  # fixed-width hashed-vocabulary histogram
         FROM documents
     ),
     b AS (
-        SELECT ('0x' || substr(md5('tokdrift:' || tok), 1, 8))::BIGINT
-                   % {TOKEN_DRIFT_BUCKETS} AS bucket,
+        SELECT {md5_lane_sql("tok", "tokdrift:", 1, 8)} % {TOKEN_DRIFT_BUCKETS} AS bucket,
                CASE WHEN doc_id < (SELECT mid FROM m) THEN 1 ELSE 0 END AS ia
         FROM tok
     ),
@@ -1107,7 +1103,7 @@ TOKEN_DRIFT_BUCKETS = 64  # fixed-width hashed-vocabulary histogram
 )
 def text_token_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TOKEN-HISTOGRAM drift between two corpus snapshots — the TEXT
-    member of the drift-monitor family (VERDICT r12 #7), closing the
+    member of the drift-monitor family, closing the
     modality row: scalar shape → agg_ks_drift, categorical mix →
     agg_chi2_drift, mean shift → agg_welch_t_drift, embedding space →
     embed_centroid_drift, token distribution → here. "Did the vocabulary
@@ -1125,10 +1121,10 @@ def text_token_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     (o_a·n_b − o_b·n_a)² / (n_a·n_b·(o_a+o_b)) is certified by its
     EXACT pieces: ``chi2_absdiff`` = |o_a·n_b − o_b·n_a| — the UNSQUARED
     numerator root, ≤ n_a·n_b < 8.5e37, so it is exact in decimal(38,0)
-    and HUGEINT for ALL int64 counts (carrying the square instead, as
-    r13 did, silently NULLed past |diff| ≥ 1e19 under Spark's non-ANSI
-    decimal narrowing while DuckDB's HUGEINT stayed exact to 1.3e19 —
-    ADVICE r13 #4; the square is the consumer's one multiply) — and
+    and HUGEINT for ALL int64 counts (the square would silently NULL
+    past |diff| ≥ 1e19 under Spark's non-ANSI decimal narrowing while
+    DuckDB's HUGEINT stays exact to 1.3e19; the square is the consumer's
+    one multiply) — and
     ``chi2_den`` = (o_a+o_b)·n_a·n_b, exact while it fits int128
     (cohorts ≤ ~2.6e12 tokens); past that the consumer recomputes it
     from the (o_a, o_b) columns, which the output carries in full.
@@ -1154,14 +1150,7 @@ def text_token_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = d.select("doc_id", F.explode(norm_tokens(d.text)).alias("tok")).crossJoin(
         bounds
     )
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("tokdrift:"), F.col("tok"))), 1, 8),
-            16,
-            10,
-        ).cast("long")
-        % TOKEN_DRIFT_BUCKETS
-    )
+    bucket = md5_lane("tok", "tokdrift:", 1, 8) % TOKEN_DRIFT_BUCKETS
     per = (
         tok.select(
             bucket.alias("bucket"),

@@ -11,9 +11,10 @@ declarations become partitioning/bucketing advice for the writers.
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -140,26 +141,32 @@ REL_TYPES = (
 )
 
 
-def apply_schema(spark: SparkSession, warehouse: str) -> dict[str, int]:
+def apply_schema(warehouse: str) -> dict[str, int]:
     """S7: idempotent DDL applier (reference: src/scripts/init_db.py:23-66
     — parses schema.cql, executes CREATE ... IF NOT EXISTS, tolerates
-    'already exists'). Creates one empty partitioned parquet table per
-    label if missing; returns applied/skipped counts like the reference.
-    A table exists when its read resolves: the read raises on a missing
-    path, so no job runs just to probe."""
+    'already exists'). Creates one empty parquet table per label if
+    missing; returns applied/skipped counts like the reference. A table
+    exists when its directory does, and a missing one is written as one
+    empty parquet file by pyarrow, so the step needs no Spark session.
+    Like clear_warehouse, it works on a local warehouse."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     stats = {"applied": 0, "skipped": 0, "errors": 0}
     tables = [(ls.label, ls.schema) for ls in REGISTRY.values()]
     for label, schema in [*tables, ("_edges", EDGE_SCHEMA)]:
-        path = f"{warehouse}/{label}"
-        try:
-            spark.read.parquet(path)
+        path = os.path.join(warehouse, label)
+        if os.path.isdir(path):
             stats["skipped"] += 1
-        except Exception:
-            try:
-                spark.createDataFrame([], schema).write.mode("ignore").parquet(path)
-                stats["applied"] += 1
-            except Exception:
-                stats["errors"] += 1
+            continue
+        try:
+            empty = pa.Table.from_batches([], to_arrow_schema(schema))
+            os.makedirs(path)
+            pq.write_table(empty, os.path.join(path, "part-00000.parquet"))
+            stats["applied"] += 1
+        except (OSError, TypeError, pa.ArrowException):
+            stats["errors"] += 1
     return stats
 
 

@@ -19,7 +19,7 @@ echo "== gate 2/2: bench =="
 # gained a line).
 out=$(python bench.py 2>/dev/null)
 echo "$out" | python -c "
-import json, re, sys
+import json, sys
 lines = []
 for l in sys.stdin:
     if not l.strip():
@@ -32,19 +32,14 @@ for l in sys.stdin:
 stream = [d for d in lines if d.get('metric') == 'stream_queries_wallclock']
 assert stream and stream[0]['queries'], 'compact stream line missing'
 assert j['unit'] == 'sec' and j['queries'], 'bench JSON missing timings'
-# Per-query 2x-of-baseline assertion (VERDICT r4 #3): BASELINE.md's
-# round-1 sf0.1 table is the single source of truth (ADVICE r5 — the
-# numbers were previously copied inline here and could drift). Baselines
-# were recorded under the r1 cold min-of-2 protocol; the bench now runs
-# warm min-of-3 (commit 5a93a5e), which only makes timings FASTER, so
-# this 2x check is conservative-or-equal relative to '2x of a warm
-# baseline' — a regression that trips it is real.
-BASELINE = {}
-for line in open('BASELINE.md'):
-    m = re.match(r'\| (\w+) \([^)]*\) \| ([0-9.]+) \|', line)
-    if m:
-        BASELINE[m.group(1)] = float(m.group(2))
-assert len(BASELINE) >= 14, f'parsed only {len(BASELINE)} baselines from BASELINE.md'
+# Per-query 2x-of-baseline assertion: bands.json's baseline_r1_sec (the
+# round-1 sf0.1 table) is the single source of the baselines. They were
+# recorded under the r1 cold min-of-2 protocol; the bench runs warm
+# min-of-3, which only makes timings FASTER, so this 2x check is
+# conservative-or-equal relative to '2x of a warm baseline' — a
+# regression that trips it is real.
+BASELINE = json.load(open('bands.json'))['baseline_r1_sec']
+assert len(BASELINE) >= 14, f'only {len(BASELINE)} baselines in bands.json'
 weak = {q: (t, BASELINE[q]) for q, t in j['queries'].items()
         if q in BASELINE and t > 2 * BASELINE[q]}
 assert not weak, f'queries over 2x baseline: {weak}'

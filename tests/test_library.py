@@ -237,13 +237,16 @@ def test_schema_registry_shapes():
 
 def test_apply_schema_is_idempotent(spark, tmp_path):
     """The first call creates every label table plus `_edges`; the second
-    finds them all and skips, with no errors either time."""
+    finds them all and skips, with no errors either time. Neither call
+    runs a Spark job."""
     from graph_etl_pipeline_spark.schema import EDGE_SCHEMA, apply_schema
 
-    first = apply_schema(spark, str(tmp_path))
+    with job_group(spark) as jobs:
+        first = apply_schema(str(tmp_path))
+        second = apply_schema(str(tmp_path))
+        assert jobs() == 0
     assert first == {"applied": len(REGISTRY) + 1, "skipped": 0, "errors": 0}
     assert spark.read.parquet(str(tmp_path / "_edges")).schema == EDGE_SCHEMA
-    second = apply_schema(spark, str(tmp_path))
     assert second == {"applied": 0, "skipped": len(REGISTRY) + 1, "errors": 0}
 
 
