@@ -10,7 +10,7 @@ from py4j.protocol import Py4JJavaError
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
-from graph_etl_pipeline_spark.io import TABLES, table
+from graph_etl_pipeline_spark.io import TABLES, read_parquet, table
 from graph_etl_pipeline_spark.session import is_connected  # noqa: F401  (re-export)
 
 
@@ -232,7 +232,7 @@ def get_stats(spark: SparkSession, sf_dir: str) -> dict:
     # nano-timestamp file load for counting
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     counts = {
-        name: spark.read.parquet(f"{sf_dir}/{name}.parquet").count()
+        name: read_parquet(spark, f"{sf_dir}/{name}.parquet").count()
         for name in TABLES
     }
     return {

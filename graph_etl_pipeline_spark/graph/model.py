@@ -17,15 +17,11 @@ never collected to the driver.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-# Deferred cache hygiene for reachable(): the previous traversal's
-# persisted frames, dropped when the next traversal starts — bounded
-# retention without materialization jobs in the timed path.
-_RETAINED_TRAVERSAL_FRAMES: list = []
 
 # connected_components() runs at most this many hash-min rounds before it
 # contracts the graph onto its labels and hands it to star contraction.
@@ -77,12 +73,11 @@ class PropertyGraph:
 
     @staticmethod
     def hop_edges(frontier: DataFrame, e: DataFrame, direction: str = "out") -> DataFrame:
-        """`hop` over a pre-resolved (already type-filtered, possibly
-        cached) edge frame — lets iterative callers resolve the edge set
-        once instead of once per level. Alias-qualified: a persisted
-        frontier's lineage still contains the edge frame's attributes
-        (no checkpoint to sever it), so bare column references would be
-        ambiguous from the second level on."""
+        """`hop` over a pre-resolved (already type-filtered) edge frame —
+        lets iterative callers resolve the edge set once instead of once
+        per level. Alias-qualified: a frontier built by an earlier hop
+        carries the edge frame's attributes in its lineage, so bare column
+        references would be ambiguous from the second level on."""
         here, there = ("src_uid", "dst_uid") if direction == "out" else ("dst_uid", "src_uid")
         f, ee = frontier.alias("__hop_f"), e.alias("__hop_e")
         return (
@@ -105,56 +100,26 @@ class PropertyGraph:
         AVV HAS_PARENT chains, Schema_Doku.pdf §6 NEXT_CHECK chains;
         hierarchies in the reference are ≤3 deep).
 
-        roots: (uid, root) seed pairs. Returns every (uid, root) reached
-        within max_depth hops, roots included. Each level is one
-        distributed join.
+        roots: (uid, root) seed pairs. Returns every (uid, root) pair
+        within max_depth hops of its root, roots included, once each.
 
-        The traversal runs ZERO build-phase jobs: every non-final
-        frontier is persisted LAZILY and the whole traversal folds into
-        the caller's one consumption job — persist() caches partitions
-        the first time that job computes them, so the next hop and the
-        final union read blocks, and a frontier that empties early leaves
-        only empty-input stages. Lineage grows one join per level, so the
-        bound is meant to stay shallow (every caller passes 3).
-
-        The filtered/typed edge set is resolved once before the loop so
-        every level joins the same frame (one cache entry at scale
-        instead of max_depth re-scans of the union view).
-
-        Cache hygiene: the persisted frames (edge set + per-level
-        frontiers) are retained in a module-level slot and UNPERSISTED
-        at the start of the NEXT traversal — bounded retention (at most
-        ONE traversal's frames) with zero extra jobs in the timed path.
-        Contract: consume the returned frame before starting another
-        traversal (every caller in this repo materializes immediately)."""
-        for df in _RETAINED_TRAVERSAL_FRAMES:
-            df.unpersist()
-        _RETAINED_TRAVERSAL_FRAMES.clear()
+        Invariants: the traversal is one lazy dataflow of fixed depth.
+        Level k is ``hop_edges(level k-1)`` over the edge set resolved
+        once before the loop; levels 0..max_depth are unioned and
+        deduplicated by one final ``distinct()``. Building it runs no
+        Spark job and caches nothing, so traversals are independent: any
+        number may be built before any is consumed. Level k's plan
+        contains level k-1's, and the planner reuses the shared
+        exchanges, so each hop runs once per consumption. Lineage grows
+        one join per level, so the bound is meant to stay shallow (every
+        caller passes 3)."""
         e = self.edges
         if rel_types:
             e = e.filter(e.rel_type.isin(*rel_types))
-        e = e.persist()
-        persisted: list[DataFrame] = [e]
-        visited = roots
-        frontier = roots
-        try:
-            for level in range(max_depth):
-                nxt = (
-                    self.hop_edges(frontier, e, direction)
-                    .join(visited, ["uid", "root"], "left_anti")
-                )
-                if level == max_depth - 1:
-                    # the final frontier is consumed exactly once (the
-                    # closing union), so it is left unpersisted
-                    visited = visited.unionByName(nxt)
-                    break
-                nxt = nxt.persist()
-                persisted.append(nxt)
-                visited = visited.unionByName(nxt)
-                frontier = nxt
-            return visited
-        finally:
-            _RETAINED_TRAVERSAL_FRAMES.extend(persisted)
+        levels = [roots]
+        for _ in range(max_depth):
+            levels.append(self.hop_edges(levels[-1], e, direction))
+        return reduce(DataFrame.unionByName, levels).distinct()
 
     def connected_components(self) -> DataFrame:
         """Distributed connected components. Returns (uid, component)

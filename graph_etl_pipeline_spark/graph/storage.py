@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 from graph_etl_pipeline_spark.graph.model import PropertyGraph
+from graph_etl_pipeline_spark.io import read_parquet
 
 
 def write_graph(g: PropertyGraph, warehouse: str, mode: str = "overwrite") -> None:
@@ -26,6 +27,6 @@ def write_graph(g: PropertyGraph, warehouse: str, mode: str = "overwrite") -> No
 
 def read_graph(spark: SparkSession, warehouse: str) -> PropertyGraph:
     return PropertyGraph(
-        vertices=spark.read.parquet(f"{warehouse}/vertices"),
-        edges=spark.read.parquet(f"{warehouse}/edges"),
+        vertices=read_parquet(spark, f"{warehouse}/vertices"),
+        edges=read_parquet(spark, f"{warehouse}/edges"),
     )

@@ -11,6 +11,7 @@ from collections.abc import Callable, Sequence
 from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 T = TypeVar("T")
 
@@ -54,11 +55,11 @@ def table(
     path = f"{sf_dir}/{name}.parquet"
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = rebuild_event_ts(spark.read.parquet(path)).select(
+        df = rebuild_event_ts(read_parquet(spark, path)).select(
             "event_id", "ts", "user_id", "event_type", "value", "props"
         )
     else:
-        df = spark.read.parquet(path)
+        df = read_parquet(spark, path)
     if name in PARALLELISM_FLOOR_TABLES:
         df = _ensure_parallelism(
             spark, df, rows_per_task or DEFAULT_ROWS_PER_TASK
@@ -70,6 +71,82 @@ def table(
         # join against them is broadcast without per-query annotations.
         df = F.broadcast(df)
     return df
+
+
+# Confs that change the schema Spark infers from the same parquet files.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+
+# Inferred schemas, one entry per path tuple: (listing and confs, schema).
+_SCHEMAS: dict[tuple[str, ...], tuple[tuple, StructType]] = {}
+
+
+def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """``spark.read.parquet(*paths)`` that infers each schema once: the
+    package's one parquet reader.
+
+    Inference is a Spark job (footer reads on the executors); reading
+    with the schema given runs none, so a query built twice over the same
+    files fires no job while it is built. The inferred schema is reused
+    while the paths list the same data files, each by (name, size,
+    mtime_ns), and the inference confs (``_INFERENCE_CONFS``) read the
+    same: a table rewritten in place, even with a new schema, lists new
+    files and is inferred again. One entry is kept per path tuple; a new
+    listing replaces it, and each inference drops the entries of paths
+    that no longer exist. Paths that are not local files keep the plain
+    read."""
+    listing = tuple(_data_files(p) for p in paths)
+    if None in listing:
+        return spark.read.parquet(*paths)
+    key = (listing, tuple(spark.conf.get(k) for k in _INFERENCE_CONFS))
+    hit = _SCHEMAS.get(paths)
+    if hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(*paths)
+    df = spark.read.parquet(*paths)
+    for gone in [k for k in _SCHEMAS if not all(_os.path.exists(_local(p)) for p in k)]:
+        del _SCHEMAS[gone]
+    _SCHEMAS[paths] = (key, df.schema)
+    return df
+
+
+def _local(path: str) -> str:
+    return path.removeprefix("file://").removeprefix("file:")
+
+
+def _data_files(path: str) -> tuple | None:
+    """The (relative name, size, mtime_ns) of each data file Spark reads
+    under ``path``, or None when the path is not a local file or dir (an
+    object store, a glob, a missing path). Names starting with ``.``, and
+    with ``_`` unless they are partition dirs (``_k=v``), are skipped, as
+    Spark skips them."""
+    local = _local(path)
+    if "://" in local or any(c in local for c in "*?[{") or not _os.path.exists(local):
+        return None
+
+    def hidden(name: str) -> bool:
+        return name.startswith(".") or name.startswith("_") and "=" not in name
+
+    files = []
+    try:
+        if not _os.path.isdir(local):
+            st = _os.stat(local)
+            return (("", st.st_size, st.st_mtime_ns),)
+        for root, dirs, names in _os.walk(local):
+            dirs[:] = [d for d in dirs if not hidden(d)]
+            for name in names:
+                if not hidden(name):
+                    full = _os.path.join(root, name)
+                    st = _os.stat(full)
+                    files.append((_os.path.relpath(full, local), st.st_size, st.st_mtime_ns))
+    except OSError:
+        return None  # changed while listed: let Spark read it as it is
+    return tuple(sorted(files))
 
 
 def rebuild_event_ts(df: DataFrame) -> DataFrame:
@@ -359,7 +436,7 @@ def materialize(df: DataFrame, name: str) -> DataFrame:
     dest = scratch_dir(name, digest)
     if not _os.path.exists(_os.path.join(dest, "_SUCCESS")):
         df.write.mode("overwrite").parquet(dest)
-    return spark.read.parquet(dest)
+    return read_parquet(spark, dest)
 
 
 # Every memoized per-corpus value (see memo), by full key.

@@ -97,21 +97,18 @@ def _rare_shingle_index(
     signal anyway — it is corpus boilerplate). Returns ``(index, sizes)``:
     the (doc_id, s) index and the per-doc rare-set sizes (doc_id, n_sh).
 
-    The cap costs ZERO full-row shuffles (VERDICT r3 "what's wrong" #1 —
-    the previous window-over-s formulation exchanged every (doc_id, s)
-    row twice) and is ADAPTIVE (VERDICT r3 perf note — "make the guards
-    adaptive so small scales don't pay them"):
-      * per-doc shingle ARRAYS are materialized once (tokenization never
-        re-executes across the hot-list pass and both self-join sides);
-      * the hot-shingle list is a map-combined groupBy whose output is at
-        most the > cap tail of the vocabulary — tiny — and is itself
-        materialized, so one computed copy feeds everything downstream;
-      * a driver-side emptiness probe on that tiny table then picks the
-        plan: NO hot shingles (clean corpora — the common case) ⇒ the
-        index is the plain exploded scan and n_sh is the map-side array
-        size, no anti-join and no size aggregation at all; hot shingles
-        present (the 100 TB boilerplate case) ⇒ broadcast anti-join
-        against the hot list and a map-combined per-doc recount.
+    Invariants:
+      * no full-row shuffle: the per-doc shingle arrays are materialized
+        once, and the hot list is a map-combined groupBy over them whose
+        output is at most the > cap tail of the vocabulary, materialized
+        too;
+      * one emptiness probe per materialized hot table: the verdict is an
+        ``io.memo`` entry keyed on that table's files, so a corpus pays
+        one probe job and every later build over it runs none;
+      * the verdict picks the plan, never the values: with no hot
+        shingles the index is the plain exploded scan and n_sh the array
+        size; otherwise a broadcast anti-join against the hot list and a
+        map-combined per-doc recount.
     """
     # arrays are distinct per doc → COUNT(*) per shingle IS its doc frequency
     ds = materialize(ds, f"{scratch_name}_arrays")
@@ -120,7 +117,8 @@ def _rare_shingle_index(
         ex.groupBy("s").agg(F.count(F.lit(1)).alias("df")).filter(F.col("df") > cap).select("s"),
         f"{scratch_name}_hot",
     )
-    if hot.limit(1).count() == 0:
+    no_hot = memo("hot_shingle_probe", [hot], lambda: hot.limit(1).count() == 0, scratch_name)
+    if no_hot:
         return ex, ds.select("doc_id", F.size("shingles").alias("n_sh"))
     rare = ex.join(F.broadcast(hot), "s", "left_anti").select("doc_id", "s")
     return rare, rare.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
@@ -135,20 +133,32 @@ def _signatures_from_arrays(ds: DataFrame) -> DataFrame:
     shingle arrays are distinct and non-empty by construction
     (functions.text.shingles: whole-doc fallback for short docs).
 
-    The per-hash lambda MUST be single-parameter: F.transform inspects the
+    Each shingle is digested once per seed prefix (``_SQL_MINHASH``'s
+    split: hash i is the 8 hex chars at 8·(i mod 4) of md5('{i//4}:' || s)).
+    The digests are one projection referenced by all 8 lanes, so the
+    optimizer keeps it instead of inlining an md5 into every lane.
+
+    Each lambda MUST be single-parameter: F.transform inspects the
     lambda's arity, and a 2-arg lambda is called with (element, index) —
     so the classic `lambda s, i=i:` default-capture trick silently binds
-    the array-index Column over the Python loop var (the round-2 bug).
-    A closure factory keeps arity 1 while capturing the hash index."""
+    the array-index Column over the Python loop var. A closure factory
+    keeps arity 1 while capturing the hash index."""
+
+    def _digests(s):
+        return F.struct(
+            *[F.md5(F.concat(F.lit(f"{k}:"), s)).alias(f"d{k}") for k in range(N_HASHES // 4)]
+        )
+
+    digests = ds.select("doc_id", F.transform("shingles", _digests).alias("digests"))
 
     def _mh(i: int):
-        prefix, start = f"{i // 4}:", 8 * (i % 4) + 1
-        return lambda s: F.substring(F.md5(F.concat(F.lit(prefix), s)), start, 8)
+        field, start = f"d{i // 4}", 8 * (i % 4) + 1
+        return lambda d: F.substring(d[field], start, 8)
 
-    mhs = ds.select(
+    mhs = digests.select(
         "doc_id",
         *[
-            F.array_min(F.transform(F.col("shingles"), _mh(i))).alias(f"mh{i}")
+            F.array_min(F.transform("digests", _mh(i))).alias(f"mh{i}")
             for i in range(N_HASHES)
         ],
     )

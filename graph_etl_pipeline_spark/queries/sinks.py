@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from graph_etl_pipeline_spark.io import scratch_dir, sf_key, table
+from graph_etl_pipeline_spark.io import read_parquet, scratch_dir, sf_key, table
 from graph_etl_pipeline_spark.registry import register
 from graph_etl_pipeline_spark.sinks.upsert import merge_upsert, upsert_edges
 
@@ -190,7 +190,7 @@ def sink_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
             "overwrite"
         ).partitionBy("event_type").parquet(dest)
     return (
-        spark.read.parquet(dest)
+        read_parquet(spark, dest)
         .filter(F.col("event_type") == "purchase")
         .select("event_id", "user_id", "value")
     )
@@ -267,7 +267,7 @@ def sink_zorder_write(spark: SparkSession, sf_dir: str) -> DataFrame:
         clustered.write.mode("overwrite").parquet(dest)
     base_hour = ev.agg((F.floor(F.unix_timestamp(F.min("ts"))) / 3600).cast("long")).head()[0]
     box = (
-        spark.read.parquet(dest)
+        read_parquet(spark, dest)
         .filter(
             F.col("user_id").between(2, 7)
             & F.col("hour").between(base_hour + 240, base_hour + 287)
@@ -350,7 +350,7 @@ def sink_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     if not os.path.exists(os.path.join(version_dir(2), "_SUCCESS")):
         base.write.mode("overwrite").parquet(version_dir(0))
-        v0 = spark.read.parquet(version_dir(0))
+        v0 = read_parquet(spark, version_dir(0))
         chg1 = v0.filter(F.col("c_custkey") % 7 == 0).select(
             "c_custkey",
             (F.col("bal_cents") + TT_V1_BUMP_CENTS).alias("bal_cents"),
@@ -358,7 +358,7 @@ def sink_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         merge_upsert(v0, chg1, ["c_custkey"]).write.mode("overwrite").parquet(
             version_dir(1)
         )
-        v1 = spark.read.parquet(version_dir(1))
+        v1 = read_parquet(spark, version_dir(1))
         chg2 = v1.filter(F.col("c_custkey") % 11 == 0).select(
             "c_custkey",
             (F.col("bal_cents") + TT_V2_BUMP_CENTS).alias("bal_cents"),
@@ -367,10 +367,10 @@ def sink_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             version_dir(2)
         )
 
-    as_of_v1 = spark.read.parquet(version_dir(1)).select(
+    as_of_v1 = read_parquet(spark, version_dir(1)).select(
         "c_custkey", F.col("bal_cents").alias("bal_v1_cents")
     )
-    latest = spark.read.parquet(version_dir(2)).select(
+    latest = read_parquet(spark, version_dir(2)).select(
         "c_custkey", F.col("bal_cents").alias("bal_latest_cents")
     )
     return (
@@ -436,17 +436,17 @@ def sink_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not os.path.exists(os.path.join(frag, "_SUCCESS")):
         ev.repartition(COMPACT_FRAG_FILES).write.mode("overwrite").parquet(frag)
     if not os.path.exists(os.path.join(packed, "_SUCCESS")):
-        n = spark.read.parquet(frag).count()
+        n = read_parquet(spark, frag).count()
         n_out = (n + COMPACT_TARGET_ROWS - 1) // COMPACT_TARGET_ROWS
         (
-            spark.read.parquet(frag)
+            read_parquet(spark, frag)
             .repartition(n_out)
             .write.mode("overwrite")
             .parquet(packed)
         )
 
     def _tagged(path: str, stage: int) -> DataFrame:
-        return spark.read.parquet(path).select(
+        return read_parquet(spark, path).select(
             F.col("_metadata.file_path").alias("fp"),
             F.lit(stage).alias("stage"),
             "value",
@@ -546,7 +546,7 @@ def sink_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
         if d.startswith("v") and os.path.exists(os.path.join(root, d, "_SUCCESS"))
     )
 
-    latest = spark.read.parquet(vdir(retained[-1]))
+    latest = read_parquet(spark, vdir(retained[-1]))
     return latest.agg(
         F.lit(len(retained)).cast("long").alias("versions_retained"),
         F.lit(retained[0]).cast("long").alias("oldest_retained_version"),
@@ -763,7 +763,7 @@ def sink_manifest_atomic_swap(spark: SparkSession, sf_dir: str) -> DataFrame:
             [], "c_custkey long, nationkey long, bal_cents long"
         )
     else:
-        snap = spark.read.parquet(*listed)
+        snap = read_parquet(spark, *listed)
     return snap.groupBy("nationkey").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.sum("bal_cents").alias("sum_cents"),

@@ -20,10 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from graph_etl_pipeline_spark.functions.numeric import dec
+from graph_etl_pipeline_spark.io import read_parquet
 from graph_etl_pipeline_spark.sinks.upsert import merge_upsert
-
-# One memo for every file-source schema probe, keyed by the probed path.
-_SCHEMA_MEMO: dict[str, object] = {}
 
 
 def fixture_stream(spark: SparkSession, src: str, files: str | None = None) -> DataFrame:
@@ -31,16 +29,12 @@ def fixture_stream(spark: SparkSession, src: str, files: str | None = None) -> D
     micro-batch in the source's (mtime, path) order; ``files`` narrows
     the directory to the matching file names (the file source needs a
     directory, so a single table file is read out of its data root this
-    way). The required explicit schema is probed from the parquet footer
-    once per path and process: the probe is a driver batch job (listing
-    + footer read), the stream-stream joins build two sources per query,
-    and a staged fixture's schema never changes within a process."""
+    way). The required explicit schema comes from ``io.read_parquet``,
+    which infers it once per listing of the probed files."""
     import os
 
     probe = os.path.join(src, files) if files else src
-    schema = _SCHEMA_MEMO.get(probe)
-    if schema is None:
-        schema = _SCHEMA_MEMO[probe] = spark.read.parquet(probe).schema
+    schema = read_parquet(spark, probe).schema
     reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
     if files:
         reader = reader.option("pathGlobFilter", files)
@@ -209,7 +203,7 @@ def incremental_upsert(
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         prev = max(v for v in _state_versions(target) if v < batch_id)
-        current = spark.read.parquet(os.path.join(target, f"v{prev}"))
+        current = read_parquet(spark, os.path.join(target, f"v{prev}"))
         if prepare is not None:
             batch_df = prepare(batch_df)
         if merge is not None:
@@ -236,7 +230,7 @@ def incremental_upsert(
         .start()
     )
     query.awaitTermination()
-    return spark.read.parquet(os.path.join(target, f"v{_state_versions(target)[-1]}"))
+    return read_parquet(spark, os.path.join(target, f"v{_state_versions(target)[-1]}"))
 
 
 STREAM_SHUFFLE_PARTITIONS = 8

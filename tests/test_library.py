@@ -6,9 +6,11 @@ from __future__ import annotations
 
 import contextlib
 import shutil
+from functools import reduce
 
 import pytest
 from conftest import job_group
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph_etl_pipeline_spark.catalog import clear_all, get_stats, query, register_tables
@@ -291,37 +293,81 @@ def test_graph_reachable_hierarchy(spark):
     assert uids == {"08", "08 01", "08 01 11*", "08 01 12"}
 
 
-def test_traversal_cache_deferred_cleanup_contract(spark):
-    """The deferred traversal-cache contract (graph/model.py, VERDICT r13
-    #6): a traversal retains its persisted frames until the NEXT
-    traversal starts, which keeps the retained-frame slot bounded at one
-    traversal's frames — and a caller that violates the 'consume before
-    the next traversal' convention must still get CORRECT results (the
-    unpersisted frames recompute from lineage), just slower."""
-    from graph_etl_pipeline_spark.graph import model as gmodel
-
+def test_traversals_built_before_consumption_are_independent(spark):
+    """reachable() caches nothing: two traversals built before either is
+    consumed both return their own set, and the session's persistent
+    RDDs are the same before and after."""
     g = _avv_graph(spark)
+
+    def persistent():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before = persistent()
     roots08 = spark.createDataFrame([("08", "08")], "uid string, root string")
     roots09 = spark.createDataFrame([("09", "09")], "uid string, root string")
 
     a = g.reachable(roots08, rel_types=("HAS_PARENT",), direction="in", max_depth=3)
-    frames_a = list(gmodel._RETAINED_TRAVERSAL_FRAMES)
-    # bounded retention: edge frame + at most max_depth frontiers
-    assert 1 <= len(frames_a) <= 4
-    assert all(df.storageLevel.useMemory for df in frames_a)
-
-    # start traversal B WITHOUT consuming A (the contract violation)
     b = g.reachable(roots09, rel_types=("HAS_PARENT",), direction="in", max_depth=3)
-    frames_b = list(gmodel._RETAINED_TRAVERSAL_FRAMES)
-    # the slot holds ONLY B's frames: A's were evicted (unpersist is
-    # async/non-blocking, so the LIST is the contract — its bound is what
-    # keeps a long session's block store from accumulating traversals)
-    assert 1 <= len(frames_b) <= 4
-    assert not set(map(id, frames_a)) & set(map(id, frames_b))
 
-    # late consumption of A recomputes from lineage — correct, not stale
-    assert {r.uid for r in a.collect()} == {"08", "08 01", "08 01 11*", "08 01 12"}
     assert {r.uid for r in b.collect()} == {"09"}
+    assert {r.uid for r in a.collect()} == {"08", "08 01", "08 01 11*", "08 01 12"}
+    assert persistent() == before
+
+
+def _bounded_bfs(edges, roots, depth, direction):
+    """Every (uid, root) within ``depth`` hops of ``root``, roots included."""
+    step = {}
+    for s, d in edges:
+        a, b = (s, d) if direction == "out" else (d, s)
+        step.setdefault(a, set()).add(b)
+    pairs = set()
+    for root in roots:
+        seen, frontier = {root}, {root}
+        for _ in range(depth):
+            frontier = {n for u in frontier for n in step.get(u, ())} - seen
+            seen |= frontier
+        pairs |= {(u, root) for u in seen}
+    return pairs
+
+
+# Toy hostile topologies, one graph: uids are prefixed by topology, so
+# the components are disjoint and a root's BFS stays in its own.
+HOSTILE_EDGES = [
+    *[(f"chain{i}", f"chain{i + 1}") for i in range(6)],
+    *[("star_hub", f"star{i}") for i in range(5)],
+    *[(f"clique{i}", f"clique{j}") for i in range(4) for j in range(4) if i != j],
+    ("cycle_a", "cycle_b"), ("cycle_b", "cycle_c"), ("cycle_c", "cycle_a"),
+]
+
+
+def test_reachable_hostile_topology_sentinel(spark):
+    """Default-tier toy case of the slow hostile-topology sweep: on a
+    chain, a star, a clique and a 3-cycle, reachable() returns exactly a
+    bounded BFS's (uid, root) pairs, once each, at depths 1–3 and in both
+    directions."""
+    uids = sorted({u for e in HOSTILE_EDGES for u in e})
+    g = PropertyGraph(
+        vertices=spark.createDataFrame(
+            [(u, "V", u) for u in uids], "uid string, label string, name string"
+        ),
+        edges=spark.createDataFrame(
+            [(s, d, "E") for s, d in HOSTILE_EDGES],
+            "src_uid string, dst_uid string, rel_type string",
+        ),
+    )
+    roots = spark.createDataFrame([(u, u) for u in uids], "uid string, root string")
+    for direction in ("out", "in"):
+        got = reduce(
+            DataFrame.unionByName,
+            [
+                g.reachable(roots, direction=direction, max_depth=d).withColumn("depth", F.lit(d))
+                for d in (1, 2, 3)
+            ],
+        ).collect()
+        for depth in (1, 2, 3):
+            pairs = [(r.uid, r.root) for r in got if r.depth == depth]
+            assert len(pairs) == len(set(pairs))
+            assert set(pairs) == _bounded_bfs(HOSTILE_EDGES, uids, depth, direction)
 
 
 def test_traversal_shallow_path_job_count_pinned(spark):
