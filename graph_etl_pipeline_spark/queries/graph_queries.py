@@ -3,6 +3,9 @@ exercised through the PropertyGraph vertex/edge DataFrames."""
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -238,6 +241,70 @@ def _widen(df: DataFrame, key: str) -> DataFrame:
     return df.repartition(width, key)
 
 
+def _bfs_forward(bi: DataFrame, sources: DataFrame, hops: int) -> DataFrame:
+    """Bounded multi-source BFS over ``bi(s, t)`` from every ``node`` of
+    ``sources``, as ``settled(src, node, dist, sigma)``: each node within
+    ``hops`` of ``src`` once, at its distance, with ``sigma`` its number
+    of shortest src→node paths (the Brandes forward pass on a composite
+    ``(src, node)`` key). A round expands only the last frontier, sums
+    sigma over in-edges, and anti-joins the settled set, so only the
+    first, shortest discovery keeps a row.
+
+    Intermediate rounds are pinned: the frontier feeds both the next
+    join and the union, and the union feeds the next anti-join. The last
+    round stays lazy; its consumer decides whether to pin it."""
+    settled = sources.select(
+        F.col("node").alias("src"),
+        "node",
+        F.lit(0).cast("long").alias("dist"),
+        F.lit(1).cast("long").alias("sigma"),
+    ).localCheckpoint(eager=True)
+    frontier = settled
+    for rnd in range(1, hops + 1):
+        expanded = (
+            frontier.join(bi, frontier.node == bi.s)
+            .groupBy("src", F.col("t").alias("node"))
+            .agg(F.sum("sigma").alias("sigma"))
+        )
+        frontier = expanded.join(settled, ["src", "node"], "left_anti").select(
+            "src", "node", F.lit(rnd).cast("long").alias("dist"), "sigma"
+        )
+        if rnd < hops:
+            frontier = frontier.localCheckpoint(eager=True)
+            settled = settled.unionByName(frontier).localCheckpoint(eager=True)
+        else:
+            settled = settled.unionByName(frontier)
+    return settled
+
+
+def _fold_hops(
+    bi: DataFrame,
+    state: DataFrame,
+    hops: int,
+    merge: Callable[[DataFrame], DataFrame],
+) -> list[DataFrame]:
+    """The per-node ``state(node, ...)`` after each of ``hops`` hops over
+    ``bi(s, t)``: hop t is ``merge`` of the hop t-1 rows of a node and of
+    its out-neighbours. With an idempotent ``merge`` (bitset OR, register
+    MAX) hop t summarizes the node's t-hop ball. The neighbours' rows are
+    a join of ``bi`` to the state on ``t``, so ``merge`` sees one row per
+    edge and should be map-combinable.
+
+    Every hop but the last is pinned: it is read by the next hop's join
+    and by the caller's per-hop readout. The last stays lazy."""
+    payload = [c for c in state.columns if c != "node"]
+    states = []
+    for hop in range(1, hops + 1):
+        nbrs = bi.join(state.withColumnRenamed("node", "t"), "t").select(
+            F.col("s").alias("node"), *payload
+        )
+        state = merge(nbrs.unionByName(state))
+        if hop < hops:
+            state = state.localCheckpoint(eager=True)
+        states.append(state)
+    return states
+
+
 def _oriented_triangles(edges: DataFrame) -> DataFrame:
     """Every triangle of the undirected edge list ``edges(u, v)`` exactly
     once, as (x, y, z) under the degree-rank orientation — the shared
@@ -334,9 +401,10 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     by |E|. Fixed-point int64 arithmetic (see PAGERANK_UNIT) makes every
     iteration exact — results are hash-identical across engines,
     partitionings, and cluster sizes, which a double-precision PageRank
-    cannot promise. Unbounded-iteration variants would localCheckpoint
-    the rank table each round exactly like connected_components
-    (graph/model.py).""".replace("{it}", str(PAGERANK_ITERS))
+    cannot promise. A fixed iteration count needs no convergence probe,
+    so the iterations are one lazy plan with nothing pinned.""".replace(
+        "{it}", str(PAGERANK_ITERS)
+    )
     cust = table(spark, sf_dir, "customer")
     nat = table(spark, sf_dir, "nation")
     reg = table(spark, sf_dir, "region")
@@ -442,47 +510,22 @@ def interaction_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return materialize(edges, "chain_edges")
 
 
-def bellman_ford(
-    bi: DataFrame, dist: DataFrame, max_rounds: int | None = None
-) -> DataFrame:
-    """Unit-weight Bellman-Ford over a directed edge list ``bi(s, t)``
-    from seed distances ``dist(node, dist)``. Each round relaxes every
-    edge out of the reached set (one |E|-bounded shuffle, PageRank's
-    profile) and folds candidates with one min-aggregation.
-
-    ``max_rounds=None`` runs to the FIXPOINT (VERDICT r5 #5): the loop
-    exits when a round changes no distance — at most graph-diameter
-    rounds, each strictly growing/improving the reached set, so
-    termination is structural, not budgeted (unlike star contraction,
-    whose round budget raises when it runs out). An integer
-    bound reproduces the fixed-round contract the unrolled-CTE oracle
-    checks.
-
-    Only the fixpoint mode checkpoints each round: its ``isEmpty`` probe
-    runs a job per round, and without the checkpoint round N would
-    re-execute rounds 1..N-1. The bounded mode stays one lazy plan, in
-    which shuffle-stage reuse already dedups the linear dist lineage."""
-    rounds = 0
-    while max_rounds is None or rounds < max_rounds:
+def bellman_ford(bi: DataFrame, dist: DataFrame, rounds: int) -> DataFrame:
+    """``rounds`` unit-weight Bellman-Ford relaxations over a directed edge
+    list ``bi(s, t)`` from seed distances ``dist(node, dist)``. Each round
+    relaxes every edge out of the reached set (one |E|-bounded shuffle,
+    PageRank's profile) and folds candidates with one min-aggregation.
+    The rounds are one lazy plan, in which shuffle-stage reuse already
+    dedups the linear dist lineage."""
+    for _ in range(rounds):
         relaxed = dist.join(bi, dist.node == bi.s).select(
             F.col("t").alias("node"), (F.col("dist") + 1).alias("dist")
         )
-        nxt = (
+        dist = (
             dist.unionByName(relaxed)
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
         )
-        if max_rounds is None:
-            nxt = nxt.localCheckpoint(eager=True)
-            improved = (
-                nxt.join(
-                    dist.withColumnRenamed("dist", "prev"), "node", "left"
-                ).filter(F.col("prev").isNull() | (F.col("dist") < F.col("prev")))
-            )
-            if improved.isEmpty():
-                return dist
-        dist = nxt
-        rounds += 1
     return dist
 
 
@@ -538,22 +581,18 @@ def graph_sssp_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-round cost is one |E|-bounded shuffle, exactly PageRank's
     profile. Distances are exact int64 hops; nodes farther than {k}
     hops (or disconnected) are absent, matching the oracle's unrolled
-    fixed point. The FIXPOINT variant is the same ``bellman_ford`` with
-    ``max_rounds=None`` — convergence early-exit, exercised in
-    tests/test_library.py on a chain longer than the bound.""".replace(
-        "{k}", str(SSSP_ROUNDS)
-    )
+    fixed point.""".replace("{k}", str(SSSP_ROUNDS))
     edges = interaction_edges(spark, sf_dir)
-    # Pin the derived edge list once: every relaxation round joins it, and
-    # without this the window+distinct chain derivation re-executes per
-    # round (measured 3.4 s → 2.0 s at sf0.1). The bounded rounds
-    # themselves stay one lazy plan (see bellman_ford).
+    # Pin the both-ways edge list once: the seed and every relaxation
+    # round read it, and unpinned the plan scans the chain_edges parquet
+    # twice per read (14 scans). At sf0.1 both forms take ~2.0 s, so the
+    # pin saves scans, not time. The rounds stay one lazy plan.
     bi = _both_ways(edges).localCheckpoint(eager=True)
     dist = (
         bi.agg(F.min("s").alias("node"))
         .select("node", F.lit(0).cast("long").alias("dist"))
     )
-    return bellman_ford(bi, dist, max_rounds=SSSP_ROUNDS)
+    return bellman_ford(bi, dist, SSSP_ROUNDS)
 
 
 COPURCHASE_MIN_SUPPORT = 2
@@ -594,10 +633,9 @@ def graph_copurchase_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     not line items), materialized once so the size probe and both join
     sides scan instead of re-running the distinct. The quadratic term is
     per-basket: an order of k parts emits k(k-1)/2 pairs, so the basket
-    histogram decides the plan ADAPTIVELY (VERDICT r5 "what's wrong" #1
-    — this guard used to be prose, now it is code): a map-combined
-    per-order count probes for baskets over COPURCHASE_BASKET_CAP. None
-    (TPC-H: k ≤ 7, and any sanely bucketed corpus) ⇒ the plain a<b
+    histogram decides the plan ADAPTIVELY: a map-combined per-order
+    count probes for baskets over COPURCHASE_BASKET_CAP. None (TPC-H:
+    k ≤ 7, and any sanely bucketed corpus) ⇒ the plain a<b
     self-join, zero extra work. Hot baskets present (power-law corpora —
     exactly the shape a co-occurrence projection gets pointed at) ⇒
     baskets split cold/hot via a broadcast anti/semi join; cold keep the
@@ -607,7 +645,7 @@ def graph_copurchase_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final exchange. Guard engagement is asserted by
     tests/test_adversarial_topology.py's skewed-basket fixture. The
     cap/probe/tile mechanics live in the ONE shared helper,
-    operators/pairs.py:bounded_self_pairs (VERDICT r6 #4 extraction)."""
+    operators/pairs.py:bounded_self_pairs."""
     from graph_etl_pipeline_spark.io import materialize
     from graph_etl_pipeline_spark.operators.pairs import bounded_self_pairs
 
@@ -631,16 +669,15 @@ def graph_copurchase_project(spark: SparkSession, sf_dir: str) -> DataFrame:
 KCORE_K = 2
 KCORE_ROUNDS = 3
 
-# Max users one chain-window task may sort (VERDICT r6 #7 / r7 #8: the
-# per-hour window used to be unbounded — a hot hour with 10M actives was
-# one 10M-row sort task). The bucket count is derived IN-QUERY from the
-# observed per-hour max (B = ceil(max_n / cap), the pairs.py adaptive
-# probe applied to a window key), so at every test SF B = 1 and the graph
-# is bit-identical to the unbucketed chain, while a hot hour splits into
-# B hash buckets of ~cap users chained independently (abs(user_id) % B is
-# engine-identical; user_id is non-negative in the events domain). The
-# closed-form oracle implements the SAME rule, so parity holds on any
-# density.
+# Max users one chain-window task may sort, so a hot hour with 10M
+# actives is never one 10M-row sort task. The bucket count is derived
+# IN-QUERY from the observed per-hour max (B = ceil(max_n / cap), the
+# pairs.py adaptive probe applied to a window key), so at every test SF
+# B = 1 and the graph is bit-identical to the unbucketed chain, while a
+# hot hour splits into B hash buckets of ~cap users chained independently
+# (abs(user_id) % B is engine-identical; user_id is non-negative in the
+# events domain). The closed-form oracle implements the SAME rule, so
+# parity holds on any density.
 CHAIN_HOUR_CAP = 256
 
 _SQL_CHAIN_EDGES = f"""
@@ -699,18 +736,15 @@ def graph_kcore_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     < K, then drop its edges" — the community-density primitive under
     spam-ring pruning and graph sparsification. Fixed rounds (the
     pagerank/SSSP convention) keep the oracle a closed-form unrolled CTE
-    chain; full decomposition iterates the same round to a fixpoint.
+    chain.
 
     Scale shape per round: one degree aggregation (map-combined — the
     node table is tiny next to edges) and one broadcast anti-join
     pushing the (small) dropped-node set onto the edge list; edges
     shrink monotonically, so every round costs at most |E| and the
     {KCORE_ROUNDS}-round total is bounded by {KCORE_ROUNDS}·|E| — never
-    a pairwise blowup. Rounds past convergence are no-ops, so the
-    early-exit inside kcore_peel cannot change the bounded result."""
-    edges = kcore_peel(
-        interaction_edges(spark, sf_dir), KCORE_K, max_rounds=KCORE_ROUNDS
-    )
+    a pairwise blowup."""
+    edges = kcore_peel(interaction_edges(spark, sf_dir), KCORE_K, KCORE_ROUNDS)
     return (
         edges.select(F.explode(F.array("u", "v")).alias("node"))
         .groupBy("node")
@@ -718,27 +752,21 @@ def graph_kcore_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def kcore_peel(edges: DataFrame, k: int, max_rounds: int | None = None) -> DataFrame:
-    """Iterative k-core peel over an undirected edge list ``edges(u, v)``:
-    each round drops every node whose surviving degree is < k, plus its
-    edges. Returns the surviving edge list.
-
-    ``max_rounds=None`` peels to the FIXPOINT — the true k-core
-    decomposition (VERDICT r5 #5). Termination is structural: every
-    non-converged round strictly shrinks the node set, so the loop runs
-    at most |V| rounds and exits the moment a round drops nothing (one
-    cheap isEmpty probe on the dropped-node table). An integer bound
-    reproduces the fixed-round contract of the unrolled-CTE oracle; the
-    early-exit is safe there too because a converged round is a no-op.
+def kcore_peel(edges: DataFrame, k: int, rounds: int) -> DataFrame:
+    """At most ``rounds`` k-core peel rounds over an undirected edge list
+    ``edges(u, v)``: each round drops every node whose surviving degree
+    is < k, plus its edges. Returns the surviving edge list. A round that
+    drops nothing is a fixed point, so the loop stops there (one cheap
+    isEmpty probe on the dropped-node table) with the same result the
+    remaining rounds would give.
 
     Per-round cost: one map-combined degree aggregation + one BROADCAST
     anti-join of the dropped-node set (typically far smaller than the
     survivor set — broadcasting the small side matters at 100 TB).
     localCheckpoint truncates lineage each round; without it round N
     re-executes rounds 1..N-1 to build its broadcast AND again for its
-    join — the O(rounds²) recompute behind the r5 bench's 3.29 s entry."""
-    rounds = 0
-    while max_rounds is None or rounds < max_rounds:
+    join, an O(rounds²) recompute."""
+    for _ in range(rounds):
         deg = (
             edges.select(F.explode(F.array("u", "v")).alias("node"))
             .groupBy("node")
@@ -752,7 +780,6 @@ def kcore_peel(edges: DataFrame, k: int, max_rounds: int | None = None) -> DataF
             dropped.withColumnRenamed("node", "u"), "u", "left_anti"
         ).join(dropped.withColumnRenamed("node", "v"), "v", "left_anti")
         edges = edges.localCheckpoint(eager=True)
-        rounds += 1
     return edges
 
 
@@ -807,8 +834,8 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     table, which is node-bounded. The label table rides broadcast-sized
     per community only in the pick join; nothing is pairwise. Fixed
     rounds unroll into the closed-form oracle (the pagerank/SSSP
-    convention); convergence looping would reuse bellman_ford's
-    early-exit pattern.""".replace("{LPA_ROUNDS}", str(LPA_ROUNDS))
+    convention) and need no convergence probe, so the rounds are one lazy
+    plan over the pinned edge list.""".replace("{LPA_ROUNDS}", str(LPA_ROUNDS))
     edges = interaction_edges(spark, sf_dir)
     bi = _both_ways(edges).localCheckpoint(eager=True)
     labels = bi.select(F.col("s").alias("node")).distinct().select(
@@ -1389,64 +1416,39 @@ def graph_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     edges = interaction_edges(spark, sf_dir)
-    # each hop joins bi against the broadcast bitsets: |E|·chunks rows
+    # each hop joins bi to the bitsets on t: |E|·chunks rows
     bi = _widen(_both_ways(edges), "t").localCheckpoint(eager=True)
     # Dense vertex index 0..|V|-1 (deterministic: ordered by node id).
-    # |V| rows through one window — a dimension build, broadcast below;
-    # at larger |V| the index comes from the two-level prefix machinery
-    # (operators/prefix.py) instead of one global window.
+    # |V| rows through one window — a dimension build; at larger |V| the
+    # index comes from the two-level prefix machinery (operators/prefix.py)
+    # instead of one global window.
     idx = bi.select(F.col("s").alias("node")).distinct().select(
         "node",
         (F.row_number().over(Window.orderBy("node")) - 1).alias("i"),
     ).localCheckpoint(eager=True)
-    chunk = lambda i: F.expr(f"{i} div 64")  # noqa: E731
-    bit = lambda i: F.expr(  # noqa: E731
-        f"shiftleft(CAST(1 AS BIGINT), CAST({i} % 64 AS INT))"
-    )
-    # Neighbor bitsets: edge (s, t) contributes t's bit to s's set.
-    ei = bi.join(
-        F.broadcast(idx.select(F.col("node").alias("t"), F.col("i").alias("ti"))),
-        "t",
-    ).select("s", chunk("ti").alias("c"), bit("ti").alias("w"))
+    # b0 = {self}; hop t ORs the neighbours' hop t-1 bitsets into one's
+    # own, so b_t is the t-hop ball.
     selfb = idx.select(
-        F.col("node").alias("s"), chunk("i").alias("c"), bit("i").alias("w")
+        "node",
+        F.expr("i div 64").alias("c"),
+        F.expr("shiftleft(CAST(1 AS BIGINT), CAST(i % 64 AS INT))").alias("w"),
     )
-    # b1 = {self} ∪ N(s); each further hop ORs the neighbors' previous
-    # bitsets (plus one's own, so the ball only grows).
-    b = (
-        ei.unionByName(selfb)
-        .groupBy("s", "c")
-        .agg(F.bit_or("w").alias("w"))
-        .localCheckpoint(eager=True)
+    balls = _fold_hops(
+        bi,
+        selfb,
+        HARMONIC_HOPS,
+        lambda df: df.groupBy("node", "c").agg(F.bit_or("w").alias("w")),
     )
     pops = [
-        b.groupBy("s").agg(F.sum(F.bit_count("w")).alias("p1"))
+        b.groupBy("node").agg(F.sum(F.bit_count("w")).alias(f"p{hop}"))
+        for hop, b in enumerate(balls, 1)
     ]
-    for hop in (2, 3):
-        nbr = bi.join(
-            b.select(F.col("s").alias("t"), "c", "w"), "t"
-        ).select("s", "c", "w")
-        b = (
-            nbr.unionByName(b)
-            .groupBy("s", "c")
-            .agg(F.bit_or("w").alias("w"))
-        )
-        if hop < 3:
-            # Final-hop bitsets have exactly ONE consumer (the p3
-            # popcount below), so the eager checkpoint there bought
-            # nothing but a block-write job (r17, the reachable
-            # final-level rule); intermediate hops stay checkpointed —
-            # each is read twice (next hop's join + its own popcount).
-            b = b.localCheckpoint(eager=True)
-        pops.append(
-            b.groupBy("s").agg(F.sum(F.bit_count("w")).alias(f"p{hop}"))
-        )
-    counts = pops[0].join(pops[1], "s").join(pops[2], "s")
+    counts = pops[0].join(pops[1], "node").join(pops[2], "node")
     n1 = F.col("p1") - 1  # drop the self bit
     n2 = F.col("p2") - F.col("p1")
     n3 = F.col("p3") - F.col("p2")
     return counts.select(
-        F.col("s").alias("node"),
+        "node",
         n1.cast("long").alias("n_d1"),
         n2.cast("long").alias("n_d2"),
         n3.cast("long").alias("n_d3"),
@@ -1484,7 +1486,7 @@ CLOSENESS_K = 16  # sampled BFS sources (Eppstein-Wang style pivot count)
 )
 def graph_closeness_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SAMPLED-PIVOT CLOSENESS CENTRALITY — the companion estimator to
-    graph_harmonic_centrality's exact all-sources form (VERDICT r9 #7):
+    graph_harmonic_centrality's exact all-sources form:
     run bounded BFS from only K={CLOSENESS_K} deterministically sampled
     pivot vertices (the Eppstein–Wang trick) and score every vertex by
     its distances TO the pivots. On the undirected interaction graph
@@ -1502,8 +1504,9 @@ def graph_closeness_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     inverse-mean-distance core of closeness as an EXACT int64 ratio
     (the caller applies the (n−1)/(K·n) population scaling in floats if
     it wants the textbook estimator; the stored stat stays
-    hash-identical). BFS rounds are the same composite-key min-fold as
-    the harmonic operator; each round shuffles only the live frontier."""
+    hash-identical). The BFS is _bfs_forward, the stress operator's
+    forward pass with its path counts dropped; each round shuffles only
+    the live frontier."""
     edges = interaction_edges(spark, sf_dir)
     # each round's frontier join explodes frontier rows by node degree
     bi = _widen(_both_ways(edges), "s").localCheckpoint(eager=True)
@@ -1514,35 +1517,7 @@ def graph_closeness_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .limit(CLOSENESS_K)
     )
-    pairs = srcs.select(
-        F.col("node").alias("src"),
-        "node",
-        F.lit(0).cast("long").alias("dist"),
-    ).localCheckpoint(eager=True)
-    # Frontier-only expansion (see graph_harmonic_centrality): each round
-    # joins just the previous round's NEW rows against the edge list.
-    frontier = pairs
-    for rnd in range(1, CLOSENESS_HOPS + 1):
-        relaxed = (
-            frontier.join(bi, frontier.node == bi.s)
-            .select("src", F.col("t").alias("node"))
-            .distinct()
-        )
-        frontier = relaxed.join(pairs, ["src", "node"], "left_anti").select(
-            "src", "node", F.lit(rnd).cast("long").alias("dist")
-        )
-        if rnd < CLOSENESS_HOPS:
-            # Intermediate rounds: the frontier feeds BOTH the next
-            # round's join and the pairs union, and pairs feeds the next
-            # anti-join — checkpoint each once. FINAL round (r17, the
-            # reachable final-level rule): frontier has one consumer
-            # (the closing union) and pairs one (the closing aggregate),
-            # so both eager checkpoints were pure block-write jobs; the
-            # last hop folds into the consumption job instead.
-            frontier = frontier.localCheckpoint(eager=True)
-            pairs = pairs.unionByName(frontier).localCheckpoint(eager=True)
-        else:
-            pairs = pairs.unionByName(frontier)
+    pairs = _bfs_forward(bi, srcs, CLOSENESS_HOPS)
     return (
         pairs.filter(F.col("dist") > 0)
         .groupBy("node")
@@ -1632,8 +1607,8 @@ def graph_betweenness_stress_sampled(spark: SparkSession, sf_dir: str) -> DataFr
     int64, and a caller can normalize the output per pair (σ_st ships
     alongside via the through-endpoint rows).
 
-    Algorithm: one multi-source Brandes FORWARD pass from all
-    2·{STRESS_PAIRS} pivots at once — per round, candidate σ(v) = Σ of
+    Algorithm: one multi-source Brandes FORWARD pass (_bfs_forward) from
+    all 2·{STRESS_PAIRS} pivots at once — per round, candidate σ(v) = Σ of
     the previous frontier's σ over in-edges (a groupBy-sum), anti-joined
     against settled state so only first (= shortest-distance) discovery
     survives; the classic path-count DP lifted to a composite (src,
@@ -1655,22 +1630,12 @@ def graph_betweenness_stress_sampled(spark: SparkSession, sf_dir: str) -> DataFr
     edges = interaction_edges(spark, sf_dir)
     bi = _widen(_both_ways(edges), "s").localCheckpoint(eager=True)
     verts = bi.select(F.col("s").alias("node")).distinct()
+    draw = F.md5(F.concat(F.lit("btw:"), F.col("node").cast("string")))
     pv = (
-        verts.orderBy(
-            F.md5(F.concat(F.lit("btw:"), F.col("node").cast("string"))), "node"
-        )
+        verts.orderBy(draw, "node")
         .limit(2 * STRESS_PAIRS)
         .select(
-            "node",
-            (
-                F.row_number().over(
-                    Window.orderBy(
-                        F.md5(F.concat(F.lit("btw:"), F.col("node").cast("string"))),
-                        "node",
-                    )
-                )
-                - 1
-            ).alias("i"),
+            "node", (F.row_number().over(Window.orderBy(draw, "node")) - 1).alias("i")
         )
         .localCheckpoint(eager=True)
     )
@@ -1683,31 +1648,8 @@ def graph_betweenness_stress_sampled(spark: SparkSession, sf_dir: str) -> DataFr
             F.col("b.node").alias("pt"),
         )
     )
-    settled = pv.select(
-        F.col("node").alias("src"),
-        "node",
-        F.lit(0).cast("long").alias("dist"),
-        F.lit(1).cast("long").alias("sigma"),
-    ).localCheckpoint(eager=True)
-    frontier = settled
-    for rnd in range(1, STRESS_HOPS + 1):
-        expanded = (
-            frontier.join(bi, frontier.node == bi.s)
-            .groupBy("src", F.col("t").alias("node"))
-            .agg(F.sum("sigma").alias("sigma"))
-        )
-        frontier = expanded.join(settled, ["src", "node"], "left_anti").select(
-            "src", "node", F.lit(rnd).cast("long").alias("dist"), "sigma"
-        )
-        if rnd < STRESS_HOPS:
-            # final-round frontier has one consumer (the closing union)
-            # — its eager checkpoint was a pure block-write job (r17);
-            # the union itself STAYS checkpointed every round: the
-            # settled table is read four times downstream (pdist, both
-            # path legs, and the next round when there is one).
-            frontier = frontier.localCheckpoint(eager=True)
-        settled = settled.unionByName(frontier).localCheckpoint(eager=True)
-    dst = settled
+    # read three times below: the pair distances and both path legs
+    dst = _bfs_forward(bi, pv, STRESS_HOPS).localCheckpoint(eager=True)
     pdist = pairs.join(
         dst.select(
             F.col("src").alias("ps"),
@@ -1767,18 +1709,6 @@ def _sql_anf_denoms() -> str:
 
 
 _ANF_EST_NUM = f"(CAST(0.673 AS DOUBLE) * 256 * {hll.SCALE})"
-
-
-def anf_hop(bi: DataFrame, state: DataFrame) -> DataFrame:
-    """ONE HyperANF hop: every vertex register-wise MAXes its own packed
-    HLL words with its neighbors' — B_t(v) = B_{t-1}(v) ∪ ⋃_{u∈N(v)}
-    B_{t-1}(u) under register MAX, as one map-combinable aggregation
-    (hll.register_max; its partial HashAggregate is pinned in
-    tests/test_plans.py)."""
-    contrib = bi.join(
-        state.select(F.col("node").alias("t"), "r0", "r1"), "t"
-    ).select(F.col("s").alias("node"), "r0", "r1")
-    return hll.register_max(contrib.unionByName(state), "node")
 
 
 @register(
@@ -1878,18 +1808,22 @@ def _anf_denominators(
 
 
 def _anf_state(edges: DataFrame) -> DataFrame:
+    """One HyperANF hop is every vertex register-wise MAXing its packed
+    HLL words with its neighbours' (B_t(v) = B_{t-1}(v) ∪ ⋃_{u∈N(v)}
+    B_{t-1}(u)), a _fold_hops step with hll.register_max as the merge;
+    its partial HashAggregate is pinned in tests/test_plans.py. The last
+    hop is pinned here too: the memo serves this state to later callers,
+    and it must not hold an unmaterialized plan."""
     bi = _both_ways(edges).localCheckpoint(eager=True)
     verts = bi.select(F.col("s").alias("node")).distinct()
     state = hll.words(verts, "node", "node", "anf:").localCheckpoint(eager=True)
-    denoms = []
-    for hop in range(1, ANF_HOPS + 1):
-        state = anf_hop(bi, state).localCheckpoint(eager=True)
-        denoms.append(state.select("node", hll.denominator().alias(f"d{hop}")))
-
-    out = denoms[0]
-    for dn in denoms[1:]:
-        out = out.join(dn, "node")
-    return out
+    states = _fold_hops(bi, state, ANF_HOPS, lambda df: hll.register_max(df, "node"))
+    states[-1] = states[-1].localCheckpoint(eager=True)
+    denoms = [
+        st.select("node", hll.denominator().alias(f"d{hop}"))
+        for hop, st in enumerate(states, 1)
+    ]
+    return reduce(lambda a, b: a.join(b, "node"), denoms)
 
 
 # alpha_16 · m² · 2^33 in EXACT milli-units: 0.673 = 673/1000, so
@@ -1971,10 +1905,7 @@ def graph_neighborhood_function(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for t in (1, 2, 3)
     ]
-    out = hops[0]
-    for h in hops[1:]:
-        out = out.unionByName(h)
-    return out
+    return reduce(DataFrame.unionByName, hops)
 
 
 # 90%-effective-diameter threshold in exact ppm (the conventional cut in

@@ -822,7 +822,7 @@ def stream_sketch_register_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout (two BIGINT words of 16 × 6-bit registers per key).
 
     Each micro-batch reduces to per-user register MAXes (map-combinable
-    slice-max aggregation, the anf_hop plan); the cross-batch merge is an
+    slice-max aggregation, the HyperANF hop's plan); the cross-batch merge is an
     expression-level register-wise MAX against the held state. Because
     register MAX is associative, commutative, and IDEMPOTENT, the final
     state is invariant to micro-batch boundaries, arrival order, and

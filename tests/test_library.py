@@ -789,36 +789,29 @@ def test_pagerank_fixed_point_semantics(spark, sf_dir):
     assert min_region > max_other
 
 
-def test_kcore_fixpoint_vs_bounded(spark):
-    """VERDICT r5 #5: kcore_peel(max_rounds=None) must run to the true
-    fixpoint. On a 12-node path, the 2-core is EMPTY but each peel round
-    only removes the two current endpoints — 3 bounded rounds leave 5
-    edges, the fixpoint leaves none. Also pins the bounded early-exit
-    no-op property on a graph that converges before the bound."""
+def test_kcore_peel_bounded_rounds(spark):
+    """kcore_peel stops at its round budget, or earlier at the first round
+    that drops nothing. On a 12-node path each round removes only the two
+    current endpoints, so 3 rounds leave 5 edges. A triangle with a
+    pendant converges in 1 round, so a 5-round budget returns the
+    triangle."""
     from graph_etl_pipeline_spark.queries.graph_queries import kcore_peel
 
     path = spark.createDataFrame(
         [(i, i + 1) for i in range(11)], "u long, v long"
     )
-    assert kcore_peel(path, 2, max_rounds=3).count() == 11 - 2 * 3
-    assert kcore_peel(path, 2, max_rounds=None).count() == 0
+    assert kcore_peel(path, 2, 3).count() == 11 - 2 * 3
 
-    # triangle + pendant: converges in 1 round; a 5-round budget must
-    # early-exit to the same answer (rounds past convergence are no-ops)
     tri = spark.createDataFrame(
         [(1, 2), (2, 3), (1, 3), (3, 4)], "u long, v long"
     )
-    fixed = {(r.u, r.v) for r in kcore_peel(tri, 2, max_rounds=None).collect()}
-    bounded = {(r.u, r.v) for r in kcore_peel(tri, 2, max_rounds=5).collect()}
-    assert fixed == bounded == {(1, 2), (2, 3), (1, 3)}
+    bounded = {(r.u, r.v) for r in kcore_peel(tri, 2, 5).collect()}
+    assert bounded == {(1, 2), (2, 3), (1, 3)}
 
 
-def test_bellman_ford_fixpoint_vs_bounded(spark):
-    """bellman_ford(max_rounds=None) must reach every connected node on a
-    chain longer than the bounded round budget; the bounded run must stop
+def test_bellman_ford_bounded_rounds(spark):
+    """On a chain longer than the round budget, bellman_ford stops
     exactly at its hop horizon."""
-    from pyspark.sql import functions as F
-
     from graph_etl_pipeline_spark.queries.graph_queries import bellman_ford
 
     chain = spark.createDataFrame(
@@ -827,8 +820,93 @@ def test_bellman_ford_fixpoint_vs_bounded(spark):
     bi = chain.unionAll(chain.select(F.col("t").alias("s"), F.col("s").alias("t")))
     seed = spark.createDataFrame([(0, 0)], "node long, dist long")
 
-    bounded = {r.node: r.dist for r in bellman_ford(bi, seed, max_rounds=4).collect()}
+    bounded = {r.node: r.dist for r in bellman_ford(bi, seed, 4).collect()}
     assert bounded == {i: i for i in range(5)}, bounded
 
-    full = {r.node: r.dist for r in bellman_ford(bi, seed, max_rounds=None).collect()}
-    assert full == {i: i for i in range(11)}, full
+
+# Undirected toy topologies as one disjoint graph: a chain longer than 3
+# hops, a star, a 4-clique, a 3-cycle and a diamond (two shortest paths
+# between its far corners).
+KERNEL_EDGES = [
+    *[(i, i + 1) for i in range(7)],
+    *[(10, 11 + i) for i in range(5)],
+    *[(20 + i, 20 + j) for i in range(4) for j in range(i + 1, 4)],
+    (30, 31), (31, 32), (32, 30),
+    (40, 41), (40, 42), (41, 43), (42, 43),
+]
+
+
+def _kernel_graph(spark):
+    """The both-ways edge frame of KERNEL_EDGES and its adjacency dict."""
+    from graph_etl_pipeline_spark.queries.graph_queries import _both_ways
+
+    adj = {}
+    for u, v in KERNEL_EDGES:
+        adj.setdefault(u, set()).add(v)
+        adj.setdefault(v, set()).add(u)
+    return _both_ways(spark.createDataFrame(KERNEL_EDGES, "u long, v long")), adj
+
+
+def _bfs_paths(adj, src, hops):
+    """``{node: (dist, sigma)}`` for every node within ``hops`` of ``src``:
+    a BFS that counts shortest paths."""
+    out, frontier = {src: (0, 1)}, {src: 1}
+    for dist in range(1, hops + 1):
+        nxt = {}
+        for u, sigma in frontier.items():
+            for v in adj[u] - out.keys():
+                nxt[v] = nxt.get(v, 0) + sigma
+        out.update({v: (dist, sigma) for v, sigma in nxt.items()})
+        frontier = nxt
+    return out
+
+
+def test_bfs_forward_hostile_topology_sentinel(spark):
+    """_bfs_forward from every node returns exactly a Python BFS's
+    (src, node, dist, sigma) rows, once each, at 1–3 hops."""
+    from graph_etl_pipeline_spark.queries.graph_queries import _bfs_forward
+
+    bi, adj = _kernel_graph(spark)
+    sources = spark.createDataFrame([(n,) for n in sorted(adj)], "node long")
+    for hops in (1, 2, 3):
+        got = [
+            tuple(r)
+            for r in _bfs_forward(bi, sources, hops)
+            .select("src", "node", "dist", "sigma")
+            .collect()
+        ]
+        want = {
+            (src, node, dist, sigma)
+            for src in adj
+            for node, (dist, sigma) in _bfs_paths(adj, src, hops).items()
+        }
+        assert len(got) == len(set(got))
+        assert set(got) == want
+
+
+def test_fold_hops_hostile_topology_sentinel(spark):
+    """_fold_hops with a bit_or merge turns one-bit self sets into t-hop
+    balls: after each hop 1..hops, for hops 1–3, every node's bitset
+    (two 64-bit chunks) decodes to a Python BFS's ball."""
+    from graph_etl_pipeline_spark.queries.graph_queries import _fold_hops
+
+    bi, adj = _kernel_graph(spark)
+    # bit 2·node, so the balls span two chunks
+    selfb = spark.createDataFrame([(n,) for n in sorted(adj)], "node long").select(
+        "node",
+        F.expr("(2 * node) div 64").alias("c"),
+        F.expr("shiftleft(CAST(1 AS BIGINT), CAST((2 * node) % 64 AS INT))").alias("w"),
+    )
+
+    def merge(df):
+        return df.groupBy("node", "c").agg(F.bit_or("w").alias("w"))
+
+    for hops in (1, 2, 3):
+        states = _fold_hops(bi, selfb, hops, merge)
+        assert len(states) == hops
+        for hop, state in enumerate(states, 1):
+            balls = {}
+            for r in state.collect():
+                bits = balls.setdefault(r.node, set())
+                bits |= {(64 * r.c + b) // 2 for b in range(64) if r.w >> b & 1}
+            assert balls == {n: set(_bfs_paths(adj, n, hop)) for n in adj}

@@ -380,14 +380,16 @@ def test_hyperanf_fixed_width_state_no_explode(spark, sf_dir):
     packed bigint words per vertex — the hop plan must contain NO Expand/
     Explode (a per-register row blowup would shuffle 16x the rows) and
     the register-max aggregation must be a partial (map-combinable)
-    HashAggregate pair, never sort-based. The hop step is inspected
-    directly (anf_hop) because the full query localCheckpoints each hop,
-    hiding the aggregation behind a Scan ExistingRDD in the final plan;
-    the end-to-end plan is still checked for cross products."""
+    HashAggregate pair, never sort-based. A one-hop _fold_hops plan with
+    the query's register-max merge is inspected directly, because the
+    full query localCheckpoints each hop, hiding the aggregation behind a
+    Scan ExistingRDD in the final plan; the end-to-end plan is still
+    checked for cross products."""
     from pyspark.sql import functions as F
 
+    from graph_etl_pipeline_spark.functions import hll
     from graph_etl_pipeline_spark.queries.graph_queries import (
-        anf_hop, interaction_edges,
+        _fold_hops, interaction_edges,
     )
 
     edges = interaction_edges(spark, sf_dir)
@@ -397,7 +399,8 @@ def test_hyperanf_fixed_width_state_no_explode(spark, sf_dir):
     state = bi.select(F.col("s").alias("node")).distinct().select(
         "node", F.lit(1).cast("long").alias("r0"), F.lit(2).cast("long").alias("r1")
     )
-    hop = anf_hop(bi, state)._jdf.queryExecution().executedPlan().toString()
+    (hop,) = _fold_hops(bi, state, 1, lambda df: hll.register_max(df, "node"))
+    hop = hop._jdf.queryExecution().executedPlan().toString()
     assert "Generate explode" not in hop and "Expand" not in hop
     # the register max must have a MAP-SIDE partial (combine before the
     # node exchange); the distinct() in this fixture contributes the
@@ -602,7 +605,7 @@ GRAPH_PINS = {
     "random_walks": (1, 5, 3, 15),
     "assortativity": (0, 3, 6, 1),
     "modularity": (2, 7, 8, 1),
-    "harmonic_centrality": (6, 8, 5, 15),
+    "harmonic_centrality": (6, 8, 4, 15),
     "closeness_sampled": (10, 12, 4, 15),
     "betweenness_stress_sampled": (13, 16, 8, 0),
     "hyperanf_sketch": (8, 9, 0, 15),
